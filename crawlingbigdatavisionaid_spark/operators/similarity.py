@@ -29,6 +29,13 @@ higher-order lambdas here: a 64-dim dot costs ~5 µs interpreted vs ~6 ns
 in BLAS, so every bulk path crosses to Python ONCE per Arrow batch and
 does matrix math there — the "UDFs are the slow path, except Arrow-
 batched numpy for dense math" rule.
+
+Every kernel crosses that boundary the same way, as Arrow: per-batch
+kernels are ``mapInArrow``, per-group kernels ``applyInArrow`` and
+per-column kernels ``arrow_udf``. A vector or code column reaches numpy
+only through :func:`_arrow_mat` (a reshape of the list column's values
+buffer, which rejects null and ragged rows), and results go back as
+Arrow tables built straight from the numpy arrays.
 """
 
 from __future__ import annotations
@@ -36,61 +43,51 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.window import Window
 
 from ..functions import vectors as V
 
 
-def _stack(series: "pd.Series") -> np.ndarray:
-    """Column of array<float> -> (B, d) float64 matrix."""
-    return np.stack(series.to_numpy()).astype(np.float64, copy=False)
+def _arrow_mat(a: "pa.Array | pa.ChunkedArray", dtype=np.float64) -> np.ndarray:
+    """Arrow list column -> (n, d) matrix of ``dtype`` (float64 for
+    vectors, int64 for PQ codes). For a list<double> column this is a
+    ZERO-COPY reshape of the one contiguous values buffer (guide §4.2),
+    not n per-row array allocations.
 
-
-def _arrow_mat(tbl: "pa.Table", col: str) -> np.ndarray:
-    """Arrow list<double> column -> (n, d) float64 matrix, ZERO-COPY
-    (guide §4.2: a list column in a record batch is one contiguous
-    values buffer plus offsets, so the matrix is a reshape of that
-    buffer, not n per-row array allocations). Bit-identical to
-    ``_stack`` over the pandas form of the same column — both yield
-    the same float64 values in the same row order; only the copying
-    disappears. Requires equal-length non-null rows (every embedding
-    column here is a fixed-dim vector); a ragged column makes the
-    reshape raise rather than silently mis-slice."""
-    a = tbl.column(col).combine_chunks()
-    flat = np.asarray(a.flatten(), dtype=np.float64)
-    return flat.reshape(len(a), -1)
-
-
-def _arrow_ids(tbl: "pa.Table", col: str) -> np.ndarray:
-    return np.asarray(tbl.column(col).combine_chunks(), dtype=np.int64)
-
-
-def _pairs_table(pdf: "pd.DataFrame") -> "pa.Table":
-    """(u, v) pandas pairs (the `_tile_pairs` output) -> Arrow table."""
-    return pa.table(
-        {
-            "u": pa.array(pdf["u"].to_numpy(), type=pa.int64()),
-            "v": pa.array(pdf["v"].to_numpy(), type=pa.int64()),
-        }
-    )
-
-
-_EMPTY_PAIRS = None
-
-
-def _empty_pairs_table() -> "pa.Table":
-    global _EMPTY_PAIRS
-    if _EMPTY_PAIRS is None:
-        _EMPTY_PAIRS = pa.table(
-            {
-                "u": pa.array([], type=pa.int64()),
-                "v": pa.array([], type=pa.int64()),
-            }
+    Raises ValueError on a null row or on rows of unequal length: the
+    values buffer skips null rows, and ragged rows whose total length
+    happens to divide by n would otherwise reshape silently into a
+    matrix of scrambled rows."""
+    if isinstance(a, pa.ChunkedArray):
+        a = a.combine_chunks()
+    if a.null_count:
+        raise ValueError(f"vector column has {a.null_count} null row(s)")
+    lens = np.diff(np.asarray(a.offsets))
+    d = int(lens[0]) if len(lens) else 0
+    if (lens != d).any():
+        raise ValueError(
+            f"ragged vector column: row lengths {np.unique(lens).tolist()} differ"
         )
-    return _EMPTY_PAIRS
+    return np.asarray(a.flatten(), dtype=dtype).reshape(len(a), d)
+
+
+def _arrow_ids(a: "pa.Array | pa.ChunkedArray") -> np.ndarray:
+    return np.asarray(a, dtype=np.int64)
+
+
+def _list_array(mat: np.ndarray) -> pa.Array:
+    """(n, w) numpy matrix -> Arrow list array of n rows of width w,
+    element type following the matrix dtype (int64 -> array<long>,
+    int32 -> array<int>)."""
+    n, w = mat.shape
+    offsets = np.arange(n + 1, dtype=np.int32) * np.int32(w)
+    return pa.ListArray.from_arrays(offsets, np.ascontiguousarray(mat).ravel())
+
+
+_PAIRS_SCHEMA = pa.schema([("u", pa.int64()), ("v", pa.int64())])
 
 
 def _normalize_rows(m: np.ndarray) -> np.ndarray:
@@ -100,11 +97,14 @@ def _normalize_rows(m: np.ndarray) -> np.ndarray:
 
 
 _PARTIAL_SCHEMA = "query_id long, neighbor_id long, cos double"
+_PARTIAL_ARROW = pa.schema(
+    [("query_id", pa.int64()), ("neighbor_id", pa.int64()), ("cos", pa.float64())]
+)
 
 
 def _partial_topk_rows(
     sims: np.ndarray, qids: np.ndarray, nids: np.ndarray, m: int
-) -> pd.DataFrame:
+) -> pa.RecordBatch:
     """Per-query partial top-m out of a (B, |Q|) similarity block.
 
     Selection is TIE-AWARE: ordered by (-cos, neighbor_id), the same
@@ -115,20 +115,16 @@ def _partial_topk_rows(
     1.0 -> 0.11 on a 100x-replicated corpus)."""
     m = min(m, sims.shape[0])
     qs, ns, cs = [], [], []
-    order_ids = nids.astype(np.int64)
     for j in range(sims.shape[1]):
         col = sims[:, j]
         # lexsort: last key is primary -> sort by -cos, then neighbor id
-        rows = np.lexsort((order_ids, -col))[:m]
+        rows = np.lexsort((nids, -col))[:m]
         qs.append(np.full(len(rows), qids[j], dtype=np.int64))
-        ns.append(order_ids[rows])
+        ns.append(nids[rows])
         cs.append(col[rows])
-    return pd.DataFrame(
-        {
-            "query_id": np.concatenate(qs),
-            "neighbor_id": np.concatenate(ns),
-            "cos": np.concatenate(cs),
-        }
+    return pa.RecordBatch.from_arrays(
+        [pa.array(np.concatenate(x)) for x in (qs, ns, cs)],
+        schema=_PARTIAL_ARROW,
     )
 
 
@@ -161,7 +157,7 @@ def brute_force_topk_np(
 ) -> DataFrame:
     """Exact cosine top-k, vectorized: the (small, bounded) query set is
     collected into a closure matrix, the corpus streams through
-    ``mapInPandas`` once, each Arrow batch does ONE (B,d)@(d,|Q|) BLAS
+    ``mapInArrow`` once, each Arrow batch does ONE (B,d)@(d,|Q|) BLAS
     matmul and emits only its per-query top-(k+1) rows; a final window
     ranks the |partitions| x |Q| x (k+1) survivors. Exact same result
     set as :func:`brute_force_topk`."""
@@ -177,15 +173,15 @@ def brute_force_topk_np(
     )
     m = k + 1  # self may rank; dropped before the final top-k
 
-    def part(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
+    def part(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in it:
+            if b.num_rows == 0:
                 continue
-            nids = pdf[id_col].to_numpy()
-            c = _normalize_rows(_stack(pdf[vec_col]))
+            nids = _arrow_ids(b.column(id_col))
+            c = _normalize_rows(_arrow_mat(b.column(vec_col)))
             yield _partial_topk_rows(c @ qm.T, qids, nids, m)
 
-    partial = emb.select(id_col, vec_col).mapInPandas(part, _PARTIAL_SCHEMA)
+    partial = emb.select(id_col, vec_col).mapInArrow(part, _PARTIAL_SCHEMA)
     return _rank_topk(partial, k)
 
 
@@ -297,7 +293,7 @@ def blocked_cosine_pairs(
     )
 
 
-def _tile_pairs(lm, rm, lids, rids, t: float, diagonal: bool) -> pd.DataFrame:
+def _tile_pairs(lm, rm, lids, rids, t: float, diagonal: bool) -> pa.Table:
     """The ONE tiled over-threshold pair kernel every ε-join verify
     path shares (normalize happens in the caller): tile the left side
     so the similarity buffer stays bounded (~512 MB of float64)
@@ -319,36 +315,28 @@ def _tile_pairs(lm, rm, lids, rids, t: float, diagonal: bool) -> pd.DataFrame:
             uu, vv = np.minimum(uu, vv), np.maximum(uu, vv)
         us.append(uu)
         vs.append(vv)
-    return pd.DataFrame({"u": np.concatenate(us), "v": np.concatenate(vs)})
+    return pa.Table.from_arrays(
+        [pa.array(np.concatenate(us)), pa.array(np.concatenate(vs))],
+        schema=_PAIRS_SCHEMA,
+    )
 
 
 def _block_pair_cross(t: float, diag_of):
     """The shared sub-block-pair verify closure of the ε-joins: one
     (|ba|, d) @ (d, |bb|) BLAS matmul per cogroup via
     :func:`_tile_pairs`. ``diag_of(key)`` says whether the cogroup
-    key addresses a DIAGONAL block pair (left set == right set).
-
-    r14 optimization round: the closure is an ``applyInArrow`` kernel
-    (guide §4.2) — ``applyInPandas`` materialized every vector row as
-    its own numpy object before the kernel even ran (measured: a NOOP
-    cogroup function cost 4.3 s at the 40k-vector sf1 grain, ~60% of
-    the whole exact ε-join), while the Arrow form reshapes each side's
-    contiguous list buffer into the (n, d) matrix zero-copy. The float
-    math (`_normalize_rows`, `_tile_pairs`) and therefore the pair set
-    are bit-identical — only the conversion path changed."""
+    key addresses a DIAGONAL block pair (left set == right set)."""
 
     def cross(key: tuple, l: pa.Table, r: pa.Table) -> pa.Table:
         if l.num_rows == 0 or r.num_rows == 0:
-            return _empty_pairs_table()
-        return _pairs_table(
-            _tile_pairs(
-                _normalize_rows(_arrow_mat(l, "v")),
-                _normalize_rows(_arrow_mat(r, "v")),
-                _arrow_ids(l, "id"),
-                _arrow_ids(r, "id"),
-                t,
-                diag_of(key),
-            )
+            return _PAIRS_SCHEMA.empty_table()
+        return _tile_pairs(
+            _normalize_rows(_arrow_mat(l.column("v"))),
+            _normalize_rows(_arrow_mat(r.column("v"))),
+            _arrow_ids(l.column("id")),
+            _arrow_ids(r.column("id")),
+            t,
+            diag_of(key),
         )
 
     return cross
@@ -518,15 +506,13 @@ def lsh_cosine_pairs(
         # every (table, sig) bucket measured <= bucket_cap rows: the
         # whole-bucket Arrow group is bounded by construction — one
         # diagonal _tile_pairs per bucket (the SAME kernel the
-        # skeleton path runs, so the two paths cannot drift; Arrow
-        # form per _block_pair_cross's r14 note — zero-copy matrix,
-        # identical float path)
+        # skeleton path runs, so the two paths cannot drift)
         def bucket(key: tuple, tbl: pa.Table) -> pa.Table:
             if tbl.num_rows < 2:
-                return _empty_pairs_table()
-            m = _normalize_rows(_arrow_mat(tbl, "nv"))
-            ids = _arrow_ids(tbl, "neighbor_id")
-            return _pairs_table(_tile_pairs(m, m, ids, ids, t, diagonal=True))
+                return _PAIRS_SCHEMA.empty_table()
+            m = _normalize_rows(_arrow_mat(tbl.column("nv")))
+            ids = _arrow_ids(tbl.column("neighbor_id"))
+            return _tile_pairs(m, m, ids, ids, t, diagonal=True)
 
         return (
             bk.groupBy("t", "sig")
@@ -594,35 +580,17 @@ def signature(vec: Column, planes: list[list[float]]) -> Column:
 def _cogroup_rerank(m_keep: int):
     """Cogrouped per-bucket exact re-rank: left frame carries
     (query_id, qv), right (neighbor_id, nv); one BLAS matmul per bucket,
-    emit the bucket's per-query top-``m_keep``. Arrow kernel for the
-    same reason as ``_block_pair_cross`` (r14 note there): the float
-    path is unchanged, only the per-row object materialization of the
-    pandas form is gone."""
+    emit the bucket's per-query top-``m_keep``."""
 
     def rerank(left: pa.Table, right: pa.Table) -> pa.Table:
         if left.num_rows == 0 or right.num_rows == 0:
-            return pa.table(
-                {
-                    "query_id": pa.array([], type=pa.int64()),
-                    "neighbor_id": pa.array([], type=pa.int64()),
-                    "cos": pa.array([], type=pa.float64()),
-                }
-            )
-        qm = _normalize_rows(_arrow_mat(left, "qv"))
-        qids = _arrow_ids(left, "query_id")
-        cm = _normalize_rows(_arrow_mat(right, "nv"))
-        nids = _arrow_ids(right, "neighbor_id")
-        pdf = _partial_topk_rows(cm @ qm.T, qids, nids, m_keep)
-        return pa.table(
-            {
-                "query_id": pa.array(
-                    pdf["query_id"].to_numpy(), type=pa.int64()
-                ),
-                "neighbor_id": pa.array(
-                    pdf["neighbor_id"].to_numpy(), type=pa.int64()
-                ),
-                "cos": pa.array(pdf["cos"].to_numpy(), type=pa.float64()),
-            }
+            return _PARTIAL_ARROW.empty_table()
+        qm = _normalize_rows(_arrow_mat(left.column("qv")))
+        qids = _arrow_ids(left.column("query_id"))
+        cm = _normalize_rows(_arrow_mat(right.column("nv")))
+        nids = _arrow_ids(right.column("neighbor_id"))
+        return pa.Table.from_batches(
+            [_partial_topk_rows(cm @ qm.T, qids, nids, m_keep)]
         )
 
     return rerank
@@ -632,17 +600,14 @@ def _sigs_udf(pm: np.ndarray, n_tables: int, n_planes: int):
     """Arrow-batched signature computation: one (B, d) @ (d, T*P)
     matmul, sign-bit-packed per table. Sign is norm-invariant, so no
     normalization is needed."""
-    from pyspark.sql.functions import pandas_udf
-
     weights = 1 << np.arange(n_planes, dtype=np.int64)
 
-    @pandas_udf("array<long>")
-    def sigs_udf(vs: pd.Series) -> pd.Series:
-        m = _stack(vs)
+    @arrow_udf("array<long>")
+    def sigs_udf(vs: pa.Array) -> pa.Array:
+        m = _arrow_mat(vs)
         proj = m @ pm.T
         bits = (proj >= 0.0).reshape(len(m), n_tables, n_planes)
-        sigs = (bits * weights).sum(axis=2)
-        return pd.Series(list(sigs))
+        return _list_array((bits * weights).sum(axis=2))
 
     return sigs_udf
 
@@ -802,12 +767,11 @@ def _assign_cells(
     matmul + argmax per Arrow batch (ties -> lowest cell id). The
     centroid matrix rides in the UDF closure — no join, no window, no
     corpus shuffle to assign."""
-    from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("int")
-    def assign_cell(vs: pd.Series) -> pd.Series:
-        m = _normalize_rows(_stack(vs))
-        return pd.Series(np.argmax(m @ cent.T, axis=1).astype(np.int32))
+    @arrow_udf("int")
+    def assign_cell(vs: pa.Array) -> pa.Array:
+        m = _normalize_rows(_arrow_mat(vs))
+        return pa.array(np.argmax(m @ cent.T, axis=1).astype(np.int32))
 
     return emb.select(
         assign_cell(F.col(vec_col)).alias("cell"),
@@ -859,8 +823,6 @@ def ivf_probe_index(
     cells, and the cogrouped per-cell BLAS re-rank runs exactly as in
     the one-shot form. Cost scales with the QUERY BATCH x probed cells,
     never with corpus size."""
-    from pyspark.sql.functions import pandas_udf
-
     rows = sorted(
         (r.cell, r.centroid) for r in centroids.collect()
     )  # bounded: n_cells rows
@@ -868,15 +830,15 @@ def ivf_probe_index(
         return _empty_topk(queries)
     cent = np.array([c for _, c in rows], dtype=np.float64)
 
-    @pandas_udf("array<int>")
-    def probe_cells_udf(vs: pd.Series) -> pd.Series:
-        m = _normalize_rows(_stack(vs))
+    @arrow_udf("array<int>")
+    def probe_cells_udf(vs: pa.Array) -> pa.Array:
+        m = _normalize_rows(_arrow_mat(vs))
         aff = m @ cent.T
-        out = []
-        for row in aff:  # |Q| rows — tiny
+        out = np.empty((len(aff), min(nprobe, len(cent))), dtype=np.int32)
+        for qi, row in enumerate(aff):  # |Q| rows — tiny
             order = sorted(range(len(row)), key=lambda i: (-row[i], i))
-            out.append(np.array(order[:nprobe], dtype=np.int32))
-        return pd.Series(out)
+            out[qi] = order[:nprobe]
+        return _list_array(out)
 
     probes = queries.select(
         F.explode(probe_cells_udf(F.col(vec_col))).alias("cell"),
@@ -1053,9 +1015,10 @@ def semdedup_keep(
     if on_mega not in ("subcluster", "raise"):
         raise ValueError(f"on_mega must be 'subcluster' or 'raise': {on_mega!r}")
 
-    def prune(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col, kind="mergesort", ignore_index=True)
-        x = _normalize_rows(_stack(pdf[vec_col]))
+    def prune(tbl: pa.Table) -> pa.Table:
+        tbl = tbl.sort_by(id_col)  # stable: equal ids keep input order
+        x = _normalize_rows(_arrow_mat(tbl.column(vec_col)))
+        label_val = tbl.column(label_col)[0].as_py()
         n = x.shape[0]
         dropped = np.zeros(n, dtype=bool)
 
@@ -1089,7 +1052,7 @@ def semdedup_keep(
             if max_cluster is not None and len(idx) > max_cluster:
                 if on_mega == "raise":
                     raise ValueError(
-                        f"semdedup cluster {pdf[label_col].iloc[0]!r} has "
+                        f"semdedup cluster {label_val!r} has "
                         f"{len(idx)} rows > max_cluster={max_cluster}: the "
                         "quantizer produced a mega-cluster; re-cluster with "
                         "more cells (or raise max_cluster explicitly)"
@@ -1103,7 +1066,6 @@ def semdedup_keep(
                 # produced a mega-cluster — both facts an operator needs
                 import warnings
 
-                label_val = pdf[label_col].iloc[0]
                 warnings.warn(
                     f"semdedup mega-cluster fallback: cluster "
                     f"{label_val!r} has {len(idx)} rows > "
@@ -1134,7 +1096,7 @@ def semdedup_keep(
                 dropped[idx[hit]] = True
                 continue
             sweep(idx, use_greedy=greedy)
-        return pdf.loc[~dropped, [id_col, label_col]]
+        return tbl.select([id_col, label_col]).filter(pa.array(~dropped))
 
     # output schema mirrors the INPUT column types (a bigint cluster id
     # must not be squeezed into a declared int)
@@ -1146,7 +1108,7 @@ def semdedup_keep(
     return (
         emb.select(id_col, vec_col, label_col)
         .groupBy(label_col)
-        .applyInPandas(prune, schema)
+        .applyInArrow(prune, schema)
     )
 
 
@@ -1164,15 +1126,11 @@ def semdedup_pairs(
     audits and connected-components input. Same shuffle/memory shape:
     one shuffle keyed by cluster, per-cluster slab-wise BLAS."""
 
-    def pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col, kind="mergesort", ignore_index=True)
-        x = _normalize_rows(_stack(pdf[vec_col]))
-        # no dtype forced: the declared output schema mirrors the input
-        # id type, so the arrays must too (an int32 or string id column
-        # round-trips as-is instead of being hard-cast to int64)
-        ids = pdf[id_col].to_numpy()
+    def pairs(tbl: pa.Table) -> pa.Table:
+        tbl = tbl.sort_by(id_col)  # stable: equal ids keep input order
+        x = _normalize_rows(_arrow_mat(tbl.column(vec_col)))
         n = x.shape[0]
-        a_out, b_out = [], []
+        a_pos, b_pos = [], []
         cols = np.arange(n)
         for s in range(0, n, block):
             e = min(s + block, n)
@@ -1180,12 +1138,16 @@ def semdedup_pairs(
             mask = sims >= tau
             mask &= cols[None, :e] < np.arange(s, e)[:, None]
             bi, ai = np.nonzero(mask)  # row = later id, col = earlier id
-            a_out.append(ids[ai])
-            b_out.append(ids[bi + s])
-        return pd.DataFrame(
+            a_pos.append(ai)
+            b_pos.append(bi + s)
+        # ids are taken from the Arrow column, never converted: the
+        # declared output schema mirrors the input id type, so an int32
+        # or string id column round-trips as-is
+        ids = tbl.column(id_col)
+        return pa.table(
             {
-                "vec_a": np.concatenate(a_out) if a_out else ids[:0],
-                "vec_b": np.concatenate(b_out) if b_out else ids[:0],
+                "vec_a": ids.take(np.concatenate(a_pos)),
+                "vec_b": ids.take(np.concatenate(b_pos)),
             }
         )
 
@@ -1198,7 +1160,7 @@ def semdedup_pairs(
     return (
         emb.select(id_col, vec_col, label_col)
         .groupBy(label_col)
-        .applyInPandas(pairs, schema)
+        .applyInArrow(pairs, schema)
     )
 
 
@@ -1283,17 +1245,15 @@ def pq_index(
         "sub int, code int, centroid array<double>",
     )
 
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<int>")
-    def encode(vs: pd.Series) -> pd.Series:
-        xb = _normalize_rows(_stack(vs))
+    @arrow_udf("array<int>")
+    def encode(vs: pa.Array) -> pa.Array:
+        xb = _normalize_rows(_arrow_mat(vs))
         out = np.empty((len(xb), m), dtype=np.int32)
         for j in range(m):
             sub = xb[:, j * dsub : (j + 1) * dsub]
             d2 = -2.0 * (sub @ books[j].T) + (books[j] ** 2).sum(axis=1)[None, :]
             out[:, j] = np.argmin(d2, axis=1)  # ties -> lowest code id
-        return pd.Series(list(out))
+        return _list_array(out)
 
     codes_df = emb.select(
         F.col(id_col).alias("neighbor_id"), encode(F.col(vec_col)).alias("codes")
@@ -1314,7 +1274,7 @@ def pq_probe_index(
     batch collect into the closure, each query precomputes its per-
     subspace lookup table LUT[j][c] = q_j . codebook[j][c] (|Q| x m x
     ksub doubles — tiny), and the code table streams through ONE
-    ``mapInPandas`` pass where scoring a vector is m integer-indexed
+    ``mapInArrow`` pass where scoring a vector is m integer-indexed
     lookups + adds — no float vector is ever read at search time.
 
     Scores are partition-invariant (a fixed-order m-term sum per pair),
@@ -1340,18 +1300,18 @@ def pq_probe_index(
     )
     keep = k + 1  # self may rank; dropped in _rank_topk
 
-    def part(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
+    def part(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in it:
+            if b.num_rows == 0:
                 continue
-            nids = pdf["neighbor_id"].to_numpy()
-            cm = np.stack(pdf["codes"].to_numpy()).astype(np.int64)  # (B, m)
+            nids = _arrow_ids(b.column("neighbor_id"))
+            cm = _arrow_mat(b.column("codes"), np.int64)  # (B, m)
             sims = np.zeros((len(cm), len(qids)), dtype=np.float64)
             for j in range(m):
                 sims += lut[j][:, cm[:, j]].T  # (B, |Q|)
             yield _partial_topk_rows(sims, qids, nids, keep)
 
-    partial = codes.select("neighbor_id", "codes").mapInPandas(
+    partial = codes.select("neighbor_id", "codes").mapInArrow(
         part, _PARTIAL_SCHEMA
     )
     return _rank_topk(partial, k)
@@ -1503,7 +1463,7 @@ def ivfpq_probe_index(
     """Probe a MATERIALIZED IVF-PQ index: each query ranks the bounded
     centroid table for its ``nprobe`` cells; the code table is filtered
     to the probed-cell UNION (partition pruning when ``coded`` is
-    written partitioned by cell), and one ``mapInPandas`` ADC pass
+    written partitioned by cell), and one ``mapInArrow`` ADC pass
     scores each surviving code row against exactly the queries probing
     its cell (others masked to a sentinel and dropped before ranking).
     Scores of surviving pairs are the same fixed-order m-term LUT sums
@@ -1542,13 +1502,13 @@ def ivfpq_probe_index(
                            for c in np.nonzero(qmask[qi])[0]})
     keep = k + 1
 
-    def part(it):
-        for pdf in it:
-            if len(pdf) == 0:
+    def part(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in it:
+            if b.num_rows == 0:
                 continue
-            nids = pdf["neighbor_id"].to_numpy()
-            cells_b = pdf["cell"].to_numpy().astype(np.int64)
-            cm = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
+            nids = _arrow_ids(b.column("neighbor_id"))
+            cells_b = _arrow_ids(b.column("cell"))
+            cm = _arrow_mat(b.column("codes"), np.int64)
             sims = np.zeros((len(cm), len(qids)), dtype=np.float64)
             for j in range(m):
                 sims += lut[j][:, cm[:, j]].T
@@ -1559,7 +1519,7 @@ def ivfpq_probe_index(
     partial = (
         coded.where(F.col("cell").isin(probed_cells))
         .select("cell", "neighbor_id", "codes")
-        .mapInPandas(part, _PARTIAL_SCHEMA)
+        .mapInArrow(part, _PARTIAL_SCHEMA)
         .where(F.col("cos") > _IVFPQ_MASKED / 2)
     )
     return _rank_topk(partial, k)
@@ -1631,12 +1591,12 @@ def prefix_dim_topk(
     ]
     keep = k + 1
 
-    def part(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
+    def part(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in it:
+            if b.num_rows == 0:
                 continue
-            nids = pdf[id_col].to_numpy().astype(np.int64)
-            c = _normalize_rows(_stack(pdf[vec_col]))
+            nids = _arrow_ids(b.column(id_col))
+            c = _normalize_rows(_arrow_mat(b.column(vec_col)))
             sims = c @ qm.T  # identical op to brute_force_topk_np
             mask = np.empty(sims.shape, dtype=bool)
             for j, arr in enumerate(allowed_arr):
@@ -1650,7 +1610,7 @@ def prefix_dim_topk(
     partial = (
         emb.join(F.broadcast(shortlist_df), id_col, "semi")
         .select(id_col, vec_col)
-        .mapInPandas(part, _PARTIAL_SCHEMA)
+        .mapInArrow(part, _PARTIAL_SCHEMA)
         .where(F.col("cos") > _IVFPQ_MASKED / 2)
     )
     return _rank_topk(partial, k)

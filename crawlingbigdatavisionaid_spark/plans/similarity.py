@@ -522,7 +522,7 @@ def ann_pq_persisted_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         books_df, codes_df = built
         # the code table feeds the write, the in-flight probe and the
-        # refined search — materialize the encode mapInPandas once
+        # refined search — materialize the encode Arrow UDF once
         codes_df = codes_df.localCheckpoint(eager=False)
         books_df.write.parquet(f"{root}/codebooks")
         codes_df.write.parquet(f"{root}/codes")
@@ -780,7 +780,7 @@ def ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the in-memory code table feeds FOUR consumers (the parquet
         # write, the in-flight probe, the shortlist probe and the
         # cell-size audit) — materialize its PQ-encode lineage once
-        # instead of re-running the encode mapInPandas per consumer
+        # instead of re-running the encode Arrow UDF per consumer
         # (guide §5: reuse-driven materialization; results identical,
         # the encode is deterministic)
         coded = coded.localCheckpoint(eager=False)

@@ -533,13 +533,14 @@ def winnow_fingerprint_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer arithmetic, so the oracle reproduces the fingerprint SETS
     exactly — pairs are hash-checked, not recall-bounded.
 
-    Scale shape: per-doc fingerprinting is one codegen'd expression
-    (O(len * k) char folds, ~w-fold fewer fingerprints than k-grams —
-    the density guarantee); the pair stage is the standard inverted
-    index with the rarity df cap (fingerprints shared by more
-    than 5 docs are boilerplate, dropped identically in both
-    engines) bounding every bucket, the `dedup_ngram_jaccard`
-    precedent. No UDF, no cross join, no collect."""
+    Scale shape: per-doc fingerprinting is one Arrow-batched numpy
+    ``mapInPandas`` pass (:func:`winnow_doc_fps`: O(len * k) vectorized
+    hash folds, ~w-fold fewer fingerprints than k-grams — the density
+    guarantee); the pair stage is the standard inverted index with the
+    rarity df cap (fingerprints shared by more than 5 docs are
+    boilerplate, dropped identically in both engines) bounding every
+    bucket, the `dedup_ngram_jaccard` precedent. No cross join, no
+    collect."""
     docs = load_table(spark, sf_dir, "documents")
     return winnow_pairs(docs)
 
@@ -593,6 +594,8 @@ def winnow_doc_fps(
         for pdf in it:
             ids, fps = [], []
             for doc_id, txt in zip(pdf["doc_id"], pdf["s"]):
+                if txt is None:  # NULL text: no fingerprints
+                    continue
                 codes = np.frombuffer(
                     txt.encode("ascii"), dtype=np.uint8
                 ).astype(np.int64)

@@ -16,7 +16,7 @@ def test_compaction_reduces_files_and_preserves_rows(spark, tmp_path):
     path = str(tmp_path / "silver")
     # simulate 12 micro-batch appends of 32 partitions each
     for b in range(12):
-        spark.range(b * 1000, (b + 1) * 1000).withColumn(
+        spark.range(b * 1000, (b + 1) * 1000, numPartitions=32).withColumn(
             "v", F.col("id") * 2
         ).write.mode("append").parquet(path)
     before_files = data_file_count(path)

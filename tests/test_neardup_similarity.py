@@ -604,3 +604,38 @@ def test_prefix_dim_degenerate_equals_brute_force(spark):
         ).collect()
     }
     assert degen == exact
+
+
+@pytest.mark.parametrize(
+    "vectors",
+    [
+        # lengths 3 and 5: 8 values reshape to (2, 4) unless rows are checked
+        pytest.param([[1.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0, 1.0]], id="ragged"),
+        # 4 values over 4 rows: without a null check, a (4, 1) matrix
+        pytest.param([[1.0, 0.0], [0.0, 1.0], None, None], id="null-row"),
+    ],
+)
+@pytest.mark.parametrize(
+    "run",
+    [
+        pytest.param(
+            lambda df: S.brute_force_topk_np(df, df.where("vec_id = 0"), k=2),
+            id="brute_force_topk_np",
+        ),
+        pytest.param(lambda df: S.semdedup_keep(df, 0.9), id="semdedup_keep"),
+        pytest.param(
+            lambda df: S.blocked_cosine_pairs(df, 0.5, n_blocks=1),
+            id="blocked_cosine_pairs",
+        ),
+    ],
+)
+def test_vector_kernels_reject_ragged_and_null_rows(spark, run, vectors):
+    """A malformed embedding column makes the kernel raise instead of
+    returning rows computed from a mis-sliced matrix. One partition, so
+    every row reaches the same Arrow batch."""
+    df = spark.createDataFrame(
+        [(i, v, 0) for i, v in enumerate(vectors)],
+        "vec_id long, embedding array<double>, label int",
+    ).coalesce(1)
+    with pytest.raises(Exception, match="null row|ragged vector column"):
+        run(df).collect()

@@ -550,3 +550,15 @@ def test_training_shard_manifest_no_unpartitioned_window(spark, sf_dir):
         if "documents.parquet" in block and "ReadSchema" in block
     ][0]
     assert "source" not in scan and "url" not in scan
+
+
+def test_similarity_kernels_have_one_arrow_boundary():
+    """The vector kernels cross to Python only as Arrow (mapInArrow,
+    applyInArrow, arrow_udf): no pandas path may come back beside it."""
+    import inspect
+
+    from crawlingbigdatavisionaid_spark.operators import similarity
+
+    src = inspect.getsource(similarity)
+    for token in ("applyInPandas", "mapInPandas", "pandas_udf", "import pandas"):
+        assert token not in src, token

@@ -598,3 +598,58 @@ def test_training_shard_manifest_balance_and_order(spark):
     [r0] = [r for r in rows if r["shard"] == 0]
     assert r0["first_epoch_doc"] == want_first
     assert r0["last_epoch_doc"] == want_last
+
+
+@pytest.mark.parametrize("id_type", [IntegerType(), LongType(), StringType()])
+def test_semdedup_pairs_matches_bruteforce_and_mirrors_id_type(spark, id_type):
+    """Every within-cluster pair with cosine >= tau, lower id first, as
+    a brute-force double loop finds it; the pair columns keep the input
+    id type (an int id stays int, a string id stays string)."""
+    import math
+    import random
+
+    from crawlingbigdatavisionaid_spark.operators.similarity import semdedup_pairs
+
+    rng = random.Random(7)
+    vecs = []
+    for _ in range(8):
+        base = [rng.gauss(0.0, 1.0) for _ in range(6)]
+        vecs.append(base)
+        for _ in range(rng.randint(0, 2)):  # planted near-duplicates
+            vecs.append([x + rng.gauss(0.0, 0.05) for x in base])
+    rng.shuffle(vecs)
+    rows = [
+        (f"{i:03d}" if isinstance(id_type, StringType) else i, v, i % 2)
+        for i, v in enumerate(vecs)
+    ]
+    schema = StructType(
+        [
+            StructField("vec_id", id_type),
+            StructField("embedding", ArrayType(FloatType())),
+            StructField("label", IntegerType()),
+        ]
+    )
+    df = spark.createDataFrame(rows, schema)
+    got_df = semdedup_pairs(df, 0.9, block=3)
+    assert got_df.schema["vec_a"].dataType == id_type
+    assert got_df.schema["vec_b"].dataType == id_type
+    got = sorted((r.vec_a, r.vec_b) for r in got_df.collect())
+
+    def cos(a, b):
+        dot = sum(x * y for x, y in zip(a, b))
+        return dot / (
+            math.sqrt(sum(x * x for x in a)) * math.sqrt(sum(y * y for y in b))
+        )
+
+    # float32 storage: the reference reads the STORED values
+    stored = sorted((r.vec_id, list(r.embedding), r.label) for r in df.collect())
+    want = []
+    for i, (a, va, la) in enumerate(stored):
+        for b, vb, lb in stored[i + 1 :]:
+            if la == lb:
+                c = cos(va, vb)
+                assert abs(c - 0.9) > 1e-6, "fixture pair sits on the threshold"
+                if c >= 0.9:
+                    want.append((a, b))
+    assert want, "fixture planted no near-duplicate pairs"
+    assert got == sorted(want)

@@ -211,15 +211,23 @@ def test_winnow_short_doc_emits_no_fingerprints(spark):
     """Docs shorter than the k-gram must produce ZERO fingerprints:
     Spark's sequence(1, 0) is the descending [1, 0], and without the
     size guard a short doc emitted a phantom fingerprint the DuckDB
-    oracle (empty generate_series) does not."""
+    oracle (empty generate_series) does not. A NULL text emits none
+    either, rather than failing the task."""
     from crawlingbigdatavisionaid_spark.plans.sketches import winnow_doc_fps
 
     df = spark.createDataFrame(
-        [(0, "ab cd"), (1, ""), (2, "exactly8"), (3, "longer than eight")],
+        [
+            (0, "ab cd"),
+            (1, ""),
+            (2, "exactly8"),
+            (3, "longer than eight"),
+            (4, None),
+        ],
         "doc_id long, text string",
     )
     got = {r.doc_id for r in winnow_doc_fps(df).collect()}
     assert 0 not in got and 1 not in got  # < 8 normalized chars
+    assert 4 not in got  # NULL text
     assert 2 in got and 3 in got
 
 
