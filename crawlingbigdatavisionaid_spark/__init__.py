@@ -30,8 +30,8 @@ Layout
                   ``trigger(availableNow=True)``), watermarked windowed
                   aggregation, streaming dedup.
 - ``multimodal``  Opaque binary columns + typed metadata and the
-                  mapInPandas decode/feature plumbing (decode stubbed —
-                  image/audio libs are not available in this environment).
+                  ``mapInArrow`` decode/feature plumbing: dependency-free
+                  PNM image, PCM WAV audio and Y4M video decoders.
 - ``plans``       The query registry: every operator exposed as a named
                   (spark_fn, oracle_sql) pair consumed by
                   ``__spark_entry__.py``.

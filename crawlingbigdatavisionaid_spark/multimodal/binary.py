@@ -3,13 +3,14 @@ metadata, with decode / feature-extraction / frame-sampling plumbing.
 
 Design: media is an opaque ``BinaryType`` column next to a metadata
 struct (mime, byte length, checksum). Heavy per-item work (decode,
-resize, feature extraction) crosses to Python ONCE per Arrow batch via
-``mapInPandas`` — the schema, partitioning, UDF signature and batch
-shapes here are the real 100 TB plumbing. :func:`decode_image` is a
-REAL decoder for the uncompressed binary PNM family (P5 grayscale /
-P6 RGB) — header parse + raw pixel array, no external library; formats
-that require codec libraries (JPEG/PNG) raise ``ValueError`` and flow
-through the same per-item error-isolation path as any corrupt payload.
+resize, feature extraction) crosses to Python ONCE per Arrow batch
+through one ``mapInArrow`` boundary, :func:`map_payloads` — the schema,
+partitioning, kernel signature and batch shapes here are the real
+100 TB plumbing. :func:`decode_image` is a REAL decoder for the
+uncompressed binary PNM family (P5 grayscale / P6 RGB) — header parse +
+raw pixel array, no external library; formats that require codec
+libraries (JPEG/PNG) raise ``ValueError`` and flow through the same
+per-item error-isolation path as any corrupt payload.
 
 At scale the same pattern reads real media with
 ``spark.read.format('binaryFile')`` (path, modificationTime, length,
@@ -19,11 +20,14 @@ content) partitioned by directory; here the payload is synthesized from
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.conversion import to_arrow_schema
 from pyspark.sql.types import (
+    ArrayType,
+    FloatType,
     IntegerType,
     LongType,
     StructField,
@@ -43,6 +47,46 @@ FRAME_STRIDE = 4  # sample every 4th frame
 # default).
 ASCII_TEXT_SQL = "regexp_replace(coalesce(text, ''), '[^ -~]', 'x')"
 ASCII_TEXT_ORACLE = "regexp_replace(coalesce(text, ''), '[^ -~]', 'x', 'g')"
+
+
+def map_payloads(
+    with_payload: DataFrame,
+    per_item: Callable[[bytes], Iterable[tuple]],
+    schema: StructType,
+) -> DataFrame:
+    """The one Python boundary of the per-payload media kernels.
+
+    ``(doc_id, payload)`` crosses as Arrow batches (``mapInArrow``);
+    ``per_item`` maps one payload's bytes to zero or more output rows,
+    each a tuple of ``schema``'s fields after the first, and the doc id
+    is prepended as that first field. A NULL payload yields no row, and
+    a ``ValueError`` from ``per_item`` drops that item and only that
+    item (OP-STR-02's per-item error isolation, applied to media): one
+    corrupt payload never fails the batch."""
+    arrow_schema = to_arrow_schema(schema)
+
+    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in it:
+            cols = [[] for _ in arrow_schema]
+            ids, payloads = b.column(0).to_pylist(), b.column(1).to_pylist()
+            for doc_id, payload in zip(ids, payloads):
+                if payload is None:
+                    continue
+                try:
+                    # materialized first, so a kernel that fails midway
+                    # contributes none of its rows
+                    rows = list(per_item(payload))
+                except ValueError:
+                    continue
+                for row in rows:
+                    for col, v in zip(cols, (doc_id, *row), strict=True):
+                        col.append(v)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+                schema=arrow_schema,
+            )
+
+    return with_payload.select("doc_id", "payload").mapInArrow(batches, schema)
 
 
 def decode_image(payload: bytes) -> dict:
@@ -134,38 +178,24 @@ _DECODE_SCHEMA = StructType(
 
 def decode_image_features(with_payload: DataFrame) -> DataFrame:
     """Real image decode over the binary column: one Arrow batch ->
-    :func:`decode_image` per payload -> exact integer statistics.
-    Undecodable payloads are dropped, not fatal (OP-STR-02's per-item
-    error isolation, applied to media)."""
+    :func:`decode_image` per payload -> exact integer statistics
+    (``sum_g``/``sum_b`` NULL for grayscale). Undecodable payloads are
+    dropped, not fatal (:func:`map_payloads`)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    d = decode_image(bytes(payload))
-                except ValueError:
-                    continue
-                s = d["channel_sums"]
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": d["width"],
-                        "height": d["height"],
-                        "channels": d["channels"],
-                        "n_pixels": d["n_pixels"],
-                        "sum_r": s[0],
-                        "sum_g": s[1] if d["channels"] == 3 else None,
-                        "sum_b": s[2] if d["channels"] == 3 else None,
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _DECODE_SCHEMA.fields]
-            )
+    def per_item(payload: bytes) -> Iterator[tuple]:
+        d = decode_image(payload)
+        s, rgb = d["channel_sums"], d["channels"] == 3
+        yield (
+            d["width"],
+            d["height"],
+            d["channels"],
+            d["n_pixels"],
+            s[0],
+            s[1] if rgb else None,
+            s[2] if rgb else None,
+        )
 
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        batches, _DECODE_SCHEMA
-    )
+    return map_payloads(with_payload, per_item, _DECODE_SCHEMA)
 
 
 WAV_SAMPLES = 200  # fixed clip length so the RIFF header is a constant
@@ -272,32 +302,18 @@ def decode_audio_features(with_payload: DataFrame) -> DataFrame:
     """Real WAV decode over the binary column (Arrow-batched), with
     per-item error isolation like the image path."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    d = decode_audio(bytes(payload))
-                except ValueError:
-                    continue
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "channels": d["channels"],
-                        "sample_rate": d["sample_rate"],
-                        "n_samples": d["n_samples"],
-                        "sum_samples": d["sum_samples"],
-                        "min_sample": d["min_sample"],
-                        "max_sample": d["max_sample"],
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _AUDIO_SCHEMA.fields]
-            )
+    def per_item(payload: bytes) -> Iterator[tuple]:
+        d = decode_audio(payload)
+        yield (
+            d["channels"],
+            d["sample_rate"],
+            d["n_samples"],
+            d["sum_samples"],
+            d["min_sample"],
+            d["max_sample"],
+        )
 
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        batches, _AUDIO_SCHEMA
-    )
+    return map_payloads(with_payload, per_item, _AUDIO_SCHEMA)
 
 
 Y4M_W = 4  # fixed frame geometry: 4x4 C444 -> 48 bytes/frame
@@ -383,22 +399,11 @@ def decode_video_features(with_payload: DataFrame) -> DataFrame:
     """Real Y4M decode over the binary column (Arrow-batched), with
     per-item error isolation like the image/audio paths."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    d = decode_video(bytes(payload))
-                except ValueError:
-                    continue
-                rows.append({"doc_id": doc_id, **d})
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _VIDEO_SCHEMA.fields]
-            )
+    def per_item(payload: bytes) -> Iterator[tuple]:
+        d = decode_video(payload)
+        yield d["width"], d["height"], d["n_frames"], d["sum_luma"]
 
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        batches, _VIDEO_SCHEMA
-    )
+    return map_payloads(with_payload, per_item, _VIDEO_SCHEMA)
 
 
 def attach_binary(docs: DataFrame) -> DataFrame:
@@ -437,31 +442,26 @@ _FEATURE_SCHEMA = StructType(
 def fake_decode_features(with_payload: DataFrame) -> DataFrame:
     """Deterministic byte-level "decode": per-item integer features.
 
-    The stand-in for image feature extraction — same Arrow-batched
-    mapInPandas shape a real model/decoder would use. Integer outputs
-    keep it engine-exact for the DuckDB oracle.
+    The stand-in for image feature extraction — the same Arrow-batched
+    :func:`map_payloads` shape a real model/decoder would use. Integer
+    outputs keep it engine-exact for the DuckDB oracle.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {
-                "doc_id": pdf["doc_id"],
-                "n_bytes": pdf["payload"].map(len).astype("int64"),
-                "sum_bytes": pdf["payload"].map(
-                    lambda b: int(sum(b)) if len(b) else 0
-                ),
-                "min_byte": pdf["payload"].map(
-                    lambda b: int(min(b)) if len(b) else -1
-                ),
-                "max_byte": pdf["payload"].map(
-                    lambda b: int(max(b)) if len(b) else -1
-                ),
-            }
-            yield pd.DataFrame(out)
+    def per_item(payload: bytes) -> Iterator[tuple]:
+        if payload:
+            yield len(payload), sum(payload), min(payload), max(payload)
+        else:
+            yield 0, 0, -1, -1
 
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        batches, _FEATURE_SCHEMA
-    )
+    return map_payloads(with_payload, per_item, _FEATURE_SCHEMA)
+
+
+_EMBEDDING_SCHEMA = StructType(
+    [
+        StructField("vec_id", LongType()),
+        StructField("embedding", ArrayType(FloatType())),
+    ]
+)
 
 
 def byte_histogram_embedding(
@@ -469,12 +469,13 @@ def byte_histogram_embedding(
 ) -> DataFrame:
     """Per-item EMBEDDING from the raw payload: a ``bins``-bin byte
     histogram as ``array<float>`` — the deterministic stand-in for a
-    learned media encoder, with the exact Arrow-batched ``mapInPandas``
-    shape a real model fills (batch in, one vector per item out). Byte
-    distributions are a real (if crude) similarity signal: near-dup
-    payloads produce near-identical histograms, so cosine search over
-    this column exercises the full multimodal→ANN composition with
-    meaningful neighbors. Returns (vec_id, embedding) — the similarity
+    learned media encoder, with the exact Arrow-batched
+    :func:`map_payloads` shape a real model fills (batch in, one vector
+    per item out). Byte distributions are a real (if crude) similarity
+    signal: near-dup payloads produce near-identical histograms, so
+    cosine search over this column exercises the full multimodal→ANN
+    composition with meaningful neighbors. A NULL payload embeds as the
+    zero vector. Returns (vec_id, embedding) — the similarity
     operators' expected schema."""
     import numpy as np
 
@@ -486,27 +487,23 @@ def byte_histogram_embedding(
     # bytes into the last bucket instead of silently dropping them
     width = 256 // bins
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            vecs = []
-            for b in pdf["payload"]:
-                if b is None:  # NULL payload -> zero vector, not a batch abort
-                    vecs.append(np.zeros(bins, dtype=np.float32))
-                    continue
-                h = np.bincount(
-                    np.minimum(
-                        np.frombuffer(bytes(b), dtype=np.uint8) // width,
-                        bins - 1,
-                    ),
-                    minlength=bins,
-                ).astype(np.float32)
-                vecs.append(h)
-            yield pd.DataFrame(
-                {"vec_id": pdf["doc_id"], "embedding": vecs}
-            )
+    def per_item(payload: bytes) -> Iterator[tuple]:
+        yield (
+            np.bincount(
+                np.minimum(
+                    np.frombuffer(payload, dtype=np.uint8) // width, bins - 1
+                ),
+                minlength=bins,
+            ).astype(np.float32),
+        )
 
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        batches, "vec_id long, embedding array<float>"
+    # NULL -> empty bytes JVM-side, whose histogram is the zero vector
+    return map_payloads(
+        with_payload.select(
+            "doc_id", F.coalesce("payload", F.lit(b"")).alias("payload")
+        ),
+        per_item,
+        _EMBEDDING_SCHEMA,
     )
 
 
@@ -522,25 +519,14 @@ _FRAME_SCHEMA = StructType(
 def sample_frames(with_payload: DataFrame) -> DataFrame:
     """Simulated video frame sampling: split the payload into
     FRAME_BYTES-wide frames, keep every FRAME_STRIDE-th, emit an exact
-    integer digest per kept frame. 1-row -> N-rows via mapInPandas."""
+    integer digest per kept frame. 1-row -> N-rows through
+    :func:`map_payloads`."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, sums = [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                n_frames = len(payload) // FRAME_BYTES
-                for i in range(0, n_frames, FRAME_STRIDE):
-                    frame = payload[i * FRAME_BYTES : (i + 1) * FRAME_BYTES]
-                    ids.append(doc_id)
-                    idxs.append(i)
-                    sums.append(int(sum(frame)))
-            yield pd.DataFrame(
-                {"doc_id": ids, "frame_idx": idxs, "frame_sum": sums}
-            )
+    def per_item(payload: bytes) -> Iterator[tuple]:
+        for i in range(0, len(payload) // FRAME_BYTES, FRAME_STRIDE):
+            yield i, sum(payload[i * FRAME_BYTES : (i + 1) * FRAME_BYTES])
 
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        batches, _FRAME_SCHEMA
-    )
+    return map_payloads(with_payload, per_item, _FRAME_SCHEMA)
 
 
 RESIZE_STRIDE = 4  # keep every 4th byte — nearest-neighbor on a 1D stream
@@ -559,29 +545,13 @@ def resize_payload(with_payload: DataFrame) -> DataFrame:
     """Binary -> binary "resize": nearest-neighbor downsample of the
     payload byte stream (every RESIZE_STRIDE-th byte) — the structural
     stand-in for image resize (a real one decodes, interpolates pixels,
-    re-encodes inside the same mapInPandas batch loop). Emits the
+    re-encodes inside the same :func:`map_payloads` kernel). Emits the
     resized payload's exact integer digest + both lengths so the
     transform is value-checkable without shipping binaries through the
     compare."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, orig, rlen, rsum = [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                small = payload[::RESIZE_STRIDE]
-                ids.append(doc_id)
-                orig.append(len(payload))
-                rlen.append(len(small))
-                rsum.append(int(sum(small)))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "orig_bytes": orig,
-                    "resized_bytes": rlen,
-                    "resized_sum": rsum,
-                }
-            )
+    def per_item(payload: bytes) -> Iterator[tuple]:
+        small = payload[::RESIZE_STRIDE]
+        yield len(payload), len(small), sum(small)
 
-    return with_payload.select("doc_id", "payload").mapInPandas(
-        batches, _RESIZE_SCHEMA
-    )
+    return map_payloads(with_payload, per_item, _RESIZE_SCHEMA)

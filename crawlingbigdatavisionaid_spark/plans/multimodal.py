@@ -72,7 +72,7 @@ def multimodal_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def multimodal_decode_image(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL image decode end-to-end: every doc gets a valid binary P6
-    PPM payload (JVM-side encode), then mapInPandas runs the
+    PPM payload (JVM-side encode), then one ``mapInArrow`` pass runs the
     dependency-free PNM decoder (header parse + pixel array) and emits
     exact per-channel statistics. No stubbed sub-path."""
     docs = load_table(spark, sf_dir, "documents")
@@ -108,8 +108,8 @@ def multimodal_decode_image(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_decode_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL audio decode end-to-end: every doc gets a valid mono 8-bit
     PCM WAV (constant RIFF header as a binary literal + ASCII samples),
-    then mapInPandas runs the dependency-free RIFF/fmt/data chunk walk
-    and emits exact sample statistics."""
+    then one ``mapInArrow`` pass runs the dependency-free RIFF/fmt/data
+    chunk walk and emits exact sample statistics."""
     docs = load_table(spark, sf_dir, "documents")
     return MM.decode_audio_features(MM.attach_wav(docs))
 
@@ -142,8 +142,8 @@ def multimodal_decode_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_decode_video(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL (uncompressed) video decode end-to-end: every doc gets a
     valid YUV4MPEG2 stream with a doc-dependent frame count, then
-    mapInPandas runs the dependency-free header/FRAME-walk decoder and
-    emits geometry, frame count and the exact luma sum."""
+    one ``mapInArrow`` pass runs the dependency-free header/FRAME-walk
+    decoder and emits geometry, frame count and the exact luma sum."""
     docs = load_table(spark, sf_dir, "documents")
     return MM.decode_video_features(MM.attach_y4m(docs))
 
@@ -173,7 +173,7 @@ def multimodal_decode_video(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow-batched mapInPandas "decode" producing exact integer
+    """Arrow-batched ``mapInArrow`` "decode" producing exact integer
     features — the real plumbing a media featurizer uses (text is ASCII,
     so UTF-8 bytes == ascii codes and DuckDB can mirror it)."""
     docs = load_table(spark, sf_dir, "documents").where(
@@ -212,7 +212,8 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Simulated video frame sampling (1 row -> N frames) through
-    mapInPandas — row-expansion plumbing with an exact integer digest."""
+    ``mapInArrow`` — row-expansion plumbing with an exact integer
+    digest."""
     docs = load_table(spark, sf_dir, "documents")
     return MM.sample_frames(MM.attach_binary(docs))
 
@@ -244,7 +245,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary->binary resize plumbing (nearest-neighbor byte downsample
-    in mapInPandas), checked via exact integer digests — ASCII payloads
+    in ``mapInArrow``), checked via exact integer digests — ASCII payloads
     give DuckDB a byte-level twin."""
     docs = load_table(spark, sf_dir, "documents")
     return MM.resize_payload(MM.attach_binary(docs))
@@ -406,6 +407,47 @@ def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return P.hamming_pair_histogram(hashed, "phash", P.PHASH_BITS, 2)
 
 
+def _grid_recall_verdict(hashed: DataFrame, hash_col: str) -> DataFrame:
+    """Shared Spark body of the image-hash recall verdicts: over
+    (doc_id, ``hash_col``, grid_sig) rows, the dup-pair counts at the
+    exact-grid grain and at the hash's distance-0 grain, and
+    ``recall_ok`` iff every grid signature maps to exactly ONE hash and
+    the grid pairs do not exceed the hash pairs."""
+    hashed = hashed.localCheckpoint(eager=False)
+    gd = (
+        hashed.groupBy("grid_sig")
+        .agg(
+            F.count(F.lit(1)).alias("cnt"),
+            F.countDistinct(hash_col).alias("nh"),
+        )
+        .agg(
+            F.coalesce(
+                F.sum(F.expr("cnt * (cnt - 1) DIV 2")), F.lit(0)
+            ).alias("p"),
+            F.max("nh").alias("mh"),
+        )
+    )
+    hd = (
+        hashed.groupBy(hash_col)
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .agg(
+            F.coalesce(
+                F.sum(F.expr("cnt * (cnt - 1) DIV 2")), F.lit(0)
+            ).alias("hp")
+        )
+    )
+    return (
+        gd.crossJoin(F.broadcast(hd))  # two 1-row aggregates
+        .select(
+            F.col("p").cast("bigint").alias("n_grid_dup_pairs"),
+            F.col("hp").cast("bigint").alias("n_hash_d0_pairs"),
+            ((F.col("mh") == 1) & (F.col("p") <= F.col("hp"))).alias(
+                "recall_ok"
+            ),
+        )
+    )
+
+
 @register(
     "dedup_image_phash_recall",
     ops=("OP-X-MM-01", "OP-X-DEDUP-02"),
@@ -452,39 +494,7 @@ def dedup_image_phash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import perceptual as P
 
     docs = load_table(spark, sf_dir, "documents")
-    hashed = P.image_dhash(MM.attach_ppm(docs)).localCheckpoint(eager=False)
-    gd = (
-        hashed.groupBy("grid_sig")
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.countDistinct("phash").alias("nh"),
-        )
-        .agg(
-            F.coalesce(
-                F.sum(F.expr("cnt * (cnt - 1) DIV 2")), F.lit(0)
-            ).alias("p"),
-            F.max("nh").alias("mh"),
-        )
-    )
-    hd = (
-        hashed.groupBy("phash")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .agg(
-            F.coalesce(
-                F.sum(F.expr("cnt * (cnt - 1) DIV 2")), F.lit(0)
-            ).alias("hp")
-        )
-    )
-    return (
-        gd.crossJoin(F.broadcast(hd))  # two 1-row aggregates
-        .select(
-            F.col("p").cast("bigint").alias("n_grid_dup_pairs"),
-            F.col("hp").cast("bigint").alias("n_hash_d0_pairs"),
-            ((F.col("mh") == 1) & (F.col("p") <= F.col("hp"))).alias(
-                "recall_ok"
-            ),
-        )
-    )
+    return _grid_recall_verdict(P.image_dhash(MM.attach_ppm(docs)), "phash")
 
 
 @register(
@@ -573,41 +583,7 @@ def dedup_image_phash64_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import perceptual as P
 
     docs = load_table(spark, sf_dir, "documents")
-    hashed = P.image_dhash64(MM.attach_ppm(docs)).localCheckpoint(
-        eager=False
-    )
-    gd = (
-        hashed.groupBy("grid_sig")
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.countDistinct("phash64").alias("nh"),
-        )
-        .agg(
-            F.coalesce(
-                F.sum(F.expr("cnt * (cnt - 1) DIV 2")), F.lit(0)
-            ).alias("p"),
-            F.max("nh").alias("mh"),
-        )
-    )
-    hd = (
-        hashed.groupBy("phash64")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .agg(
-            F.coalesce(
-                F.sum(F.expr("cnt * (cnt - 1) DIV 2")), F.lit(0)
-            ).alias("hp")
-        )
-    )
-    return (
-        gd.crossJoin(F.broadcast(hd))  # two 1-row aggregates
-        .select(
-            F.col("p").cast("bigint").alias("n_grid_dup_pairs"),
-            F.col("hp").cast("bigint").alias("n_hash_d0_pairs"),
-            ((F.col("mh") == 1) & (F.col("p") <= F.col("hp"))).alias(
-                "recall_ok"
-            ),
-        )
-    )
+    return _grid_recall_verdict(P.image_dhash64(MM.attach_ppm(docs)), "phash64")
 
 
 # 63-bit 2-D sequency-domain image hash (judge r12 next-round #8): the
@@ -733,41 +709,7 @@ def dedup_image_whash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import perceptual as P
 
     docs = load_table(spark, sf_dir, "documents")
-    hashed = P.image_whash64(MM.attach_ppm(docs)).localCheckpoint(
-        eager=False
-    )
-    gd = (
-        hashed.groupBy("grid_sig")
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.countDistinct("iwhash").alias("nh"),
-        )
-        .agg(
-            F.coalesce(
-                F.sum(F.expr("cnt * (cnt - 1) DIV 2")), F.lit(0)
-            ).alias("p"),
-            F.max("nh").alias("mh"),
-        )
-    )
-    hd = (
-        hashed.groupBy("iwhash")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .agg(
-            F.coalesce(
-                F.sum(F.expr("cnt * (cnt - 1) DIV 2")), F.lit(0)
-            ).alias("hp")
-        )
-    )
-    return (
-        gd.crossJoin(F.broadcast(hd))
-        .select(
-            F.col("p").cast("bigint").alias("n_grid_dup_pairs"),
-            F.col("hp").cast("bigint").alias("n_hash_d0_pairs"),
-            ((F.col("mh") == 1) & (F.col("p") <= F.col("hp"))).alias(
-                "recall_ok"
-            ),
-        )
-    )
+    return _grid_recall_verdict(P.image_whash64(MM.attach_ppm(docs)), "iwhash")
 
 
 @register(

@@ -232,7 +232,7 @@ def stream_neardup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL media decode inside Structured Streaming: the documents file
     streams in, every micro-batch encodes a valid P6 PPM per doc and runs
-    the dependency-free PNM decoder through the same Arrow ``mapInPandas``
+    the dependency-free PNM decoder through the same ``mapInArrow`` kernel
     the batch path uses (stateless map on the stream), then a complete-
     mode aggregate drains with availableNow — proving the multimodal
     plumbing is batch/streaming-symmetric."""

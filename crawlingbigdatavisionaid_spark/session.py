@@ -70,13 +70,3 @@ def get_spark(app_name: str = "crawlingbigdatavisionaid-spark") -> SparkSession:
             "spark.driver.extraJavaOptions", (pretouch + " " + extra).strip()
         )
     return builder.getOrCreate()
-
-
-def tune_for_sf(spark: SparkSession, sf_dir: str) -> None:
-    """Adjust partition-count knobs to the scale factor under test.
-
-    At 100 TB these would come from cluster sizing (cores x 2-3,
-    target 128 MB shuffle blocks); locally AQE coalescing makes the
-    exact seed value non-critical.
-    """
-    spark.conf.set("spark.sql.shuffle.partitions", _DEFAULT_SHUFFLE_PARTITIONS)

@@ -1,6 +1,6 @@
 """Real PNM decode (OP-X-MM-01): dependency-free header/pixel parser,
 the engine-side PPM encoder, and per-item error isolation in the
-mapInPandas featurizer."""
+Arrow-batched media kernels."""
 
 from __future__ import annotations
 
@@ -169,12 +169,47 @@ def test_featurizer_isolates_bad_payloads(spark):
         (1, _p6(2, 1, bytes([1, 2, 3, 4, 5, 6]))),
         (2, b"\xff\xd8not an image"),
         (3, _p6(1, 1, bytes([7, 8, 9]))),
+        (4, b"P5\n2 1\n255\n" + bytes([10, 20])),
     ]
     df = spark.createDataFrame(rows, "doc_id long, payload binary")
     got = {r["doc_id"]: r.asDict() for r in decode_image_features(df).collect()}
-    assert set(got) == {1, 3}  # the corrupt payload drops, batch survives
+    assert set(got) == {1, 3, 4}  # the corrupt payload drops, batch survives
     assert got[1]["sum_r"] == 5 and got[1]["sum_g"] == 7 and got[1]["sum_b"] == 9
     assert got[3]["n_pixels"] == 1
+    # grayscale has one channel: the green and blue sums are NULL
+    assert got[4]["sum_r"] == 30
+    assert got[4]["sum_g"] is None and got[4]["sum_b"] is None
+
+
+# one valid payload per kernel that drops a NULL payload
+_NULL_PAYLOAD_CASES = {
+    "decode_image_features": _p6(2, 1, bytes([1, 2, 3, 4, 5, 6])),
+    "decode_audio_features": _wav_header(16, 8000) + bytes(range(16)),
+    "decode_video_features": b"YUV4MPEG2 W4 H4 C444\nFRAME\n" + bytes(48),
+    "fake_decode_features": b"payload",
+    "sample_frames": bytes(range(32)),
+    "resize_payload": b"payload",
+    "image_dhash": _p6(2, 1, bytes([1, 2, 3, 4, 5, 6])),
+    "image_dhash64": _p6(2, 1, bytes([1, 2, 3, 4, 5, 6])),
+    "image_whash64": _p6(2, 1, bytes([1, 2, 3, 4, 5, 6])),
+    "audio_fingerprint": _wav_header(16, 8000) + bytes(range(16)),
+    "audio_wht_fingerprint": _wav_header(16, 8000) + bytes(range(16)),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_NULL_PAYLOAD_CASES))
+def test_null_payload_yields_no_row(spark, name):
+    """A NULL payload is one more bad item: it yields no row instead of
+    failing the task, and the valid payload beside it still comes out."""
+    from crawlingbigdatavisionaid_spark.multimodal import binary
+    from crawlingbigdatavisionaid_spark.operators import perceptual
+
+    kernel = getattr(binary, name, None) or getattr(perceptual, name)
+    df = spark.createDataFrame(
+        [(1, _NULL_PAYLOAD_CASES[name]), (2, None)],
+        "doc_id long, payload binary",
+    )
+    assert [r["doc_id"] for r in kernel(df).collect()] == [1]
 
 
 def test_ppm_roundtrip_matches_encode_arithmetic(spark, sf_dir):

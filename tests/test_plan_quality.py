@@ -552,13 +552,19 @@ def test_training_shard_manifest_no_unpartitioned_window(spark, sf_dir):
     assert "source" not in scan and "url" not in scan
 
 
-def test_similarity_kernels_have_one_arrow_boundary():
-    """The vector kernels cross to Python only as Arrow (mapInArrow,
-    applyInArrow, arrow_udf): no pandas path may come back beside it."""
+@pytest.mark.parametrize(
+    "module",
+    ["operators.similarity", "multimodal.binary", "operators.perceptual"],
+)
+def test_python_kernels_have_one_arrow_boundary(module):
+    """The vector, media-decode and perceptual-hash kernels cross to
+    Python only as Arrow (mapInArrow, applyInArrow, arrow_udf): no
+    pandas path may come back beside it."""
+    import importlib
     import inspect
 
-    from crawlingbigdatavisionaid_spark.operators import similarity
-
-    src = inspect.getsource(similarity)
+    src = inspect.getsource(
+        importlib.import_module(f"crawlingbigdatavisionaid_spark.{module}")
+    )
     for token in ("applyInPandas", "mapInPandas", "pandas_udf", "import pandas"):
         assert token not in src, token
