@@ -14,13 +14,24 @@ too (tests/test_components.py pins a 1000-node path).
 
 Scale notes: each round is one join (labels ⋈ symmetric edges) + one
 min-aggregate + one halving self-join, all shuffled on node id — no
-per-component state, no driver-side graph. Labels are local-checkpointed
-every round: a cache would keep the full logical plan alive, and the
-halving self-join doubles that plan per round, so DRIVER analysis time
-(not executor time) becomes the bottleneck without truncation —
-GraphFrames' CC checkpoints at a fixed interval for the same reason.
-Convergence is detected by the monotone label-sum (one aggregate), not a
-new-vs-old join.
+per-component state, no driver-side graph. Round 0 needs no join at
+all: the initial label IS the node, so its neighborhood minimum is the
+edge table's per-source MIN(dst). Each round's label table is lazily
+local-checkpointed: the halving self-join references the round's
+propagate step twice, so without truncation the logical plan doubles
+per round and DRIVER analysis time becomes the bottleneck — GraphFrames'
+CC checkpoints at a fixed interval for the same reason. The two
+references plan identically, so AQE runs the propagate exchange once
+and reuses it (``ReusedExchange``) for the second. Under AQE a lazy
+checkpoint still executes the round's shuffle stages when it builds
+its RDD, so nothing in the round is cached: a cached relation's output
+cannot be coalesced and would pin ``spark.sql.shuffle.partitions``
+tasks per stage however small the graph. Convergence is detected by the
+monotone label-sum (one aggregate), not a new-vs-old join.
+
+Input contract: a pair with a NULL endpoint contributes no edge; its
+other endpoint is still a node (its own singleton component unless
+another pair links it). An empty pair list yields an empty result.
 """
 
 from __future__ import annotations
@@ -34,26 +45,22 @@ def connected_components(
     b_col: str = "doc_b",
     max_iter: int = 25,
 ) -> DataFrame:
-    """(node, component) for every node in ``pairs``; component = min
-    node id reachable. Deterministic — pure graph property."""
-    # localCheckpoint (not cache): caching materializes data but keeps the
-    # full logical plan, so every round would re-analyze the (potentially
-    # huge) upstream pair-generation lineage once per reference — driver
-    # analysis time, not executor time, became the bottleneck.  A local
-    # checkpoint truncates the plan to the materialized RDD.
-    #
-    # r13 optimization round, two changes with the fixpoint unchanged:
-    # * the symmetric edge table is built by EXPLODING each pair into
-    #   both orientations in ONE pass — the previous two-leg union
-    #   executed the (un-checkpointed, potentially expensive) upstream
-    #   pair pipeline once per leg (guide §2.4 / §1.2);
-    # * every node gets a (node, node) SELF-LOOP edge (from the already
-    #   materialized label table — never from the raw pair pipeline),
-    #   so the per-round neighborhood MIN includes the node's own label
-    #   and the propagate step is ONE join + aggregate instead of the
-    #   old join + aggregate + (labels left-join nmin) second pass.
-    #   MIN is idempotent, so per-round labels are identical and the
-    #   round count does not change.
+    """(node, component) for every non-NULL node in ``pairs``; component
+    = min node id reachable. Deterministic — pure graph property. NULL
+    endpoints are dropped (see the module docstring)."""
+    if max_iter < 1:
+        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
+    # The symmetric edge table is built by EXPLODING each pair into both
+    # orientations in ONE pass (a two-leg union would execute the
+    # un-checkpointed upstream pair pipeline once per leg), plus a
+    # (node, node) SELF-LOOP per endpoint, so the per-round neighborhood
+    # MIN includes the node's own label and the propagate step is ONE
+    # join + aggregate. Dropping NULL endpoints here (not in each round)
+    # keeps both references of a round's propagate step free of inferred
+    # not-null filters, so they plan identically and AQE reuses the
+    # exchange. Eager localCheckpoint (not cache): it truncates the
+    # potentially huge upstream pair lineage, which every round would
+    # otherwise re-analyze.
     edges = (
         pairs.select(
             F.explode(
@@ -74,24 +81,23 @@ def connected_components(
             ).alias("e")
         )
         .select("e.src", "e.dst")
+        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .distinct()
         .localCheckpoint(eager=True)
     )
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
+    labels = None
     prev_sum = None
-    for i in range(max_iter):
-        # min label over the self-loop-closed neighborhood == least of
-        # the own label and every neighbor label (the old two-join form)
-        propagated = (
-            edges.join(labels, edges.dst == labels.node)
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.min("label").alias("label"))
-            .cache()  # referenced twice below (self-join for halving)
+    for _ in range(max_iter):
+        if labels is None:
+            # round 0: every node is its own label, so the neighborhood
+            # MIN of labels is the MIN of neighbor ids — no join
+            nbr = edges.select("src", F.col("dst").alias("label"))
+        else:
+            nbr = edges.join(labels, edges.dst == labels.node).select(
+                "src", "label"
+            )
+        propagated = nbr.groupBy(F.col("src").alias("node")).agg(
+            F.min("label").alias("label")
         )
         # path-halving: label <- label(label). Every label is itself a
         # node id in this component (min over neighborhood of node ids),
@@ -100,7 +106,7 @@ def connected_components(
         hop = propagated.select(
             F.col("node").alias("pnode"), F.col("label").alias("plabel")
         )
-        new_labels = (
+        labels = (
             propagated.join(hop, propagated.label == hop.pnode, "left")
             .select(
                 "node",
@@ -108,22 +114,15 @@ def connected_components(
                     "label", F.coalesce("plabel", F.col("label"))
                 ).alias("label"),
             )
-            # plan-truncating materialization EVERY round (see edges
-            # note): without it the halving self-join doubles the
-            # logical plan per round and analysis blows up; non-eager —
-            # the convergence agg below is the materializing action
             .localCheckpoint(eager=False)
         )
         # convergence check without a join: labels are monotonically
         # non-increasing per node, so the label sum strictly decreases
-        # iff anything changed.  One agg over the (just-materialized)
-        # cache — decimal accumulator so 100 TB node counts can't
-        # overflow int64.
-        cur_sum = new_labels.agg(
+        # iff anything changed. One agg over the checkpointed labels —
+        # decimal accumulator so 100 TB node counts can't overflow int64.
+        cur_sum = labels.agg(
             F.sum(F.col("label").cast("decimal(38,0)"))
         ).collect()[0][0]
-        propagated.unpersist()
-        labels = new_labels  # old checkpoint RDDs are GC-cleaned
         if cur_sum is None or cur_sum == prev_sum:
             break  # empty graph, or no label moved this round
         prev_sum = cur_sum

@@ -118,23 +118,30 @@ def lpa_labels(edges: DataFrame, rounds: int) -> DataFrame:
     count, then lexicographically smallest label). Returns
     (node, label) — the fixed round-``rounds`` state.
 
-    Per round: one keyed join, one (node,label) vote count (map-side
-    combinable), one struct-min argmax aggregate — no per-node window.
-    Each round's label table is lazily checkpointed (it feeds the next
-    join; an uncheckpointed composition re-expands per reference).
-    Callers materialize the edge layout (plans/graph.py uses the
-    key-clustered sorted form the graph_ab.py A/B adopted)."""
-    labels = edges.select(F.col("src").alias("node")).distinct().withColumn(
-        "label", F.col("node")
-    )
+    Every node starts as its own label, so round 1's votes are the
+    edge rows themselves: one (dst, src) count, no node table and no
+    join (a parallel edge row still votes twice). Each later round is
+    one keyed join against the previous label table, one (node,label)
+    vote count (map-side combinable) and one struct-min argmax
+    aggregate — no per-node window. Every round reads the previous
+    label table exactly once, so the composed plan stays linear and is
+    built without running a job. Callers materialize the edge layout
+    (plans/graph.py uses the key-clustered sorted form the graph_ab.py
+    A/B adopted)."""
+    if rounds < 1:
+        raise ValueError(f"rounds must be >= 1, got {rounds}")
+    labels = None
     for _ in range(rounds):
-        votes = (
-            edges.join(labels, edges.src == labels.node)
-            .groupBy(F.col("dst").alias("node"), "label")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
+        if labels is None:
+            ballots = edges.select("dst", F.col("src").alias("label"))
+        else:
+            ballots = edges.join(labels, edges.src == labels.node).select(
+                "dst", "label"
+            )
         labels = (
-            votes.groupBy("node")
+            ballots.groupBy(F.col("dst").alias("node"), "label")
+            .agg(F.count(F.lit(1)).alias("cnt"))
+            .groupBy("node")
             .agg(
                 F.min(
                     F.struct(
@@ -144,7 +151,6 @@ def lpa_labels(edges: DataFrame, rounds: int) -> DataFrame:
                 ).alias("win")
             )
             .select("node", F.col("win.label").alias("label"))
-            .localCheckpoint(eager=False)
         )
     return labels
 

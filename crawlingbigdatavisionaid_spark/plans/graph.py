@@ -325,8 +325,13 @@ def _trade_edges(
     REVERSED at 117 M (198.1 s): the win is the clustering + sortedness
     of the materialized table, not partition count — the static
     per-round plans are identical (LogicalRDD partitioning is not
-    consumed by this join shape). At cluster scale the same layout is
-    the bucketed sorted edge table ``sources/storage.write_bucketed``.
+    consumed by this join shape). So the key repartition leaves the
+    count to AQE, which coalesces it to the data: a pinned
+    ``spark.sql.shuffle.partitions`` count cannot be coalesced and would
+    make every consuming round pay that many map tasks (32 tasks for
+    ~3k edges at the 0.001 scale factor). At cluster scale the same
+    layout is the bucketed sorted edge table
+    ``sources/storage.write_bucketed``.
     """
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     ocols = ["o_orderkey", "o_custkey"] + (["o_orderdate"] if dated else [])
@@ -343,9 +348,7 @@ def _trade_edges(
     )
     return (
         e.unionByName(e.select(*back))
-        .repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions")), "src"
-        )
+        .repartition("src")
         .sortWithinPartitions("src")
         .localCheckpoint(eager=False)
     )
@@ -523,15 +526,15 @@ def hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialized key-clustered + sorted on their respective keys
     # (the graph_ab.py variant-C result applied to both keys: equal
     # keys in sorted runs make each half-round's shuffle compress and
-    # its sort near-free)
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    # its sort near-free). The partition count is left to AQE, as in
+    # _trade_edges: a pinned count could not be coalesced.
     pairs_c = (
-        pairs.repartition(n_shuffle, "c")
+        pairs.repartition("c")
         .sortWithinPartitions("c")
         .localCheckpoint(eager=False)
     )
     pairs_s = (
-        pairs.repartition(n_shuffle, "s")
+        pairs.repartition("s")
         .sortWithinPartitions("s")
         .localCheckpoint(eager=False)
     )
@@ -674,10 +677,9 @@ def cheapest_trade_path(spark: SparkSession, sf_dir: str) -> DataFrame:
         # key-clustered + sorted materialization — same layout as
         # _trade_edges (see its docstring for the graph_ab.py variant
         # breakdown); built inline only because the WEIGHTED edge table
-        # needs the per-pair MIN(w) aggregate the shared helper lacks
-        .repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions")), "src"
-        )
+        # needs the per-pair MIN(w) aggregate the shared helper lacks;
+        # AQE sizes the partition count, as there
+        .repartition("src")
         .sortWithinPartitions("src")
         .localCheckpoint(eager=False)
     )
@@ -763,11 +765,13 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
 
     Plan shape per round: one keyed join frontier×edges, one hash
     aggregate to (node,label) vote counts (map-side combinable), one
-    struct-min argmax aggregate — NO per-node window at any scale. The
-    edge table is built once, key-clustered + sorted (the graph_ab.py
-    layout), and each round's label table is lazily checkpointed: it
-    feeds the next round's join, and an uncheckpointed 4-round
-    composition re-expands the vote subtree per reference."""
+    struct-min argmax aggregate — NO per-node window at any scale; round
+    1 needs no join (every node votes its own id, so its votes are the
+    edge rows). The edge table is built once, key-clustered + sorted
+    (the graph_ab.py layout, partition count sized by AQE). No round is
+    checkpointed: each reads the previous label table once, so the
+    4-round composition is one linear plan, built without running a job
+    and executed as one query."""
     edges = _trade_edges(spark, sf_dir)
     from ..operators.graph import lpa_labels
 

@@ -8,7 +8,8 @@ from collections import Counter, defaultdict
 
 from pyspark.sql import functions as F
 
-from crawlingbigdatavisionaid_spark.plans import registry
+from crawlingbigdatavisionaid_spark.operators.graph import lpa_labels
+from crawlingbigdatavisionaid_spark.plans import graph as G, registry
 from crawlingbigdatavisionaid_spark.sources import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -63,6 +64,58 @@ def test_lpa_matches_python_replica(spark):
         for r in _q("label_propagation_communities")(spark, SF).collect()
     ]
     assert got == want
+
+
+def _lpa_python(edges, rounds):
+    """One vote per edge ROW; a node keeps a label only once it has
+    received a vote, so a source-only node votes in round 1 alone."""
+    label = {s: s for s, _ in edges}
+    for _ in range(rounds):
+        votes = defaultdict(Counter)
+        for s, d in edges:
+            if s in label:
+                votes[d][label[s]] += 1
+        label = {
+            n: min(c.items(), key=lambda kv: (-kv[1], kv[0]))[0]
+            for n, c in votes.items()
+        }
+    return label
+
+
+def test_lpa_first_round_counts_edge_rows(spark):
+    # x gets two votes from the duplicated b->x edge and one from a: the
+    # duplicate decides round 1 (deduplicated, the tie would go to a);
+    # z is only ever a source
+    edges = [
+        ("b", "x"), ("b", "x"), ("a", "x"), ("x", "a"), ("x", "b"),
+        ("z", "a"), ("a", "b"), ("b", "a"), ("z", "y"), ("y", "x"),
+    ]
+    df = spark.createDataFrame(edges, "src string, dst string")
+    assert _lpa_python(edges, 1)["x"] == "b"
+    for rounds in (1, 2, 3):
+        got = {r["node"]: r["label"] for r in lpa_labels(df, rounds).collect()}
+        assert got == _lpa_python(edges, rounds), rounds
+
+
+def test_trade_edge_layout_partitions_are_sized_by_aqe(spark):
+    # a pinned shuffle.partitions count cannot be coalesced, so every
+    # round over the edges would pay that many map tasks
+    edges = G._trade_edges(spark, SF)
+    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert edges.rdd.getNumPartitions() < n_shuffle
+
+
+def test_lpa_builds_without_jobs(spark):
+    # every round reads the previous label table once, so the rounds
+    # compose into one plan: building it over materialized edges starts
+    # no Spark job
+    edges = G._trade_edges(spark, SF)
+    edges.count()
+    tracker = spark.sparkContext.statusTracker()
+    before = tracker.getJobIdsForGroup(None)
+    lpa_labels(edges, 4).explain()
+    after = tracker.getJobIdsForGroup(None)
+    assert list(before) == list(after)
 
 
 def _kcore_python(adj, k, rounds):
