@@ -255,6 +255,9 @@ FAMILIES: dict[str, list[str]] = {
 }
 
 HEADLINE = [n for fam in FAMILIES.values() for n in fam]
+DETAIL_PATH = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "bench_detail.json"
+)
 
 
 # SF1 section: the join/agg queries re-run on a ~10x replica of the
@@ -436,6 +439,26 @@ def _spawn(family: str, sf_dir: str, mem: str) -> dict:
     }
 
 
+def summary(detail: dict) -> dict:
+    """The short last stdout line of a bench run: totals, plus the cold
+    and warm per-query seconds (rounded to ms) that the per-query PERF
+    comparison reads, and a pointer to the full detail file."""
+    return {
+        "metric": "headline_query_wall_seconds",
+        "value": detail["value"],
+        "unit": "sec",
+        "warm_total": detail["warm_total"],
+        "sf1_total": detail.get("sf1_total"),
+        "n_queries": len(detail["queries"]),
+        "sf": detail["sf"],
+        "queries": {q: round(s, 3) for q, s in detail["queries"].items()},
+        "queries_warm": {
+            q: round(s, 3) for q, s in detail["queries_warm"].items()
+        },
+        "detail": "bench_detail.json",
+    }
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -490,28 +513,11 @@ def main() -> None:
     }
     # full per-query breakdown first (and persisted to a file): a tail
     # capture of stdout can truncate one long JSON line, so the LAST line
-    # is a short, always-parsable summary pointing at the detail file
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "bench_detail.json"
-    )
-    with open(detail_path, "w") as f:
+    # is the shorter summary, per-query seconds included
+    with open(DETAIL_PATH, "w") as f:
         json.dump(detail, f, indent=1)
     print(json.dumps(detail))
-    print(
-        json.dumps(
-            {
-                "metric": "headline_query_wall_seconds",
-                "value": total,
-                "unit": "sec",
-                "warm_total": detail["warm_total"],
-                "sf1_total": detail.get("sf1_total"),
-                "n_queries": len(timings),
-                "sf": float(sf),
-                "detail": "bench_detail.json",
-            }
-        )
-    )
-
+    print(json.dumps(summary(detail)))
 
 if __name__ == "__main__":
     main()

@@ -23,8 +23,8 @@ Layout
                   vector math (cosine/dot via built-in higher-order
                   functions), JSON props extraction.
 - ``extraction``  The crawl-side HTML field-extraction pipeline
-                  (``crawl.py:42-111``) as Arrow-vectorized pandas UDFs over
-                  stdlib html.parser (no network in tests).
+                  (``crawl.py:42-111``) as Arrow UDFs over stdlib
+                  html.parser (no network in tests).
 - ``streaming``   Structured Streaming forms of the batch operators:
                   micro-batch ingestion (``crawl.py:155-162`` →
                   ``trigger(availableNow=True)``), watermarked windowed

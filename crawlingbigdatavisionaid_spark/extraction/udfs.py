@@ -1,18 +1,21 @@
-"""Spark boundary for HTML extraction: Arrow-vectorized pandas UDFs over
-the plain-Python cascade helpers in ``html.py``, plus the permissive
-publish-date parser (OP-FLT-02) as a built-in ``try_to_timestamp``
-coalesce cascade (no Python).
+"""Spark boundary for HTML extraction: Arrow UDFs over the plain-Python
+cascade helpers in ``html.py``, plus the permissive publish-date parser
+(OP-FLT-02) as a built-in ``try_to_timestamp`` coalesce cascade (no
+Python).
 
-Error isolation (OP-STR-02): the UDFs return null for rows that fail to
-parse instead of failing the task — downstream filters drop them, the
-batch proceeds (the reference's try/except-continue, declaratively).
+Error isolation (OP-STR-02): a page that fails to parse yields NULL
+instead of failing the task — downstream filters drop it, the batch
+proceeds (the reference's try/except-continue, declaratively).
+:func:`links_or_none` and :func:`article_or_nulls` hold that rule once;
+the UDFs here and the crawl round's fetch pass
+(``crawl/pipeline.py``) both apply it.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import (
     ArrayType,
     StringType,
@@ -29,28 +32,44 @@ _ARTICLE_SCHEMA = StructType(
         StructField("published_at", StringType()),
     ]
 )
+_NULL_ARTICLE = {"title": None, "content": None, "published_at": None}
 
 
-@pandas_udf(ArrayType(StringType()))
-def links_udf(html: pd.Series, base_url: pd.Series) -> pd.Series:
-    def one(h, b):
-        try:
-            return H.extract_links(h, b)
-        except Exception:  # noqa: BLE001 — per-item isolation (OP-STR-02)
-            return None
+def links_or_none(html: str | None, base_url: str | None) -> list[str] | None:
+    """A listing page's links, or None if it has no HTML or fails to parse."""
+    if html is None:
+        return None
+    try:
+        return H.extract_links(html, base_url)
+    except Exception:  # noqa: BLE001 — per-item isolation (OP-STR-02)
+        return None
 
-    return pd.Series([one(h, b) for h, b in zip(html, base_url)])
+
+def article_or_nulls(html: str | None) -> dict:
+    """An article page's fields; all NULL if it fails to parse."""
+    try:
+        return H.extract_article(html)
+    except Exception:  # noqa: BLE001 — per-item isolation (OP-STR-02)
+        return dict(_NULL_ARTICLE)
 
 
-@pandas_udf(_ARTICLE_SCHEMA)
-def article_udf(html: pd.Series) -> pd.DataFrame:
-    rows = []
-    for h in html:
-        try:
-            rows.append(H.extract_article(h))
-        except Exception:  # noqa: BLE001
-            rows.append({"title": None, "content": None, "published_at": None})
-    return pd.DataFrame(rows)
+@arrow_udf(ArrayType(StringType()))
+def links_udf(html: pa.Array, base_url: pa.Array) -> pa.Array:
+    return pa.array(
+        [
+            links_or_none(h, b)
+            for h, b in zip(html.to_pylist(), base_url.to_pylist())
+        ],
+        type=pa.list_(pa.string()),
+    )
+
+
+@arrow_udf(_ARTICLE_SCHEMA)
+def article_udf(html: pa.Array) -> pa.Array:
+    return pa.array(
+        [article_or_nulls(h) for h in html.to_pylist()],
+        type=pa.struct([(f.name, pa.string()) for f in _ARTICLE_SCHEMA]),
+    )
 
 
 # Fixed permissive-parse format list (the declarative form of the
@@ -127,8 +146,10 @@ def extract_articles(
 ) -> DataFrame:
     """Join discovered URLs to fetched article pages and extract fields.
 
-    ``article_pages`` is (url, html) — the fetch stage's output (stubbed
-    in tests; at scale a mapPartitions HTTP stage or a WARC read).
+    ``article_pages`` is (url, html) — fixture pages or a ``crawlpages``
+    scan here, a WARC read at scale. The live crawl round does not join:
+    its fetch pass extracts each page as it fetches it
+    (``crawl/pipeline.py``).
     """
     fields = article_pages.select(
         "url", article_udf(F.col("html")).alias("a")

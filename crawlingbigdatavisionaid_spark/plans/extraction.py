@@ -55,8 +55,8 @@ def _values_literal(rows, width: int) -> str:
 )
 def html_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Listing cascade -> link explode -> within-batch URL dedup ->
-    article-field extraction, all via Arrow-batched pandas UDFs over the
-    stdlib mini-DOM. Fixtures cover: article-tag priority, div.post
+    article-field extraction, all via Arrow UDFs over the stdlib
+    mini-DOM. Fixtures cover: article-tag priority, div.post
     tier, fuzzy class fallback, linkless-block skip, relative-URL join,
     h1/title/default cascade, empty-<p> drop, all five date sources."""
     return _extracted(spark)

@@ -384,7 +384,8 @@ def crawl_frontier_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     exclusive running count) runs as a chunked prefix sum
     (operators/prefix.py) so a mega-domain's slot assignment doesn't
     serialize one window task at 100 TB — its FETCHES are still
-    serialized by design (that's politeness, crawl/pipeline.
+    serialized by design (that's politeness: crawl/pipeline's fetch
+    pass gives each domain one thread that fetches serially, see
     scheduled_fetch_stage), but computing the schedule shouldn't be."""
     from ..operators.prefix import chunked_cumsum
 

@@ -34,6 +34,7 @@ the anti-join shuffle-light; AQE broadcasts the (tiny) batch side.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from .maintenance import append_guard, append_mutex
 
@@ -75,8 +76,9 @@ def merge_append(
 
     - within-batch duplicates on ``key`` collapse to one row first;
     - rows whose key already exists in the store are dropped
-      (left-anti join on the key column only — the store scan prunes
-      to that single column);
+      (left-anti join on the key column only — the store is read with
+      a one-column schema taken from ``batch``, so the scan prunes to
+      that column and no schema-inference job runs);
     - the read -> anti-join -> append sequence runs under
       :func:`~..sources.maintenance.append_guard`, because a row
       appended inside a concurrent compaction's read..swap window would
@@ -108,9 +110,9 @@ def merge_append(
     with append_mutex(store_path), append_guard(store_path):
         fresh = staged
         if store_has_data(spark, store_path):
-            fresh = fresh.join(
-                spark.read.parquet(store_path).select(key), key, "left_anti"
-            )
+            # only the key column, with its schema passed: no inference job
+            keys = spark.read.schema(StructType([staged.schema[key]]))
+            fresh = fresh.join(keys.parquet(store_path), key, "left_anti")
         fresh = fresh.cache()
         try:
             n = fresh.count()

@@ -1,5 +1,5 @@
 """Spark 4 Python Data Source API: the crawl fetch stage as a
-FIRST-CLASS source instead of mapInPandas glue.
+FIRST-CLASS source instead of a ``mapInArrow`` pass.
 
 ``spark.read.format("crawlpages")`` covers OP-SRC-01/02 (the reference's
 ``requests.get`` listing/article fetches, crawl.py:32-36,78): each seed

@@ -153,3 +153,89 @@ def test_crawl_batch_all_failed_first_round_reports_zero(spark, tmp_path):
         store,
     )
     assert out == {"new_rows": 0, "store_rows": 0}
+
+
+def _logging_fetcher(pages: dict[str, str], log_path: str, sleep_s: float):
+    """A :class:`DictFetcher` that appends ``url start end`` per request
+    to a log file. The fetcher runs on threads of Python worker
+    processes, so the log is a file, written with one O_APPEND ``write``
+    per line (atomic for lines this short). A closure, so it pickles by
+    value into the workers."""
+    import os
+    import time
+
+    inner = DictFetcher(pages)
+
+    def fetch(url: str) -> str | None:
+        t0 = time.time()
+        time.sleep(sleep_s)
+        html = inner(url)
+        line = f"{url} {t0!r} {time.time()!r}\n".encode()
+        fd = os.open(log_path, os.O_WRONLY | os.O_CREAT | os.O_APPEND)
+        try:
+            os.write(fd, line)
+        finally:
+            os.close(fd)
+        return html
+
+    return fetch
+
+
+def test_crawl_fetches_each_url_once_and_domains_concurrently(spark, store, tmp_path):
+    """One GET per URL (the listing and article passes fetch each
+    discovered URL exactly once — no join re-reads a page), no two
+    requests to one domain in flight together (politeness), and
+    distinct domains fetched concurrently."""
+    from collections import Counter
+    from urllib.parse import urlparse
+
+    domains = [f"d{d}.example" for d in range(4)]
+    pages, seeds = {}, []
+    for dom in domains:
+        base = f"https://{dom}/"
+        seeds.append((dom, base))
+        links = "".join(
+            f'<article><a href="/a/{i}">post {i}</a></article>' for i in range(3)
+        )
+        pages[base] = f"<html><body>{links}</body></html>"
+        for i in range(3):
+            pages[f"{base}a/{i}"] = (
+                f"<html><body><h1>{dom} {i}</h1><p>text {i}</p></body></html>"
+            )
+    log = str(tmp_path / "fetch.log")
+    stats = crawl_batch(spark, seeds, _logging_fetcher(pages, log, 0.02), store)
+    assert stats == {"new_rows": 12, "store_rows": 12}
+
+    with open(log) as fh:
+        reqs = [(u, float(a), float(b)) for u, a, b in (ln.split() for ln in fh)]
+    counts = Counter(u for u, _, _ in reqs)
+    stored = {r.url for r in read_store(spark, store).collect()}
+    assert set(counts) == stored | {b for _, b in seeds}
+    assert all(n == 1 for n in counts.values()), counts
+
+    by_domain: dict[str, list] = {}
+    for u, a, b in reqs:
+        by_domain.setdefault(urlparse(u).netloc, []).append((a, b))
+    for dom, spans in by_domain.items():
+        spans.sort()
+        for (_, end), (start, _) in zip(spans, spans[1:]):
+            assert start >= end, (dom, spans)
+    cross = [
+        (x, y)
+        for x in reqs
+        for y in reqs
+        if urlparse(x[0]).netloc < urlparse(y[0]).netloc
+        and x[1] < y[2]
+        and y[1] < x[2]
+    ]
+    assert cross, "no two domains were ever fetched concurrently"
+
+
+def test_read_store_starts_no_job(spark, store):
+    """The store's schema is the constant STORE_SCHEMA, so building a
+    read of a non-empty store must not start a schema-inference job."""
+    crawl_batch(spark, SEEDS, DictFetcher(PAGES), store)
+    tracker = spark.sparkContext.statusTracker()
+    before = tracker.getJobIdsForGroup(None)
+    read_store(spark, store)
+    assert list(tracker.getJobIdsForGroup(None)) == list(before)

@@ -554,12 +554,18 @@ def test_training_shard_manifest_no_unpartitioned_window(spark, sf_dir):
 
 @pytest.mark.parametrize(
     "module",
-    ["operators.similarity", "multimodal.binary", "operators.perceptual"],
+    [
+        "operators.similarity",
+        "multimodal.binary",
+        "operators.perceptual",
+        "crawl.pipeline",
+        "extraction.udfs",
+    ],
 )
 def test_python_kernels_have_one_arrow_boundary(module):
-    """The vector, media-decode and perceptual-hash kernels cross to
-    Python only as Arrow (mapInArrow, applyInArrow, arrow_udf): no
-    pandas path may come back beside it."""
+    """The vector, media-decode, perceptual-hash, crawl-fetch and HTML
+    extraction kernels cross to Python only as Arrow (mapInArrow,
+    applyInArrow, arrow_udf): no pandas path may come back beside it."""
     import importlib
     import inspect
 
