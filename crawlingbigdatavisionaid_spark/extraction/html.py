@@ -18,8 +18,8 @@ Reference behaviors reproduced (by observation, not by code copy):
   ``meta[property=article:published_time]`` → ``meta[name=pubdate]`` →
   ``meta[name=date]`` → None (``crawl.py:88-100``).
 
-These are plain-Python helpers; the Spark boundary (Arrow-batched pandas
-UDFs) lives in ``udfs.py``.
+These are plain-Python helpers; the Spark boundary (``arrow_udf``
+column kernels) lives in ``udfs.py``.
 """
 
 from __future__ import annotations

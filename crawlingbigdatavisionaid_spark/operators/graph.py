@@ -126,8 +126,9 @@ def lpa_labels(edges: DataFrame, rounds: int) -> DataFrame:
     aggregate — no per-node window. Every round reads the previous
     label table exactly once, so the composed plan stays linear and is
     built without running a job. Callers materialize the edge layout
-    (plans/graph.py uses the key-clustered sorted form the graph_ab.py
-    A/B adopted)."""
+    (plans/graph.py uses the key-clustered sorted form the edge-layout
+    A/B adopted; PLANS.md Notes, "Graph-tier Pregel edge-layout A/B
+    CLOSED")."""
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
     labels = None

@@ -35,26 +35,6 @@ from pyspark.sql.window import Window
 from ..functions.bounded import bounded_single_partition
 
 
-def local_skyline_superset(df: DataFrame, x: str, y: str, key: str) -> DataFrame:
-    """Per-Arrow-batch superset pass: sort by (x desc, y desc, key),
-    keep rows whose y >= the running max of strictly-earlier rows.
-    Every true skyline member survives (an earlier row in this order
-    that dominated it would have higher y); dominated stragglers may
-    survive and die in the exact resolver.  Kept for the streaming
-    fold's pre-shrink and for tests — :func:`exact_skyline` no longer
-    needs a candidate pass."""
-
-    def part(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.sort_values([x, y, key], ascending=[False, False, True])
-            best_before = pdf[y].cummax().shift(1)
-            yield pdf[best_before.isna() | (pdf[y] >= best_before)]
-
-    return df.mapInPandas(part, df.schema)
-
-
 def exact_skyline(df: DataFrame, x: str, y: str, key: str) -> DataFrame:
     """Exact skyline of ``df`` (x, y non-null): relational sweep, see
     module docstring.  Ties keep every non-dominated row — two rows at
@@ -103,19 +83,3 @@ def exact_skyline(df: DataFrame, x: str, y: str, key: str) -> DataFrame:
         .drop("_x", "_ymax")
     )
 
-
-def exact_skyline_bnl(df: DataFrame, x: str, y: str, key: str) -> DataFrame:
-    """PARITY TWIN (tests only): the textbook two-phase form — local
-    superset pass, then one pairwise dominance anti-join over the
-    broadcast candidate set.  The simplest possible statement of the
-    semantics, but the broadcast is bounded by the frontier size, which
-    an anti-correlated input makes O(n) — the reason the registered
-    form above is the sweep."""
-    cand = local_skyline_superset(df, x, y, key).localCheckpoint(eager=False)
-    other = cand.select(F.col(x).alias("_x"), F.col(y).alias("_y"))
-    dominated = (
-        (F.col("_x") >= F.col(x))
-        & (F.col("_y") >= F.col(y))
-        & ((F.col("_x") > F.col(x)) | (F.col("_y") > F.col(y)))
-    )
-    return cand.join(F.broadcast(other), dominated, "left_anti")

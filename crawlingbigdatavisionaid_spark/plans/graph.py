@@ -69,13 +69,15 @@ def _sim_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sim_edges_allpairs_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PARITY TWIN of :func:`_sim_edges` (not registered): the
     closure-matrix all-pairs builder — corpus collected to the driver,
-    N×64 matrix shipped into a ``mapInPandas`` closure, one
-    (B,d)@(d,N) matmul per partition. Kept because its float path is
+    N×64 matrix shipped into a ``mapInArrow`` closure, one
+    (B,d)@(d,N) matmul per Arrow batch. Kept because its float path is
     the simplest possible statement of the semantics (and the oracle's
     all-pairs SQL mirrors it); bounded by driver memory, so it is
     test/verification machinery only."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+
+    from ..operators.similarity import _PAIRS_SCHEMA, _arrow_ids, _arrow_mat
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     rows = emb.collect()
@@ -85,19 +87,22 @@ def _sim_edges_allpairs_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = float(_SIM_T)
 
     def part(it):
-        for pdf in it:
-            if len(pdf) == 0:
+        for b in it:
+            if b.num_rows == 0:
                 continue
-            u = pdf["vec_id"].to_numpy()
-            c = np.array([list(v) for v in pdf["embedding"]], dtype=np.float64)
-            c /= np.linalg.norm(c, axis=1, keepdims=True)
+            u = _arrow_ids(b.column("vec_id"))
+            c = _arrow_mat(b.column("embedding"))
+            # not in place: _arrow_mat's matrix is a read-only Arrow view
+            c = c / np.linalg.norm(c, axis=1, keepdims=True)
             sims = c @ m.T
             bi, bj = np.nonzero(sims >= t)
             uu, vv = u[bi], ids[bj]
             keep = uu < vv
-            yield pd.DataFrame({"u": uu[keep], "v": vv[keep]})
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(uu[keep]), pa.array(vv[keep])], schema=_PAIRS_SCHEMA
+            )
 
-    return emb.mapInPandas(part, "u long, v long")
+    return emb.mapInArrow(part, "u long, v long")
 
 
 _TRI_ORACLE = f"""
@@ -316,8 +321,9 @@ def _trade_edges(
     ONE place (r10 advice: three verbatim copies had started to drift).
 
     The layout: key-clustered AND sorted by the join key (the
-    bucketed-table form, judge r9 #5 measured via ``tools/graph_ab.py``
-    at 11.7 M / 117 M edges). Equal keys co-located in runs make every
+    bucketed-table form, judge r9 #5; the edge-layout A/B at 11.7 M /
+    117 M edges is in PLANS.md Notes, "Graph-tier Pregel edge-layout
+    A/B CLOSED"). Equal keys co-located in runs make every
     round's shuffle write compress and its SMJ sort near-free — BFS
     17.8 → 9.5 s at 11.7 M, 156.4 → 76.2 s at 117 M (2.05×), results
     bit-identical. Round-robin repartition alone measured WORSE than
@@ -524,10 +530,11 @@ def hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     # HITS alternates join keys (c for the authority step, s for the
     # hub step), so the Pregel edge layout is BOTH orientations
     # materialized key-clustered + sorted on their respective keys
-    # (the graph_ab.py variant-C result applied to both keys: equal
-    # keys in sorted runs make each half-round's shuffle compress and
-    # its sort near-free). The partition count is left to AQE, as in
-    # _trade_edges: a pinned count could not be coalesced.
+    # (the edge-layout A/B's variant C, PLANS.md Notes, applied to
+    # both keys: equal keys in sorted runs make each half-round's
+    # shuffle compress and its sort near-free). The partition count is
+    # left to AQE, as in _trade_edges: a pinned count could not be
+    # coalesced.
     pairs_c = (
         pairs.repartition("c")
         .sortWithinPartitions("c")
@@ -675,9 +682,10 @@ def cheapest_trade_path(spark: SparkSession, sf_dir: str) -> DataFrame:
             w.select(F.col("s").alias("src"), F.col("c").alias("dst"), "w")
         )
         # key-clustered + sorted materialization — same layout as
-        # _trade_edges (see its docstring for the graph_ab.py variant
-        # breakdown); built inline only because the WEIGHTED edge table
-        # needs the per-pair MIN(w) aggregate the shared helper lacks;
+        # _trade_edges (see its docstring for the edge-layout A/B
+        # variant breakdown); built inline only because the WEIGHTED
+        # edge table needs the per-pair MIN(w) aggregate the shared
+        # helper lacks;
         # AQE sizes the partition count, as there
         .repartition("src")
         .sortWithinPartitions("src")
@@ -768,8 +776,8 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     struct-min argmax aggregate — NO per-node window at any scale; round
     1 needs no join (every node votes its own id, so its votes are the
     edge rows). The edge table is built once, key-clustered + sorted
-    (the graph_ab.py layout, partition count sized by AQE). No round is
-    checkpointed: each reads the previous label table once, so the
+    (the edge-layout A/B's winner, partition count sized by AQE). No
+    round is checkpointed: each reads the previous label table once, so the
     4-round composition is one linear plan, built without running a job
     and executed as one query."""
     edges = _trade_edges(spark, sf_dir)

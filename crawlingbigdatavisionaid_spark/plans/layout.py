@@ -8,8 +8,9 @@ unpartitioned store reads everything; Hive partitioning prunes whole
 directories before I/O, and Z-ordering the rows WITHIN files makes
 parquet row-group min/max stats selective on BOTH filter columns at
 once (a single-column sort makes stats tight on that column and useless
-on every other). ``tools/zorder_ab.py`` measures the row-group-level
-effect; these queries pin the semantics cross-engine.
+on every other). The row-group-level effect was measured by a Z-order
+layout A/B (PLANS.md Notes, "Z-order layout A/B"); these queries pin
+the semantics cross-engine.
 """
 
 from __future__ import annotations
@@ -152,8 +153,8 @@ def zorder_bucket_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-dimensional data layout (Delta/Iceberg OPTIMIZE ZORDER): sort
     by this value and rows close in BOTH user and time land in the same
     row groups, so parquet min/max stats prune 2-D box predicates
-    (``tools/zorder_ab.py`` measures exactly that effect; this query
-    pins the curve itself cross-engine).
+    (PLANS.md Notes, "Z-order layout A/B", records that measured
+    effect; this query pins the curve itself cross-engine).
 
     The interleave is pure integer bit arithmetic — 16 bits of each
     dimension woven into a 32-bit code via shift/mask/add over disjoint

@@ -38,16 +38,14 @@ _DEC = "decimal(18,2)"
         GROUP BY ROLLUP(r.r_name, n.n_name)
     """,
 )
-def revenue_rollup_region_nation(
-    spark: SparkSession, sf_dir: str, *, _hint_dims: bool = False
-) -> DataFrame:
+def revenue_rollup_region_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP region → nation → grand total in ONE pass: Catalyst Expand
     emits each input row once per grouping level into a single hash
     aggregate — no three separate scans at 100 TB.
 
-    ``_hint_dims`` is for tools/olap_ab.py ONLY (forces the static hint
-    for the A/B); the registered query uses the statistics-driven hint
-    below instead."""
+    The dims join uses the statistics-driven hint below, not a static
+    one; the A/B behind that choice is in PLANS.md Notes, "r5 sf1 OLAP
+    regression CLOSED"."""
     r = load_table(spark, sf_dir, "region")
     n = load_table(spark, sf_dir, "nation")
     c = load_table(spark, sf_dir, "customer")
@@ -64,12 +62,9 @@ def revenue_rollup_region_nation(
     # 2.75x slower at 10x — r6 A/B, PLANS.md). The statistics-driven hint
     # broadcasts dims exactly when its source tables' bytes prove it
     # small, and vanishes at scale (sources/tables.broadcast_if_small).
-    if _hint_dims:
-        dims = F.broadcast(dims)
-    else:
-        dims = broadcast_if_small(
-            dims, spark, sf_dir, ("customer", "nation", "region")
-        )
+    dims = broadcast_if_small(
+        dims, spark, sf_dir, ("customer", "nation", "region")
+    )
     joined = o.join(dims, o.o_custkey == dims.c_custkey)
     return (
         joined.rollup("region", "nation")
@@ -1029,21 +1024,20 @@ def pareto_frontier_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     (o_totalprice, o_orderdate) — the 'latest AND most valuable' Pareto
     frontier no single ORDER BY can express.
 
-    Distributed shape — local-skyline-then-merge, exploiting that the
-    skyline operator is DISTRIBUTIVE over any partitioning: skyline(S) ⊆
-    ∪ᵢ skyline(partitionᵢ), so (1) an Arrow ``mapInPandas`` pass
-    computes a per-partition candidate set with a vectorized
-    sort + cummax SUPERSET rule (keep a row iff its date >= the max date
-    of any strictly-earlier row in (price desc, date desc) order — every
-    true skyline member survives, dominated stragglers may), then (2)
-    the union — for orders-like distributions O(log² n) per partition —
-    is resolved EXACTLY by one dominance anti-join (broadcast nested
-    loop over the tiny candidate set; the predicate is the textbook
-    dominance test, so step-1 false positives die here). Output size is
-    data-dependent: an adversarially anti-correlated table has an O(n)
-    skyline, in which case the result itself — not this plan — is the
-    scale problem. No floats are computed, only compared: values pass
-    through both engines untouched."""
+    Distributed shape — the relational sweep of
+    :func:`operators.skyline.exact_skyline`, with no broadcast and no
+    pairwise dominance join: for 2-D max-max, a row is on the frontier
+    iff its date is the max date at its price AND exceeds the max date
+    of every strictly higher price. So (1) one map-side-combined
+    aggregate takes the max date per distinct price, (2) an exclusive
+    running max over the prices, descending, runs per range partition
+    plus a |partitions|-row offsets table, and (3) one equi-join on
+    price keeps the frontier rows, ties at the same (price, date)
+    included. Every task is bounded, whatever the frontier size. Output
+    size is data-dependent: an adversarially anti-correlated table has
+    an O(n) skyline, in which case the result itself — not this plan —
+    is the scale problem. No floats are computed, only compared: values
+    pass through both engines untouched."""
     from ..operators.skyline import exact_skyline
 
     pts = load_table(spark, sf_dir, "orders").select(

@@ -807,7 +807,6 @@ def ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         # so probe(k) is EXACTLY the rank <= k prefix of probe(8k) —
         # same rows, same ranks (pinned by tests/test_neardup_similarity
         # .py::test_ivfpq_probe_prefix_property).
-        # The old shape ran the ADC mapInPandas + collects twice.
         shortlist_full = S.ivfpq_probe_index(
             queries, cent_df, books_df, coded, k=k * 8, nprobe=nprobe
         ).localCheckpoint(eager=False)

@@ -18,6 +18,12 @@ analogues a curation pipeline runs alongside.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from numpy.lib.stride_tricks import sliding_window_view
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..sources import load_table
@@ -477,6 +483,7 @@ _WIN_K = 8
 _WIN_W = 4
 _WIN_DF = 5
 _WIN_SHARED = 5
+_FP_SCHEMA = pa.schema([("doc_id", pa.int64()), ("fp", pa.int64())])
 
 
 @register(
@@ -534,7 +541,7 @@ def winnow_fingerprint_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly — pairs are hash-checked, not recall-bounded.
 
     Scale shape: per-doc fingerprinting is one Arrow-batched numpy
-    ``mapInPandas`` pass (:func:`winnow_doc_fps`: O(len * k) vectorized
+    ``mapInArrow`` pass (:func:`winnow_doc_fps`: O(len * k) vectorized
     hash folds, ~w-fold fewer fingerprints than k-grams — the density
     guarantee); the pair stage is the standard inverted index with the
     rarity df cap (fingerprints shared by more than 5 docs are
@@ -584,16 +591,14 @@ def winnow_doc_fps(
     # global min; otherwise every width-w window's min. The normalized
     # string is pure [a-z0-9] by construction, so bytes == the old
     # ascii() codepoints.
-    import numpy as np
-    import pandas as pd
-    from numpy.lib.stride_tricks import sliding_window_view
-
     k_, w_, p_ = int(kgram), int(win), int(_P)
 
-    def _fps(it):
-        for pdf in it:
+    def _fps(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in it:
             ids, fps = [], []
-            for doc_id, txt in zip(pdf["doc_id"], pdf["s"]):
+            for doc_id, txt in zip(
+                b.column("doc_id").to_pylist(), b.column("s").to_pylist()
+            ):
                 if txt is None:  # NULL text: no fingerprints
                     continue
                 codes = np.frombuffer(
@@ -612,13 +617,12 @@ def winnow_doc_fps(
                     u = np.unique(sliding_window_view(h, w_).min(axis=1))
                 ids.append(np.full(u.shape[0], doc_id, dtype=np.int64))
                 fps.append(u)
-            yield pd.DataFrame(
-                {
-                    "doc_id": np.concatenate(ids) if ids else
-                    np.array([], dtype=np.int64),
-                    "fp": np.concatenate(fps) if fps else
-                    np.array([], dtype=np.int64),
-                }
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(np.concatenate(c) if c else [], type=pa.int64())
+                    for c in (ids, fps)
+                ],
+                schema=_FP_SCHEMA,
             )
 
     # checkpointed: the fingerprinting pass feeds the df-cap aggregate,
@@ -626,7 +630,7 @@ def winnow_doc_fps(
     # one materialization instead of four passes (the dedup.py
     # shingle_rows precedent). The explicit 2-column select before the
     # Python boundary keeps scan pruning intact (guide §4.1).
-    fp = docs.select("doc_id", s.alias("s")).mapInPandas(
+    fp = docs.select("doc_id", s.alias("s")).mapInArrow(
         _fps, "doc_id long, fp long"
     )
     if materialize:  # False only for plan inspection in tests
@@ -995,6 +999,44 @@ def _char_bigram_stream(docs: DataFrame) -> DataFrame:
     )
 
 
+_MG_SCHEMA = pa.schema([("w", pa.string()), ("c_adj", pa.int64())])
+
+
+def _mg_partial_summaries(bigrams: DataFrame) -> DataFrame:
+    """Per-partition Misra-Gries summaries of a ``w`` stream: each
+    partition emits at most ``_MG_M`` ``(w, c_adj)`` rows, and
+    SUM-merging the partials gives the mergeable summary. Every Arrow
+    batch of a partition folds into ONE running summary (a summary per
+    batch would emit m x ceil(rows/arrow_batch) rows): add the batch's
+    counts, then, past m items, let t be the (m+1)-th largest count,
+    subtract t and keep the counts still > 0. Tie order cannot change
+    the result: every count equal to t drops. NULL ``w`` is not
+    counted."""
+
+    def mg_partial(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        acc: dict[str, int] = {}
+        for b in it:
+            vc = pc.value_counts(b.column("w"))
+            for w, c in zip(
+                vc.field("values").to_pylist(), vc.field("counts").to_pylist()
+            ):
+                if w is not None:
+                    acc[w] = acc.get(w, 0) + c
+            if len(acc) > _MG_M:
+                t = sorted(acc.values(), reverse=True)[_MG_M]
+                acc = {w: c - t for w, c in acc.items() if c > t}
+        if acc:
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(list(acc), type=pa.string()),
+                    pa.array(list(acc.values()), type=pa.int64()),
+                ],
+                schema=_MG_SCHEMA,
+            )
+
+    return bigrams.mapInArrow(mg_partial, "w string, c_adj long")
+
+
 @register(
     "mg_screening_verdict",
     ops=("OP-TXT-02", "OP-AGG-05"),
@@ -1042,8 +1084,6 @@ def mg_screening_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the summary to reach for when the heavy-hitter CANDIDATE
     SET must be tiny and mergeable without fixed hash geometry (CMS
     answers point queries; MG carries its own candidates)."""
-    import pandas as pd
-
     docs = load_table(spark, sf_dir, "documents").where(
         F.col("text").isNotNull()
     )
@@ -1062,29 +1102,8 @@ def mg_screening_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_parts = spark.sparkContext.defaultParallelism
     bigrams = _char_bigram_stream(docs.repartition(n_parts))
 
-    def mg_partial(it):
-        # ONE summary per PARTITION: Arrow hands the stream over as
-        # many batches, and a summary per batch would emit
-        # m x ceil(rows/arrow_batch) rows (r8 third-review finding) —
-        # fold every batch into a running m-item summary instead
-        acc = None
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            counts = pdf["w"].value_counts()
-            acc = counts if acc is None else acc.add(counts, fill_value=0)
-            if len(acc) > _MG_M:
-                acc = acc.sort_values(ascending=False)
-                t = int(acc.iloc[_MG_M])
-                acc = acc.iloc[:_MG_M] - t
-                acc = acc[acc > 0]
-        if acc is not None and len(acc):
-            yield pd.DataFrame(
-                {"w": acc.index, "c_adj": acc.astype("int64").to_numpy()}
-            )
-
     summary = (
-        bigrams.mapInPandas(mg_partial, "w string, c_adj long")
+        _mg_partial_summaries(bigrams)
         .groupBy("w")
         .agg(F.sum("c_adj").alias("c_adj"))
     )

@@ -169,17 +169,15 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY r.r_name, n.n_name
     """,
 )
-def region_revenue(
-    spark: SparkSession, sf_dir: str, *, _hint_dims: bool = False
-) -> DataFrame:
+def region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: snowflake dimension chain into the fact join.
     nation⋈region is constant-size (25x5 rows) and keeps its broadcast
     hint; the customer-enriched dims side grows with the corpus, so it
     carries no UNCONDITIONAL hint — it gets the statistics-driven hint
     (sources/tables.broadcast_if_small) that proves it small from table
     bytes and vanishes at scale, where AQE decides at runtime. Only
-    orders⋈lineitem must shuffle. ``_hint_dims`` is for tools/olap_ab.py
-    ONLY (forces the static hint for the A/B)."""
+    orders⋈lineitem must shuffle. Why no static hint: PLANS.md Notes,
+    "r5 sf1 OLAP regression CLOSED"."""
     r = load_table(spark, sf_dir, "region")
     n = load_table(spark, sf_dir, "nation")
     c = load_table(spark, sf_dir, "customer")
@@ -192,14 +190,11 @@ def region_revenue(
         )
         .select("c_custkey", "n_name", "r_name")
     )
-    if _hint_dims:
-        dims = F.broadcast(dims)
-    else:
-        # statistics-driven hint (r6 A/B: hint-free Catalyst broadcast
-        # the ORDERS fact side here — see broadcast_if_small docstring)
-        dims = broadcast_if_small(
-            dims, spark, sf_dir, ("customer", "nation", "region")
-        )
+    # statistics-driven hint (r6 A/B: hint-free Catalyst broadcast
+    # the ORDERS fact side here — see broadcast_if_small docstring)
+    dims = broadcast_if_small(
+        dims, spark, sf_dir, ("customer", "nation", "region")
+    )
     joined = (
         o.join(dims, o.o_custkey == dims.c_custkey)
         .select("o_orderkey", "n_name", "r_name")
@@ -611,17 +606,15 @@ def q18_large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         LIMIT 20
     """,
 )
-def q21_sole_returned_supplier(
-    spark: SparkSession, sf_dir: str, *, _hint_dims: bool = False
-) -> DataFrame:
+def q21_sole_returned_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape (adapted to the synthetic schema): suppliers who
     were the ONLY supplier with a returned line on a finished multi-
     supplier order. EXISTS → left-semi self-join, NOT EXISTS → left-anti
     self-join, each with an equi key (order key) plus a non-equi conjunct
     (different supplier) — Spark shuffles on the equi key only, so the
     self-joins stay hash joins, not cross products. All three lineitem
-    scans prune to 3 columns. ``_hint_dims`` is for tools/olap_ab.py
-    ONLY; the registered query always runs hint-free on supplier."""
+    scans prune to 3 columns. The supplier join carries no hint (PLANS.md
+    Notes, "Broadcast-hint audit" and "r5 sf1 OLAP regression CLOSED")."""
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_returnflag"
     )
@@ -651,8 +644,6 @@ def q21_sole_returned_supplier(
         "left_anti",
     )
     s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    if _hint_dims:
-        s = F.broadcast(s)
     return (
         # supplier grows with sf — no static hint; AQE converts at runtime
         sole.join(s, sole.sk == s.s_suppkey)

@@ -10,8 +10,10 @@ target while remaining correct on local[N]:
 - ``spark.sql.shuffle.partitions`` seeds the pre-AQE plan; AQE coalesces
   down on small inputs and a real cluster would raise it (rule of thumb:
   ~2-3x total cores, partitions sized 100-200 MB post-compression).
-- Arrow enabled: every pandas UDF / mapInPandas / toPandas crosses the
-  JVM<->Python boundary in columnar Arrow batches, not pickled rows.
+- Arrow enabled for ``toPandas`` / pandas ``createDataFrame`` in
+  callers and tests. The package's own Python kernels (``mapInArrow``,
+  ``applyInArrow``, ``arrow_udf``) cross the JVM<->Python boundary as
+  columnar Arrow batches by construction, never as pickled rows.
 """
 
 from __future__ import annotations
@@ -50,23 +52,14 @@ def get_spark(app_name: str = "crawlingbigdatavisionaid-spark") -> SparkSession:
         # cost to startup (~2.5 s/GiB on this host) so query timings
         # measure the query, not the allocator. Opt-in because the
         # startup tax is wrong for short-lived test/tool sessions;
-        # bench.py and tools/scale_smoke.py set it.
-        #
-        # Caller-supplied driver JVM options (SPARK_GRAFT_EXTRA_JAVA_OPTIONS,
-        # since a plain python process has no started JVM to read
-        # spark-defaults from) go LAST: the JVM resolves duplicate flags
-        # last-wins, so a caller -Xms/-XX override actually takes effect
-        # instead of being shadowed by the pretouch defaults. Caveat:
-        # like every config here, this is a no-op when getOrCreate()
-        # reuses an already-started JVM — bench/tools always build the
-        # session first in a fresh process.
-        extra = os.environ.get("SPARK_GRAFT_EXTRA_JAVA_OPTIONS", "")
+        # bench.py and tools/scale_smoke.py set it. Like every config
+        # here, this is a no-op when getOrCreate() reuses an
+        # already-started JVM — bench/tools always build the session
+        # first in a fresh process.
         pretouch = (
             "-Xms"
             + os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
             + " -XX:+AlwaysPreTouch"
         )
-        builder = builder.config(
-            "spark.driver.extraJavaOptions", (pretouch + " " + extra).strip()
-        )
+        builder = builder.config("spark.driver.extraJavaOptions", pretouch)
     return builder.getOrCreate()

@@ -100,8 +100,9 @@ def hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def user_sessions(spark: SparkSession, sf_dir: str, gap_s: int = 1800) -> DataFrame:
-    """Custom stateful sessionization (applyInPandasWithState) drained
-    with availableNow — equals the batch lag/gap sessionization."""
+    """Custom stateful sessionization (:mod:`.stateful`'s per-user state
+    fold) drained with availableNow — equals the batch lag/gap
+    sessionization."""
     from . import stateful
 
     ev = _events_stream(spark, sf_dir)

@@ -19,6 +19,21 @@ deployment adds ``GroupStateTimeout`` to flush idle sessions and a
 watermark to bound late data. Here the final micro-batch emits the open
 session too, so draining a finite input yields exactly the batch answer
 (oracle-checkable).
+
+This is the package's one pandas boundary, kept on purpose. Every other
+Python kernel crosses as Arrow (``mapInArrow`` / ``applyInArrow`` /
+``arrow_udf``), but the pandas-free stateful API, ``transformWithState``
+(pyspark 4.1.2), keeps its state in column families, which only
+``RocksDBStateStoreProvider`` supports. Selecting it means setting
+``spark.sql.streaming.stateStore.providerClass``, a SESSION-wide
+setting: it would move every other stateful streaming query onto a new
+state store as well (``stream_dedup_count``,
+``stream_dedup_bounded_state`` and the rest), to change one operator's
+batch format. Its Python state client also imports ``protobuf``, which
+this package does not depend on: without it the query fails at start
+(``ImportError`` from ``google.protobuf``, whichever provider is set).
+``applyInPandasWithState`` runs on the default HDFS-backed store with
+no extra dependency.
 """
 
 from __future__ import annotations

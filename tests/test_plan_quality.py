@@ -6,6 +6,8 @@ on the real test data.
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 from crawlingbigdatavisionaid_spark.plans import query_map
@@ -456,8 +458,8 @@ def test_pareto_frontier_is_sweep_no_pairwise_join(spark, sf_dir):
     """r10: ``exact_skyline`` is the relational sweep — per-x max-y
     aggregate + hierarchical exclusive running max — so the plan must
     contain NO pairwise dominance join at all (no nested loop, no
-    cartesian; the r9 BNL form survives only as the ``exact_skyline_bnl``
-    test twin), and every window must be keyed (_pid for the
+    cartesian; the r9 broadcast nested-loop form is gone), and every
+    window must be keyed (_pid for the
     within-partition pass; the offsets window runs over the
     |partitions|-row totals table)."""
     plan = _plan(spark, sf_dir, "pareto_frontier_orders")
@@ -574,3 +576,34 @@ def test_python_kernels_have_one_arrow_boundary(module):
     )
     for token in ("applyInPandas", "mapInPandas", "pandas_udf", "import pandas"):
         assert token not in src, token
+
+
+def test_package_has_no_pandas_boundary():
+    """Every module of the package crosses to Python only as Arrow
+    (mapInArrow, applyInArrow, arrow_udf): no pandas path may appear in
+    any of them, docstrings and comments included. The one exemption is
+    the stateful sessionizer, which may use applyInPandasWithState (and
+    so import pandas); its module docstring says why."""
+    import importlib
+    import pkgutil
+
+    import crawlingbigdatavisionaid_spark as pkg
+
+    forbidden = ("applyInPandas", "mapInPandas", "pandas_udf", "import pandas")
+    exempt = {
+        f"{pkg.__name__}.streaming.stateful": (
+            "applyInPandasWithState",
+            "import pandas",
+        )
+    }
+    names = [pkg.__name__] + [
+        m.name for m in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + ".")
+    ]
+    assert f"{pkg.__name__}.plans.sketches" in names
+    bad = []
+    for name in names:
+        src = Path(importlib.import_module(name).__file__).read_text()
+        for allowed in exempt.get(name, ()):
+            src = src.replace(allowed, "")
+        bad += [(name, t) for t in forbidden if t in src]
+    assert not bad, bad

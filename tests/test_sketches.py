@@ -495,3 +495,59 @@ def test_char_bigram_stream_matches_positional_definition(spark):
             for i in range(len(tok) - 1):
                 want[tok[i : i + 2]] += 1
     assert got == want and got["aa"] == 3 and got["ab"] == 3
+
+
+def test_mg_partial_summaries_keep_misra_gries_contract(spark):
+    """The per-partition Misra-Gries partials behind
+    ``mg_screening_verdict``: with several Arrow batches folding into
+    each of 2 partitions, every partition emits at most m rows, no
+    summed ``c_adj`` exceeds the word's true count, and every word's
+    summed ``c_adj`` (0 if absent) is at least its true count minus
+    N/(m+1). The registered query's oracle only sees the threshold and
+    the guaranteed population, so a fold that never trims, or trims
+    wrongly, would pass it; these bounds would not.
+
+    Each partition's stream is MG's hard order: m "resident" bigrams
+    fill the summary first, then a heavy bigram arrives that must win
+    its place by decrementing them (a fold that just kept the m largest
+    counts would evict it in every batch)."""
+    from collections import Counter
+
+    from crawlingbigdatavisionaid_spark.plans.sketches import (
+        _MG_M,
+        _char_bigram_stream,
+        _mg_partial_summaries,
+    )
+
+    side = int(_MG_M**0.5)
+    assert side * side == _MG_M and side <= 25
+    letters = "abcdefghijklmnopqrstuvwxy"[:side]
+    residents = " ".join(a + b for a in letters for b in letters)
+    part = [residents] * 600 + ["zz " * 50] * 40
+    # parallelize slices the list in order: one copy of ``part`` each
+    docs = spark.sparkContext.parallelize(
+        list(enumerate(part + part)), 2
+    ).toDF("doc_id long, text string")
+    true = Counter(r["w"] for r in _char_bigram_stream(docs).collect())
+    n = sum(true.values())
+    assert len(true) == _MG_M + 1 and true["zz"] > n / (_MG_M + 1)
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "500")  # ~80 batches per partition
+    try:
+        partials = (
+            _mg_partial_summaries(_char_bigram_stream(docs))
+            .withColumn("p", F.spark_partition_id())
+            .collect()
+        )
+    finally:
+        spark.conf.set(key, old)
+
+    per_part = Counter(r["p"] for r in partials)
+    assert len(per_part) == 2 and max(per_part.values()) <= _MG_M
+    summed: Counter = Counter()
+    for r in partials:
+        summed[r["w"]] += r["c_adj"]
+    assert all(summed[w] <= true[w] for w in summed)
+    assert all(summed[w] >= c - n / (_MG_M + 1) for w, c in true.items())

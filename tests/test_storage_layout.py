@@ -112,29 +112,3 @@ def test_morton_spark_expr_matches_python(spark):
     # interleave is monotone per dimension within the other's bits:
     # the (x,y) -> z map must be injective over the domain
     assert len(set(got.values())) == len(cases)
-
-
-def test_zorder_ab_tool_smoke():
-    """The A/B tool runs end-to-end at a tiny K and reports the
-    expected structure (layouts x preds with rg_frac in [0,1] and
-    equal row counts)."""
-    import json
-    import subprocess
-    import sys
-
-    out = subprocess.run(
-        [sys.executable, "tools/zorder_ab.py", "2", "/root/testdata/sf0.01"],
-        capture_output=True,
-        text=True,
-        timeout=420,
-        cwd="/root/repo",
-    )
-    assert out.returncode == 0, out.stderr[-2000:]
-    rec = json.loads(out.stdout.strip().splitlines()[-1])
-    assert rec["rows_equal"] is True
-    for name in ("unsorted", "user_sorted", "zorder"):
-        for pred in ("box", "user"):
-            frac = rec["layouts"][name]["preds"][pred]["rg_frac"]
-            assert 0.0 <= frac <= 1.0
-    # unsorted prunes nothing
-    assert rec["layouts"]["unsorted"]["preds"]["box"]["rg_frac"] == 1.0

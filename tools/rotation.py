@@ -12,8 +12,10 @@ queries are stalest of all).  The window is composed as:
    means oracle-backed and not twin-carried;
 3. stalest-first fill to exactly 50 seats.
 
-The six twin-carried rows-only registrations are excluded from staleness
-bookkeeping per the recorded disposition in ``plans/registry.py``.
+Twin-carried registrations — the rows-only ones, registered with no
+oracle (six today) — are excluded from staleness bookkeeping per the
+recorded disposition in ``plans/registry.py``; the set is read from the
+registry, not kept by hand.
 
 STALENESS-DRAIN POLICY (judge r10 next-round #3): because every
 never-checked registration consumes a seat, net-NEW registrations per
@@ -40,36 +42,45 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TWIN_CARRIED = {
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "ann_lsh_topk",
-    "ann_ivf_topk",
-    "stream_neardup_minhash",
-    "bpe_merge_rounds",
-}
-
 WINDOW = 50
 
 
-def derive() -> list[str]:
+def _queries() -> dict:
     from crawlingbigdatavisionaid_spark.plans import registry
 
     registry._load_all()
-    q = registry.QUERIES
+    return registry.QUERIES
+
+
+def _eligible(q: dict) -> list[str]:
+    """Oracle-backed queries in registration order; the rest are the
+    twin-carried rows-only registrations."""
+    return [n for n in q if q[n].oracle is not None]
+
+
+def _history() -> tuple[dict[str, int], list[int]]:
+    """Last driver-checked round per query, and every recorded round."""
+    hist: dict[str, int] = {}
+    rounds = []
+    for f in sorted(glob.glob(os.path.join(
+            os.path.dirname(__file__), "..", "CORRECTNESS_r*.json"))):
+        rnd = int(re.search(r"r(\d+)", os.path.basename(f)).group(1))
+        rounds.append(rnd)
+        for name in json.load(open(f)):
+            hist[name] = max(hist.get(name, 0), rnd)
+    return hist, rounds
+
+
+def derive() -> list[str]:
+    q = _queries()
     # registration order WITHOUT the current priority pin: module-import
     # order is what the rotation actually ranks, so re-derive it by
     # putting priority names back at their staleness rank, not position 0
     names = list(q)
+    eligible = _eligible(q)
+    hist, _ = _history()
 
-    hist: dict[str, int] = {}
-    for f in sorted(glob.glob(os.path.join(os.path.dirname(__file__), "..", "CORRECTNESS_r*.json"))):
-        rnd = int(re.search(r"r(\d+)", os.path.basename(f)).group(1))
-        for name in json.load(open(f)):
-            hist[name] = max(hist.get(name, 0), rnd)
-
-    window = [n for n in names if n not in hist and n not in TWIN_CARRIED
-              and q[n].oracle is not None]
+    window = [n for n in eligible if n not in hist]
 
     def ops_of(ns):
         s = set()
@@ -81,9 +92,8 @@ def derive() -> list[str]:
     remaining = set(all_ops) - ops_of(window)
     while remaining:
         cands = [
-            n for n in names
-            if n not in window and n not in TWIN_CARRIED
-            and q[n].oracle is not None and set(q[n].ops) & remaining
+            n for n in eligible
+            if n not in window and set(q[n].ops) & remaining
         ]
         cands.sort(key=lambda n: (hist.get(n, -1),
                                   -len(set(q[n].ops) & remaining), n))
@@ -91,8 +101,7 @@ def derive() -> list[str]:
         window.append(pick)
         remaining -= set(q[pick].ops)
 
-    rest = [n for n in names if n not in window and n not in TWIN_CARRIED
-            and q[n].oracle is not None]
+    rest = [n for n in eligible if n not in window]
     rest.sort(key=lambda n: (hist.get(n, -1), n))
     window += rest[: WINDOW - len(window)]
     return window
@@ -106,18 +115,9 @@ def main() -> None:
     print(json.dumps({"derived": derived}, indent=2))
     # staleness histogram (0 = never driver-checked), before and after
     # the derived window runs — the drain-policy scoreboard
-    registry._load_all()
-    q = registry.QUERIES
-    hist: dict[str, int] = {}
-    rounds = []
-    for f in sorted(glob.glob(os.path.join(
-            os.path.dirname(__file__), "..", "CORRECTNESS_r*.json"))):
-        rnd = int(re.search(r"r(\d+)", os.path.basename(f)).group(1))
-        rounds.append(rnd)
-        for name in json.load(open(f)):
-            hist[name] = max(hist.get(name, 0), rnd)
+    eligible = _eligible(_queries())
+    hist, rounds = _history()
     nxt = (max(rounds) if rounds else 0) + 1
-    eligible = [n for n in q if n not in TWIN_CARRIED and q[n].oracle is not None]
     from collections import Counter
 
     before = Counter(hist.get(n, 0) for n in eligible)
