@@ -1,5 +1,5 @@
 """Distributed 2-D skyline (Pareto frontier) over (x maximize,
-y maximize) with a deterministic key column.
+y maximize).
 
 The operator is DISTRIBUTIVE over any partitioning — skyline(S) ⊆
 ∪ᵢ skyline(partitionᵢ) — which gives the streaming fold (skyline(A ∪ B)
@@ -35,7 +35,7 @@ from pyspark.sql.window import Window
 from ..functions.bounded import bounded_single_partition
 
 
-def exact_skyline(df: DataFrame, x: str, y: str, key: str) -> DataFrame:
+def exact_skyline(df: DataFrame, x: str, y: str) -> DataFrame:
     """Exact skyline of ``df`` (x, y non-null): relational sweep, see
     module docstring.  Ties keep every non-dominated row — two rows at
     the same (x, y) neither dominate each other and both survive,

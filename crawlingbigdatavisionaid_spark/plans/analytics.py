@@ -24,6 +24,7 @@ from .registry import register
 # ---------------------------------------------------------------------------
 @register(
     "timeline_gapfill",
+    bench="olap",
     ops=("OP-AGG-03", "OP-AGG-04", "OP-GAP-01", "OP-FLT-02"),
     oracle="""
         WITH counts AS (
@@ -75,6 +76,7 @@ def date_range(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "source_distribution",
+    bench="olap",
     ops=("OP-AGG-01", "OP-AGG-02", "OP-PRJ-02", "OP-SRC-03", "OP-PRJ-01"),
     oracle="""
         SELECT COALESCE(source, 'Unknown') AS source,
@@ -258,6 +260,7 @@ def approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "dedup_anti_join",
+    bench="dedup",
     ops=("OP-DEDUP-01",),
     oracle="""
         SELECT b.doc_id, b.text FROM documents b
@@ -280,6 +283,7 @@ def dedup_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_exact",
+    bench="dedup",
     ops=("OP-DEDUP-01",),
     oracle="""
         SELECT MIN(doc_id) AS doc_id, text, COUNT(*) AS copies
@@ -378,6 +382,7 @@ def value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "daily_anomaly_days",
+    bench="sketch",
     ops=("OP-AGG-03", "OP-AGG-01"),
     oracle="""
         WITH d AS (
@@ -439,6 +444,7 @@ def daily_anomaly_days(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "event_funnel_counts",
+    bench="sketch",
     ops=("OP-AGG-01", "OP-X-WIN-01"),
     oracle="""
         WITH f AS (
@@ -496,6 +502,7 @@ def event_funnel_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "cohort_retention",
+    bench="sketch",
     ops=("OP-AGG-03", "OP-AGG-01", "OP-X-WIN-01"),
     oracle="""
         WITH act AS (
@@ -566,6 +573,7 @@ _PSI_TERM = (
 
 @register(
     "value_drift_psi",
+    bench="sketch",
     ops=("OP-AGG-01", "OP-AGG-05"),
     oracle=f"""
         WITH b AS (
@@ -672,6 +680,7 @@ def value_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "quantile_sketch_verdict",
+    bench="sketch",
     ops=("OP-AGG-05", "OP-X-APPROX-01"),
     # approx_percentile's sketch is engine-internal (no DuckDB twin);
     # the oracle recomputes the EXACT order statistics the sketch is
@@ -735,6 +744,7 @@ def quantile_sketch_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dq_referential_audit",
+    bench="olap",
     ops=("OP-AGG-05", "OP-FLT-01"),
     oracle="""
         SELECT
@@ -840,6 +850,7 @@ def dq_referential_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "markov_transition_matrix",
+    bench="sketch",
     ops=("OP-X-WIN-01", "OP-AGG-01"),
     oracle="""
         WITH seq AS (
@@ -897,6 +908,7 @@ def markov_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "type_value_percentiles_exact",
+    bench="sketch",
     ops=("OP-AGG-01", "OP-AGG-05"),
     # value-at-rank is tie-safe (equal ranks carry equal values), so a
     # per-type ROW_NUMBER over the value alone is a sound oracle
@@ -959,6 +971,7 @@ def type_value_percentiles_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "mad_outlier_values",
+    bench="olap",
     ops=("OP-AGG-05",),
     oracle="""
         WITH v AS (SELECT value AS v FROM events WHERE value IS NOT NULL),
@@ -1026,6 +1039,7 @@ def mad_outlier_values(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "max_concurrent_events",
+    bench="sketch",
     ops=("OP-X-WIN-01", "OP-AGG-01"),
     oracle="""
         WITH pts AS (
@@ -1112,6 +1126,7 @@ _BENFORD_PERMILLE = ((1, 301), (2, 176), (3, 125), (4, 97), (5, 79),
 
 @register(
     "benford_value_audit",
+    bench="sketch",
     ops=("OP-AGG-01", "OP-X-TXT-04"),
     oracle=f"""
         WITH exp AS (
@@ -1183,6 +1198,7 @@ def benford_value_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "journey_trigrams_topk",
+    bench="sketch",
     ops=("OP-X-WIN-01", "OP-TOPK-01", "OP-AGG-01"),
     oracle="""
         WITH s AS (
@@ -1236,6 +1252,7 @@ def journey_trigrams_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rolling_7day_distinct_users",
+    bench="sketch",
     ops=("OP-AGG-03", "OP-X-WIN-01"),
     oracle="""
         WITH du AS (
@@ -1284,6 +1301,7 @@ def rolling_7day_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "mannwhitney_value_shift",
+    bench="sketch",
     ops=("OP-AGG-01", "OP-AGG-05"),
     oracle="""
         WITH v AS (
@@ -1364,6 +1382,7 @@ def mannwhitney_value_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "chisq_type_daypart",
+    bench="sketch",
     ops=("OP-AGG-01",),
     oracle="""
         WITH o AS (
@@ -1449,6 +1468,7 @@ def chisq_type_daypart(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ks_value_shift",
+    bench="sketch",
     ops=("OP-AGG-01", "OP-AGG-05"),
     oracle="""
         WITH e AS (
@@ -1550,6 +1570,7 @@ _EWMA_W = 16  # trailing-window depth: weight 2^(W-i) for lag i (halving)
 
 @register(
     "ewma_spike_days",
+    bench="sketch",
     ops=("OP-AGG-03", "OP-AGG-01"),
     oracle=f"""
         WITH daily AS (

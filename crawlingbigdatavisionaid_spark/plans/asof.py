@@ -20,6 +20,7 @@ from .registry import register
 
 @register(
     "asof_click_purchase",
+    bench="windows",
     ops=("OP-X-WIN-01",),
     oracle="""
         SELECT a.event_id, a.user_id, a.ts AS click_ts,
@@ -61,6 +62,7 @@ def asof_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "range_join_clicks_before_purchase",
+    bench="windows",
     ops=("OP-X-WIN-01",),
     oracle="""
         SELECT p.event_id, p.user_id,

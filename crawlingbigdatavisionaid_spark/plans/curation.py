@@ -44,6 +44,7 @@ _SQL_SHINGLES5 = """
 
 @register(
     "curated_corpus",
+    bench="dedup",
     ops=(
         "OP-FLT-01",
         "OP-FLT-03",
@@ -291,6 +292,7 @@ _SHARDS = 16
 
 @register(
     "training_shard_manifest",
+    bench="text",
     ops=("OP-X-TXT-04", "OP-AGG-01", "OP-AGG-05"),
     # ROW_NUMBER over the total (n_tokens DESC, doc_id) order -> striped
     # shard, then per-shard manifest + the provable balance bound and

@@ -44,6 +44,7 @@ _SQL_DF_CAP_CTES = """
 
 @register(
     "dedup_ngram_jaccard",
+    bench="dedup",
     ops=("OP-X-DEDUP-02",),
     oracle=f"""
         WITH t AS (
@@ -81,6 +82,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_containment",
+    bench="dedup",
     ops=("OP-X-DEDUP-02",),
     oracle=f"""
         WITH t AS (
@@ -117,6 +119,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "containment_minhash_recall",
+    bench="dedup",
     ops=("OP-X-DEDUP-02",),
     # the probe pair SET is hash-defined (bottom-k sampling — no SQL
     # twin), but its QUALITY is oracle-checkable, mirroring
@@ -158,6 +161,7 @@ def containment_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_minhash_lsh",
+    bench="dedup",
     ops=("OP-X-DEDUP-02",),
     oracle=None,  # LSH recall < 1 by construction; pytest asserts parity
     # with dedup_ngram_jaccard on the planted high-similarity band
@@ -219,6 +223,7 @@ def dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_simhash",
+    bench="dedup",
     ops=("OP-X-DEDUP-02",),
     oracle=None,  # xxhash64-based signature — no DuckDB twin
 )
@@ -235,6 +240,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_simhash_recall",
+    bench="dedup",
     ops=("OP-X-DEDUP-02",),
     # the SimHash pair set is hash-defined (no SQL twin), but banding
     # carries a PROVABLE guarantee the verdict makes testable: with 4
@@ -308,6 +314,7 @@ _SQL_JACCARD_PAIRS = f"""
 
 @register(
     "dedup_components",
+    bench="dedup",
     ops=("OP-X-DEDUP-02",),
     oracle=_SQL_JACCARD_PAIRS.replace("WITH", "WITH RECURSIVE", 1)
     + """
@@ -380,6 +387,7 @@ def dedup_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "training_corpus",
+    bench="dedup",
     ops=("OP-X-DEDUP-02", "OP-DEDUP-01", "OP-FLT-01", "OP-FLT-03"),
     oracle=_SQL_JACCARD_PAIRS.replace("WITH", "WITH RECURSIVE", 1)
     + """
@@ -470,6 +478,7 @@ def dedup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_ensemble_audit",
+    bench="dedup",
     ops=("OP-X-DEDUP-02", "OP-X-SIM-01"),
     # reuses the shared jaccard chain (its final CTE is ``dup_pairs``)
     # and the shared cosine fragment — no drift-prone copies
@@ -530,6 +539,7 @@ def dedup_ensemble_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "incremental_ingest_dedup",
+    bench="dedup",
     ops=("OP-X-DEDUP-02", "OP-DEDUP-01"),
     oracle=f"""
         WITH t AS (
@@ -582,6 +592,7 @@ def incremental_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "incremental_minhash_recall",
+    bench="dedup",
     ops=("OP-X-DEDUP-02", "OP-DEDUP-01"),
     # the LSH candidate set is hash-defined (no SQL twin); quality is
     # oracle-checked the dedup_minhash_recall way — precision is exactly
@@ -624,6 +635,7 @@ def incremental_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "chunk_dedup_rebuild",
+    bench="dedup",
     ops=("OP-X-DEDUP-02", "OP-TXT-01"),
     oracle="""
         WITH n AS (
@@ -730,6 +742,7 @@ def chunk_dedup_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "setsim_prefix_join",
+    bench="dedup",
     ops=("OP-X-DEDUP-02",),
     # the oracle needs no prefix mechanics: the plain shared-shingle
     # self-join + exact Jaccard filter IS the definition the prefix
@@ -771,6 +784,7 @@ def setsim_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sorted_neighborhood_pairs",
+    bench="dedup",
     ops=("OP-X-DEDUP-02",),
     oracle=f"""
         WITH ranked AS (

@@ -152,6 +152,7 @@ _MESSY_URLS = [
 
 @register(
     "url_canonical_dedup",
+    bench="dedup",
     ops=("OP-DEDUP-01", "OP-EXT-03"),
     oracle="""
         SELECT * FROM (VALUES

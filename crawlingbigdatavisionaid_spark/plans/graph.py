@@ -137,6 +137,7 @@ _TRI_ORACLE = f"""
 
 @register(
     "simgraph_triangle_stats",
+    bench="ann",
     ops=("OP-X-SIM-01", "OP-AGG-01", "OP-TOPK-01"),
     oracle=_TRI_ORACLE,
 )
@@ -178,6 +179,7 @@ _EPS_LSH_T = "0.9"
 
 @register(
     "lsh_eps_join_recall",
+    bench="ann",
     ops=("OP-X-SIM-01", "OP-X-DEDUP-02"),
     # The oracle brute-forces the HIGH-threshold ε-join over the same
     # constructed corpus (embeddings + deterministic perturbed twins —
@@ -389,6 +391,7 @@ def _bfs_oracle() -> str:
 
 @register(
     "trade_bfs_hops",
+    bench="olap",
     ops=("OP-AGG-01",),
     oracle=_bfs_oracle(),
 )
@@ -493,6 +496,7 @@ def _hits_oracle() -> str:
 
 @register(
     "hits_hubs_authorities",
+    bench="olap",
     ops=("OP-AGG-01", "OP-TOPK-01"),
     oracle=_hits_oracle(),
 )
@@ -642,6 +646,7 @@ def _cheapest_oracle() -> str:
 
 @register(
     "cheapest_trade_path",
+    bench="olap",
     ops=("OP-AGG-01", "OP-TOPK-01"),
     oracle=_cheapest_oracle(),
 )
@@ -751,6 +756,7 @@ def _lpa_oracle() -> str:
 
 @register(
     "label_propagation_communities",
+    bench="olap",
     ops=("OP-AGG-01", "OP-TOPK-01"),
     oracle=_lpa_oracle(),
 )
@@ -834,6 +840,7 @@ def _kcore_oracle() -> str:
 
 @register(
     "kcore_membership",
+    bench="olap",
     ops=("OP-AGG-01",),
     oracle=_kcore_oracle(),
 )
@@ -884,6 +891,7 @@ _WEDGE_CAP = 64
 
 @register(
     "link_prediction_jaccard",
+    bench="olap",
     ops=("OP-AGG-01", "OP-TOPK-01"),
     oracle=f"""
         WITH pairs AS (
@@ -994,6 +1002,7 @@ def _temporal_oracle() -> str:
 
 @register(
     "temporal_reachability",
+    bench="olap",
     ops=("OP-AGG-01", "OP-X-WIN-01"),
     oracle=_temporal_oracle(),
 )

@@ -24,6 +24,7 @@ _N_BATCHES = 3  # simulated ingest batches: event_id % 3 deciles
 
 @register(
     "incremental_mv_daily",
+    bench="sketch",
     ops=("OP-AGG-03", "OP-AGG-06", "OP-SNK-01"),
     oracle="""
         SELECT CAST(ts AS DATE) AS day, event_type,
@@ -84,6 +85,7 @@ def incremental_mv_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "hll_partial_merge",
+    bench="sketch",
     ops=("OP-X-APPROX-01", "OP-AGG-06"),
     # the sketch bytes are engine-internal (Apache DataSketches); the
     # oracle pins the verdicts: union-of-partials must agree with the
@@ -177,6 +179,7 @@ def scd2_runs(e: DataFrame) -> DataFrame:
 
 @register(
     "scd2_user_segments",
+    bench="windows",
     ops=("OP-X-WIN-01", "OP-AGG-04"),
     oracle="""
         WITH e AS (
@@ -228,6 +231,7 @@ def scd2_user_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "incremental_join_mv",
+    bench="sketch",
     ops=("OP-AGG-06", "OP-SNK-01"),
     # the delta algebra is verified in-engine (set equality of the
     # incremental view vs the recompute); the oracle recomputes the
@@ -320,6 +324,7 @@ def incremental_join_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "pit_segment_features",
+    bench="windows",
     ops=("OP-X-WIN-01", "OP-AGG-01"),
     oracle="""
         WITH e AS (
@@ -424,6 +429,7 @@ def pit_segment_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rolling_7day_hll_users",
+    bench="sketch",
     ops=("OP-X-APPROX-01", "OP-AGG-03"),
     # sketch bytes are engine-internal (DataSketches); the oracle pins
     # the exact rolling counts and the tolerance verdicts, the same

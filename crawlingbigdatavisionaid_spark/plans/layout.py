@@ -48,6 +48,7 @@ def _morton_duck(x: str, y: str) -> str:
 
 @register(
     "partitioned_write_prune",
+    bench="olap",
     ops=("OP-SNK-01", "OP-AGG-03", "OP-AGG-05"),
     oracle="""
         WITH f AS (
@@ -144,6 +145,7 @@ _Z_ORACLE = f"""
 
 @register(
     "zorder_bucket_profile",
+    bench="olap",
     ops=("OP-AGG-01",),
     oracle=_Z_ORACLE,
 )

@@ -38,6 +38,7 @@ def multimodal_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_decode_image",
+    bench="ann",
     ops=("OP-X-MM-01",),
     # the oracle recomputes every DECODED statistic from the encode-side
     # arithmetic: dims from doc_id, channel sums over the rpad-ed ASCII
@@ -81,6 +82,7 @@ def multimodal_decode_image(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_decode_audio",
+    bench="ann",
     ops=("OP-X-MM-01",),
     # constant header (mono 8-bit PCM @8000 Hz, fixed 200-sample clip) +
     # samples from the ASCII text: the oracle recomputes every decoded
@@ -116,6 +118,7 @@ def multimodal_decode_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_decode_video",
+    bench="ann",
     ops=("OP-X-MM-01",),
     # all-ASCII YUV4MPEG2 stream (4x4 C444, 1 + doc_id % 4 frames) —
     # the oracle recomputes frame count and the Y-plane sum from the
@@ -150,6 +153,7 @@ def multimodal_decode_video(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_features",
+    bench="ann",
     ops=("OP-X-MM-01",),
     oracle="""
         WITH b AS (
@@ -385,6 +389,7 @@ def _hamming_hist_sql(
 
 @register(
     "dedup_image_phash",
+    bench="dedup",
     ops=("OP-X-MM-01", "OP-X-DEDUP-02"),
     oracle=_hamming_hist_sql(_PHASH_SQL, "phash", 2),
 )
@@ -499,6 +504,7 @@ def dedup_image_phash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_image_phash64",
+    bench="dedup",
     ops=("OP-X-MM-01", "OP-X-DEDUP-02"),
     oracle=_hamming_hist_sql(_PHASH64_SQL, "phash64", 3),
 )
@@ -633,6 +639,7 @@ _IWHASH_SQL = _grid_cells_sql(8, 8) + """
 
 @register(
     "dedup_image_whash",
+    bench="dedup",
     ops=("OP-X-MM-01", "OP-X-DEDUP-02"),
     oracle=_hamming_hist_sql(_IWHASH_SQL, "iwhash", 3),
 )
@@ -811,6 +818,7 @@ _PHASH_CLUSTERS_TAIL = """,
 
 @register(
     "dedup_phash_clusters",
+    bench="dedup",
     ops=("OP-X-MM-01", "OP-X-DEDUP-02"),
     oracle="WITH RECURSIVE "
     + _PHASH_SQL.lstrip()
@@ -866,6 +874,7 @@ def _phash_cluster_decision(
 
 @register(
     "dedup_phash64_clusters",
+    bench="dedup",
     ops=("OP-X-MM-01", "OP-X-DEDUP-02"),
     # the 17-bit cluster oracle re-run at the 64-bit grain: recursive-
     # CTE connected components over the brute-force Hamming-<=3 pair
@@ -971,6 +980,7 @@ _WHT_SQL = f"""
 
 @register(
     "dedup_audio_wht",
+    bench="dedup",
     ops=("OP-X-MM-01", "OP-X-DEDUP-02"),
     oracle=_hamming_hist_sql(_WHT_SQL, "whash", 1),
 )
@@ -995,6 +1005,7 @@ def dedup_audio_wht(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_audio_fingerprint",
+    bench="dedup",
     ops=("OP-X-MM-01", "OP-X-DEDUP-02"),
     oracle=_hamming_hist_sql(_AHASH_SQL, "fhash", 1),
 )

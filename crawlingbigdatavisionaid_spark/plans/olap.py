@@ -24,6 +24,7 @@ _DEC = "decimal(18,2)"
 # ---------------------------------------------------------------------------
 @register(
     "revenue_rollup_region_nation",
+    bench="olap",
     ops=("OP-AGG-01",),
     oracle="""
         SELECT r.r_name AS region, n.n_name AS nation,
@@ -281,6 +282,7 @@ def salted_segment_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "top3_orders_per_customer",
+    bench="olap",
     ops=("OP-TOPK-01",),
     oracle="""
         SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
@@ -579,6 +581,7 @@ def value_dispersion_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "weekly_change_report",
+    bench="sketch",
     ops=("OP-AGG-03", "OP-AGG-01", "OP-X-WIN-01"),
     oracle="""
         WITH w AS (
@@ -616,6 +619,7 @@ def weekly_change_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "customer_rfm_segments",
+    bench="sketch",
     ops=("OP-AGG-01", "OP-TOPK-01", "OP-X-WIN-01"),
     oracle="""
         WITH rfm AS (
@@ -716,6 +720,7 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "basket_type_lift",
+    bench="sketch",
     ops=("OP-AGG-01", "OP-TOPK-01"),
     oracle="""
         WITH items AS (
@@ -793,6 +798,7 @@ def basket_type_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "exact_percentiles",
+    bench="olap",
     ops=("OP-AGG-05",),
     # value-at-rank is well-defined under ties (equal rank candidates
     # carry equal values), so a ROW_NUMBER over the value alone is a
@@ -843,6 +849,7 @@ def exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "revenue_trend_ols",
+    bench="olap",
     ops=("OP-AGG-03", "OP-AGG-05"),
     oracle="""
         WITH daily AS (
@@ -908,6 +915,7 @@ def revenue_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "value_equidepth_histogram",
+    bench="olap",
     ops=("OP-AGG-05",),
     oracle="""
         WITH r AS (
@@ -957,6 +965,7 @@ def value_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "daily_pivot_unpivot_roundtrip",
+    bench="olap",
     ops=("OP-AGG-01", "OP-AGG-03"),
     oracle="""
         WITH days AS (SELECT DISTINCT CAST(ts AS DATE) AS day FROM events),
@@ -1006,6 +1015,7 @@ def daily_pivot_unpivot_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
 # ---------------------------------------------------------------------------
 @register(
     "pareto_frontier_orders",
+    bench="olap",
     ops=("OP-AGG-01",),
     oracle="""
         SELECT a.o_orderkey, a.o_totalprice, a.o_orderdate
@@ -1043,15 +1053,14 @@ def pareto_frontier_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderdate"
     )
-    return exact_skyline(
-        pts, "o_totalprice", "o_orderdate", "o_orderkey"
-    ).orderBy(
+    return exact_skyline(pts, "o_totalprice", "o_orderdate").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderdate").desc(), "o_orderkey"
     )
 
 
 @register(
     "fuzzy_match_parts",
+    bench="olap",
     ops=("OP-X-DEDUP-02",),
     oracle="""
         SELECT a.p_size, a.p_partkey AS part_a, b.p_partkey AS part_b,
@@ -1117,6 +1126,7 @@ def fuzzy_match_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "bucketed_join_no_shuffle",
+    bench="olap",
     ops=("OP-SNK-01", "OP-AGG-05"),
     # the layout story as a driver-checked query, not just a pytest:
     # the aggregates are independently recomputed by the oracle, and
@@ -1194,6 +1204,7 @@ def bucketed_join_no_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "revenue_gini",
+    bench="olap",
     ops=("OP-AGG-01", "OP-AGG-05"),
     oracle="""
         WITH cust AS (
@@ -1263,6 +1274,7 @@ def revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "market_concentration_hhi",
+    bench="olap",
     ops=("OP-AGG-01", "OP-AGG-05"),
     oracle="""
         WITH s AS (
@@ -1323,6 +1335,7 @@ def market_concentration_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "nation_share_of_region",
+    bench="olap",
     ops=("OP-AGG-01", "OP-AGG-02"),
     oracle="""
         WITH nrev AS (

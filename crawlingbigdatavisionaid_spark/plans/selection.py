@@ -40,6 +40,7 @@ from ._sql import SQL_COS as _SQL_COS  # shared oracle cosine fragment
 
 @register(
     "dsir_target_affinity",
+    bench="text",
     ops=("OP-X-TXT-04", "OP-FLT-01"),
     oracle=f"""
         WITH tok AS (
@@ -101,6 +102,7 @@ def dsir_target_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "domain_mix_weights",
+    bench="text",
     ops=("OP-AGG-01", "OP-AGG-02"),
     oracle=f"""
         WITH per AS (
@@ -202,6 +204,7 @@ _SQL_SPAN_CTES = f"""
 
 @register(
     "duplicate_spans",
+    bench="dedup",
     ops=("OP-X-DEDUP-02",),
     oracle=_SQL_SPAN_CTES
     + """
@@ -271,6 +274,7 @@ _SEM_TAU = 0.38  # within-cluster cosine above which the later doc is pruned
 
 @register(
     "semdedup_prune",
+    bench="ann",
     ops=("OP-X-DEDUP-02", "OP-X-SIM-01"),
     oracle=f"""
         SELECT a.vec_id, a.label
@@ -309,6 +313,7 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "semdedup_greedy_audit",
+    bench="ann",
     ops=("OP-X-DEDUP-02", "OP-X-SIM-01"),
     # n_strict_kept is fully SQL-expressible (the NOT EXISTS form);
     # the greedy kept-set is sequential by definition (no SQL twin), so
@@ -364,6 +369,7 @@ _POLITE_DELAY_S = 6  # per-domain seconds between fetches
 
 @register(
     "crawl_frontier_schedule",
+    bench="windows",
     ops=("OP-SRC-01", "OP-TOPK-02"),
     oracle=f"""
         SELECT doc_id, source,
@@ -406,6 +412,7 @@ def crawl_frontier_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "lang_temperature_weights",
+    bench="text",
     ops=("OP-AGG-01", "OP-AGG-02"),
     oracle=f"""
         WITH per AS (
@@ -452,6 +459,7 @@ def lang_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "span_dedup_stats",
+    bench="dedup",
     ops=("OP-X-DEDUP-02", "OP-AGG-01"),
     oracle=_SQL_SPAN_CTES
     + """
@@ -532,6 +540,7 @@ def span_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "weighted_sample_aes",
+    bench="text",
     ops=("OP-FLT-03", "OP-TOPK-01"),
     oracle="""
         WITH w AS (
@@ -606,6 +615,7 @@ def weighted_sample_aes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "deterministic_negative_samples",
+    bench="text",
     ops=("OP-X-SIM-01", "OP-PRJ-01"),
     oracle="""
         WITH d AS (

@@ -20,6 +20,7 @@ from ._sql import SQL_COS as _SQL_COS
 
 @register(
     "ann_brute_force_topk",
+    bench="ann",
     ops=("OP-X-SIM-01",),
     oracle=f"""
         WITH q AS (
@@ -49,6 +50,7 @@ def ann_brute_force_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ann_brute_force_topk_np",
+    bench="ann",
     ops=("OP-X-SIM-01",),
     # same oracle as the HOF twin: the result is rank-only integers, and
     # for random embeddings the rank-k margin dwarfs the fold-order
@@ -410,6 +412,7 @@ def embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "embedding_quantize_int8",
+    bench="ann",
     ops=("OP-X-SIM-01",),
     oracle="""
         WITH e AS (
@@ -454,6 +457,7 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ann_filtered_topk",
+    bench="ann",
     ops=("OP-X-SIM-01", "OP-FLT-01"),
     oracle=f"""
         WITH q AS (
@@ -571,6 +575,7 @@ def ann_pq_persisted_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ann_hard_negatives",
+    bench="ann",
     ops=("OP-X-SIM-01",),
     oracle=f"""
         WITH q AS (
@@ -644,6 +649,7 @@ def ann_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "semdedup_threshold_sweep",
+    bench="ann",
     ops=("OP-X-DEDUP-02", "OP-X-SIM-01", "OP-AGG-01"),
     oracle=f"""
         WITH pairs AS (
@@ -731,6 +737,7 @@ def semdedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ann_ivfpq_recall",
+    bench="ann",
     ops=("OP-X-SIM-01",),
     # the IVF-PQ composition (FAISS IVFx,PQy — the production shape for
     # billion-vector corpora): persisted probe must equal the in-memory
@@ -902,6 +909,7 @@ def ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ann_prefix_dim_recall",
+    bench="ann",
     ops=("OP-X-SIM-01",),
     # recall@10 vs exact measures 0.94 (sf0.01) / 0.85 (sf0.1) with a
     # 32-of-64-dim prescreen and a 200-candidate exact refine — on

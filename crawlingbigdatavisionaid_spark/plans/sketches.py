@@ -224,6 +224,7 @@ def bloom_confusion(
 
 @register(
     "bloom_dedup_probe",
+    bench="sketch",
     ops=("OP-DEDUP-01", "OP-AGG-05", "OP-SNK-01"),
     oracle=f"""
         WITH sk AS (
@@ -418,6 +419,7 @@ def cms_probe(
 
 @register(
     "cms_heavy_hitters",
+    bench="sketch",
     ops=("OP-TXT-01", "OP-TXT-02", "OP-TOPK-01"),
     oracle=f"""
         {_BIGRAM_TC_SQL}, th AS (
@@ -488,6 +490,7 @@ _FP_SCHEMA = pa.schema([("doc_id", pa.int64()), ("fp", pa.int64())])
 
 @register(
     "winnow_fingerprint_pairs",
+    bench="dedup",
     ops=("OP-X-DEDUP-02", "OP-TXT-01"),
     oracle=f"""
         WITH norm AS (
@@ -675,6 +678,7 @@ _KMV_K = 256  # sketch size: ~1/sqrt(k) ~ 6% relative error when full
 
 @register(
     "kmv_distinct_sketch",
+    bench="sketch",
     ops=("OP-X-APPROX-01", "OP-AGG-01"),
     oracle=f"""
         WITH keys AS (
@@ -766,6 +770,7 @@ _CMS_SCREEN_T = 100  # screening threshold (true bigram counts reach ~900)
 
 @register(
     "cms_screening_verdict",
+    bench="sketch",
     ops=("OP-TXT-02", "OP-AGG-05"),
     oracle=f"""
         {_BIGRAM_TC_SQL}, th AS (
@@ -833,6 +838,7 @@ _THETA_K = 256  # per-set sample bound, same error regime as _KMV_K
 
 @register(
     "theta_intersection_users",
+    bench="sketch",
     ops=("OP-X-APPROX-01", "OP-AGG-01"),
     oracle=f"""
         WITH ku AS (
@@ -1039,6 +1045,7 @@ def _mg_partial_summaries(bigrams: DataFrame) -> DataFrame:
 
 @register(
     "mg_screening_verdict",
+    bench="sketch",
     ops=("OP-TXT-02", "OP-AGG-05"),
     # the summary CONTENTS are partition-dependent (unlike the linear
     # CMS cells) so only partition-INVARIANT facts are emitted: the
@@ -1153,6 +1160,7 @@ def _jsz_cells_duck(tc: str, out: str) -> str:
 
 @register(
     "join_size_cms_estimate",
+    bench="sketch",
     ops=("OP-X-APPROX-01", "OP-AGG-05"),
     oracle=f"""
         WITH tc1 AS (

@@ -48,6 +48,7 @@ def _li_money(df: DataFrame) -> DataFrame:
 
 @register(
     "q1_pricing_summary",
+    bench="olap",
     ops=("OP-AGG-01", "OP-AGG-05"),
     oracle="""
         SELECT l_returnflag, l_linestatus,
@@ -97,6 +98,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q3_shipping_priority",
+    bench="olap",
     ops=("OP-TOPK-01",),
     oracle="""
         SELECT l.l_orderkey AS o_orderkey,
@@ -154,6 +156,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "region_revenue",
+    bench="olap",
     ops=("OP-AGG-01",),
     oracle="""
         SELECT r.r_name AS region, n.n_name AS nation,
@@ -217,6 +220,7 @@ def region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "top_customers",
+    bench="olap",
     ops=("OP-TOPK-01",),
     oracle="""
         SELECT c.c_custkey, c.c_name,
@@ -381,6 +385,7 @@ def mktsegment_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q6_forecast_revenue",
+    bench="olap",
     ops=("OP-AGG-05",),
     oracle="""
         SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
@@ -459,6 +464,7 @@ def q12_linestatus_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q14_promo_revenue_share",
+    bench="olap",
     ops=("OP-AGG-02",),
     oracle="""
         SELECT ROUND(
@@ -534,6 +540,7 @@ def parts_above_type_average(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q18_large_volume_orders",
+    bench="olap",
     ops=("OP-AGG-01", "OP-TOPK-01"),
     oracle="""
         SELECT c.c_custkey, c.c_name, o.o_orderkey,
@@ -586,6 +593,7 @@ def q18_large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q21_sole_returned_supplier",
+    bench="olap",
     ops=("OP-DEDUP-01",),
     oracle="""
         SELECT s.s_name, COUNT(*) AS numwait
@@ -656,6 +664,7 @@ def q21_sole_returned_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q22_idle_rich_customers",
+    bench="olap",
     ops=("OP-AGG-01", "OP-DEDUP-01"),
     oracle="""
         SELECT c.c_nationkey, COUNT(*) AS numcust,
@@ -763,6 +772,7 @@ def q4_late_ship_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q5_local_supplier_volume",
+    bench="olap",
     ops=("OP-AGG-01",),
     oracle="""
         SELECT n.n_name AS nation,
@@ -830,6 +840,7 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q10_returned_item_ranking",
+    bench="olap",
     ops=("OP-AGG-01", "OP-TOPK-01"),
     oracle="""
         SELECT c.c_custkey, c.c_name,
@@ -889,6 +900,7 @@ def q10_returned_item_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q13_order_count_distribution",
+    bench="olap",
     ops=("OP-AGG-01",),
     oracle="""
         SELECT c_count, COUNT(*) AS custdist
@@ -1033,6 +1045,7 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q19_disjunctive_revenue",
+    bench="olap",
     ops=("OP-AGG-05",),
     oracle="""
         SELECT CAST(COALESCE(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
@@ -1083,6 +1096,7 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q7_volume_shipping",
+    bench="olap",
     ops=("OP-AGG-01",),
     oracle="""
         SELECT n1.n_name AS supp_nation,
@@ -1162,6 +1176,7 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q8_market_share",
+    bench="olap",
     ops=("OP-AGG-01", "OP-AGG-02"),
     oracle="""
         WITH vol AS (
@@ -1260,6 +1275,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q9_product_profit",
+    bench="olap",
     ops=("OP-AGG-01",),
     oracle="""
         SELECT n.n_name AS nation,
@@ -1320,6 +1336,7 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q11_important_parts",
+    bench="olap",
     ops=("OP-AGG-01", "OP-AGG-05"),
     oracle="""
         WITH pv AS (
@@ -1372,6 +1389,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q16_supplier_part_variety",
+    bench="olap",
     ops=("OP-AGG-01",),
     oracle="""
         SELECT p.p_brand, p.p_type, p.p_size,
@@ -1412,6 +1430,7 @@ def q16_supplier_part_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q20_excess_shippers",
+    bench="olap",
     ops=("OP-AGG-01",),
     oracle="""
         WITH shipped AS (
@@ -1476,6 +1495,7 @@ def q20_excess_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q2_best_supplier",
+    bench="olap",
     ops=("OP-AGG-01", "OP-AGG-04"),
     oracle="""
         WITH sp AS (
@@ -1655,6 +1675,7 @@ def pagerank_scores(spark: SparkSession, sf_dir: str):
 
 @register(
     "supplier_pagerank",
+    bench="olap",
     ops=("OP-AGG-01", "OP-TOPK-01"),
     oracle=_pagerank_oracle(),
 )
@@ -1702,6 +1723,7 @@ def supplier_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q12_ship_latency_priority",
+    bench="olap",
     ops=("OP-AGG-01",),
     oracle="""
         SELECT CASE WHEN l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY

@@ -1489,6 +1489,7 @@ def pit_over_streamed_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_first_seen_merge",
+    bench="sketch",
     ops=("OP-STR-01", "OP-AGG-03", "OP-AGG-06"),
     # the drained per-entity merge-min state is bit-identical to the
     # batch first-seen table, so the growth curve read off it is graded

@@ -27,6 +27,7 @@ _SQL_BPE = "regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]')"
 
 @register(
     "word_topk",
+    bench="olap",
     ops=("OP-TXT-01", "OP-TXT-02", "OP-TXT-03", "OP-FLT-03", "OP-FLT-01"),
     oracle=f"""
         SELECT word, COUNT(*) AS cnt
@@ -55,6 +56,7 @@ def word_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "train_test_ngram_overlap",
+    bench="dedup",
     ops=("OP-X-DEDUP-02", "OP-DEDUP-01"),
     oracle="""
         WITH t AS (
@@ -135,6 +137,7 @@ def train_test_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "token_rarity_score",
+    bench="text",
     ops=("OP-X-TXT-04", "OP-TXT-02"),
     oracle=f"""
         WITH tok AS (
@@ -276,6 +279,7 @@ def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "quality_score",
+    bench="text",
     ops=("OP-X-TXT-04", "OP-FLT-03"),
     oracle=f"""
         WITH t AS (
@@ -351,6 +355,7 @@ def lang_breakdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "corpus_tfidf",
+    bench="text",
     ops=("OP-X-TXT-04",),
     oracle=f"""
         WITH d AS (
@@ -651,6 +656,7 @@ def stratified_sample_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "hash_sample_by_lang",
+    bench="text",
     ops=("OP-FLT-01",),
     oracle="""
         SELECT lang, COUNT(*) AS cnt
@@ -752,6 +758,7 @@ def doc_first_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "pack_sequences",
+    bench="text",
     ops=("OP-TXT-01", "OP-AGG-01"),
     oracle=f"""
         WITH t AS (
@@ -808,6 +815,7 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "split_contamination",
+    bench="dedup",
     ops=("OP-DEDUP-01", "OP-AGG-05"),
     oracle="""
         WITH train AS (
@@ -844,6 +852,7 @@ def split_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_chunks",
+    bench="dedup",
     ops=("OP-TXT-01",),
     oracle="""
         WITH t AS (
@@ -900,6 +909,7 @@ def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "boilerplate_phrases",
+    bench="dedup",
     ops=("OP-X-DEDUP-02", "OP-TXT-02"),
     oracle="""
         WITH t AS (
@@ -952,6 +962,7 @@ def boilerplate_phrases(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "bpe_top_merges",
+    bench="text",
     ops=("OP-TXT-01", "OP-TXT-02", "OP-TOPK-01"),
     oracle=f"""
         WITH tok AS (
@@ -1059,6 +1070,7 @@ def bpe_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "lm_bigram_nll",
+    bench="text",
     ops=("OP-X-TXT-04", "OP-TXT-01", "OP-AGG-01"),
     oracle=f"""
         WITH tok AS (
@@ -1232,6 +1244,7 @@ def lm_quality_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "gopher_quality_filter",
+    bench="text",
     ops=("OP-X-TXT-04", "OP-AGG-01", "OP-FLT-03"),
     oracle=f"""
         WITH f AS (
@@ -1335,6 +1348,7 @@ def _bpe_spark_encode(col: F.Column) -> F.Column:
 
 @register(
     "bpe_encode_by_lang",
+    bench="text",
     ops=("OP-TXT-01", "OP-AGG-01"),
     oracle=f"""
         WITH cnt AS (
@@ -1391,6 +1405,7 @@ def bpe_encode_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "lm_trigram_backoff",
+    bench="text",
     ops=("OP-X-TXT-04", "OP-TXT-01", "OP-AGG-01"),
     oracle=f"""
         WITH tok AS (
@@ -1597,6 +1612,7 @@ def lm_trigram_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "vocab_growth_deciles",
+    bench="text",
     ops=("OP-TXT-01", "OP-TXT-02", "OP-AGG-03"),
     oracle=f"""
         WITH span AS (
@@ -1677,6 +1693,7 @@ def vocab_growth_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "lang_id_confusion",
+    bench="text",
     ops=("OP-X-TXT-04", "OP-AGG-01"),
     oracle=f"""
         WITH t AS (
@@ -1738,6 +1755,7 @@ def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "bigram_pmi_topk",
+    bench="text",
     ops=("OP-TXT-01", "OP-TXT-02", "OP-TOPK-01"),
     oracle=f"""
         WITH tok AS (
@@ -1824,6 +1842,7 @@ def bigram_pmi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "repetition_ngram_filter",
+    bench="text",
     ops=("OP-TXT-01", "OP-FLT-03", "OP-AGG-01"),
     oracle=f"""
         WITH tok AS (
@@ -1930,6 +1949,7 @@ _BM25_EXPR = (
 
 @register(
     "bm25_topk",
+    bench="text",
     ops=("OP-X-TXT-04", "OP-TOPK-01"),
     oracle=f"""
         WITH tok AS (
@@ -2009,6 +2029,7 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_keywords_tfidf",
+    bench="text",
     ops=("OP-X-TXT-04", "OP-TOPK-01"),
     oracle=f"""
         WITH tok AS (
@@ -2094,6 +2115,7 @@ def doc_keywords_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "wilson_source_quality",
+    bench="text",
     ops=("OP-X-TXT-04", "OP-AGG-01"),
     oracle=f"""
         WITH g AS (
@@ -2170,6 +2192,7 @@ def wilson_source_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "char_entropy_quality",
+    bench="text",
     ops=("OP-X-TXT-04",),
     oracle="""
         WITH ch AS (
@@ -2262,6 +2285,7 @@ def char_entropy_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tokenizer_fertility_by_lang",
+    bench="text",
     ops=("OP-X-TXT-04", "OP-TXT-01"),
     oracle=f"""
         SELECT lang,
@@ -2315,6 +2339,7 @@ _PHRASE = ("data", "query")  # fixed 2-token phrase for the search demo
 
 @register(
     "phrase_search_positions",
+    bench="text",
     ops=("OP-TXT-01", "OP-TOPK-01"),
     oracle=f"""
         WITH t AS (

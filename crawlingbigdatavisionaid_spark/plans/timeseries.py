@@ -65,6 +65,7 @@ def _daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "daily_revenue_acf",
+    bench="sketch",
     ops=("OP-AGG-03", "OP-AGG-05"),
     oracle=f"""
         WITH {_DAILY_SQL},
@@ -166,6 +167,7 @@ def daily_revenue_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "cusum_changepoint_day",
+    bench="sketch",
     ops=("OP-AGG-03",),
     oracle="""
         WITH daily AS (
@@ -245,6 +247,7 @@ def cusum_changepoint_day(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dow_seasonal_profile",
+    bench="sketch",
     ops=("OP-AGG-03", "OP-AGG-01"),
     oracle=f"""
         WITH {_DAILY_SQL},
@@ -313,6 +316,7 @@ def dow_seasonal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "decayed_user_leaderboard",
+    bench="sketch",
     ops=("OP-AGG-01", "OP-TOPK-01"),
     oracle="""
         WITH p AS (
@@ -400,6 +404,7 @@ def _floor_div_sql(num: str, den: str) -> str:
 
 @register(
     "theilsen_trend",
+    bench="olap",
     ops=("OP-AGG-03", "OP-AGG-05"),
     oracle=f"""
         WITH {_DAILY_SQL},
@@ -498,6 +503,7 @@ def _pois_case(u: str) -> str:
 
 @register(
     "bootstrap_mean_ci",
+    bench="sketch",
     ops=("OP-AGG-05",),
     oracle=f"""
         WITH o AS (
@@ -607,6 +613,7 @@ def bootstrap_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "cumulative_unique_users",
+    bench="sketch",
     ops=("OP-AGG-03", "OP-X-APPROX-01"),
     oracle="""
         WITH first_day AS (
@@ -660,6 +667,7 @@ _CCF_MAX_LAG = 7
 
 @register(
     "purchase_click_ccf",
+    bench="sketch",
     ops=("OP-AGG-03", "OP-AGG-05"),
     oracle=f"""
         WITH f AS (
@@ -789,6 +797,7 @@ _SURV_KS = (0, 1, 7, 14, 28)
 
 @register(
     "user_survival_curve",
+    bench="sketch",
     ops=("OP-AGG-03",),
     oracle=f"""
         WITH span AS (
@@ -850,6 +859,7 @@ def user_survival_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "cohort_ltv_curve",
+    bench="sketch",
     ops=("OP-AGG-03", "OP-AGG-01"),
     oracle="""
         WITH first_seen AS (

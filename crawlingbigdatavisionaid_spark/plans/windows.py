@@ -20,6 +20,7 @@ from .registry import register
 
 @register(
     "window_tumbling_1h",
+    bench="windows",
     ops=("OP-X-WIN-01",),
     oracle="""
         SELECT time_bucket(INTERVAL '1 hour', CAST(ts AS TIMESTAMP))
@@ -37,6 +38,7 @@ def window_tumbling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "window_sliding_1h_30m",
+    bench="windows",
     ops=("OP-X-WIN-01",),
     oracle="""
         WITH bounds AS (
@@ -67,6 +69,7 @@ def window_sliding_1h_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "session_windows_30m",
+    bench="windows",
     ops=("OP-X-WIN-01",),
     oracle="""
         WITH marked AS (
@@ -117,6 +120,7 @@ def json_extract_props(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "json_k_stats_by_type",
+    bench="windows",
     ops=("OP-X-JSON-01", "OP-AGG-01"),
     oracle="""
         SELECT event_type,
@@ -233,6 +237,7 @@ def variant_props_distinct_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rolling_7day_revenue",
+    bench="olap",
     ops=("OP-X-WIN-01", "OP-AGG-03"),
     oracle="""
         WITH daily AS (
@@ -298,6 +303,7 @@ def rolling_7day_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "value_ohlc_hourly",
+    bench="windows",
     ops=("OP-X-WIN-01", "OP-AGG-01", "OP-AGG-04"),
     oracle="""
         WITH b AS (
@@ -361,6 +367,7 @@ def value_ohlc_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "conversion_latency_percentiles",
+    bench="windows",
     ops=("OP-X-WIN-01", "OP-AGG-05"),
     # value-at-rank is well-defined under ties (the exact_percentiles
     # argument); latencies are exact integer microseconds
@@ -431,6 +438,7 @@ def conversion_latency_percentiles(spark: SparkSession, sf_dir: str) -> DataFram
 
 @register(
     "attribution_first_touch",
+    bench="windows",
     ops=("OP-X-WIN-01", "OP-AGG-01"),
     oracle="""
         WITH marked AS (

@@ -902,10 +902,10 @@ def skyline_merge_ingest(
     from ..operators.skyline import exact_skyline
 
     def partial(batch_df: DataFrame) -> DataFrame:
-        return exact_skyline(batch_df.select(key, x, y), x, y, key)
+        return exact_skyline(batch_df.select(key, x, y), x, y)
 
     def fold(prev: DataFrame, part: DataFrame) -> DataFrame:
-        return exact_skyline(prev.unionByName(part), x, y, key)
+        return exact_skyline(prev.unionByName(part), x, y)
 
     return versioned_fold_ingest(
         spark, delta_path, state_root, checkpoint, schema,

@@ -133,7 +133,7 @@ def test_skyline_sweep_keeps_xy_ties(spark):
         [(1, 10, 10), (2, 10, 10), (3, 10, 9), (4, 11, 1), (5, 1, 11)],
         "k int, x int, y int",
     )
-    got = sorted(r["k"] for r in exact_skyline(df, "x", "y", "k").collect())
+    got = sorted(r["k"] for r in exact_skyline(df, "x", "y").collect())
     # (3,10,9) dominated by (1,10,10); the (10,10) twins both survive
     assert got == [1, 2, 4, 5]
 

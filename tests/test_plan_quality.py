@@ -579,11 +579,12 @@ def test_python_kernels_have_one_arrow_boundary(module):
 
 
 def test_package_has_no_pandas_boundary():
-    """Every module of the package crosses to Python only as Arrow
-    (mapInArrow, applyInArrow, arrow_udf): no pandas path may appear in
-    any of them, docstrings and comments included. The one exemption is
-    the stateful sessionizer, which may use applyInPandasWithState (and
-    so import pandas); its module docstring says why."""
+    """Every module of the package, every tool and bench.py cross to
+    Python only as Arrow (mapInArrow, applyInArrow, arrow_udf): no pandas
+    path may appear in any of them, docstrings and comments included.
+    The one exemption is the stateful sessionizer, which may use
+    applyInPandasWithState (and so import pandas); its module docstring
+    says why."""
     import importlib
     import pkgutil
 
@@ -600,9 +601,13 @@ def test_package_has_no_pandas_boundary():
         m.name for m in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + ".")
     ]
     assert f"{pkg.__name__}.plans.sketches" in names
+    files = {name: Path(importlib.import_module(name).__file__) for name in names}
+    root = Path(__file__).resolve().parents[1]
+    files.update((p.name, p) for p in [root / "bench.py", *root.glob("tools/*.py")])
+    assert "dedup_scale_smoke.py" in files
     bad = []
-    for name in names:
-        src = Path(importlib.import_module(name).__file__).read_text()
+    for name, path in files.items():
+        src = path.read_text()
         for allowed in exempt.get(name, ()):
             src = src.replace(allowed, "")
         bad += [(name, t) for t in forbidden if t in src]

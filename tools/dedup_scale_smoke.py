@@ -767,11 +767,12 @@ def _image64grow_mode(spark, base: str, k: int, out: str) -> None:
 
     def corpus(n_total: int):
         def gen(it):
-            import pandas as pd
+            import pyarrow as pa
 
-            for pdf in it:
+            for batch in it:
+                ids = batch.column("id")
                 payloads = []
-                for d in pdf["id"]:
+                for d in ids.to_pylist():
                     grp, mem = divmod(int(d), G)
                     h = _secded40(grp) << 24
                     if mem:
@@ -784,14 +785,15 @@ def _image64grow_mode(spark, base: str, k: int, out: str) -> None:
                             v += (h >> (cy * 8 + cx)) & 1
                             px.append(v)
                     payloads.append(b"P5\n9 8\n255\n" + bytes(px))
-                yield pd.DataFrame(
-                    {"doc_id": pdf["id"], "payload": payloads}
+                yield pa.RecordBatch.from_arrays(
+                    [ids, pa.array(payloads, pa.binary())],
+                    names=["doc_id", "payload"],
                 )
 
         return (
             spark.range(n_total)
             .repartition(64)
-            .mapInPandas(gen, "doc_id long, payload binary")
+            .mapInArrow(gen, "doc_id long, payload binary")
         )
 
     res: dict = {"mode": "image64grow", "k": k, "base": base, "group_size": G}
