@@ -449,7 +449,7 @@ def lsh_cosine_pairs(
     OTHER regime. Verification makes precision exactly 1, so the ONLY
     deviation from :func:`blocked_cosine_pairs` is a missed candidate —
     measured at recall 1.0 on the registered verdict query and the
-    ``--mode epslsh`` scale smoke, both of which hard-compare the pair
+    ``epslsh`` scale-harness mode, both of which hard-compare the pair
     SETS, not counts.
 
     Scale shape: one corpus pass to sign (batched matmul), one bounded

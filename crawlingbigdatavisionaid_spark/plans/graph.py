@@ -58,8 +58,8 @@ def _sim_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator docstring's accounting). Per-pair float path (row
     normalize, float64 matmul) is identical to
     :func:`_sim_edges_allpairs_twin`, so the edge set is bit-equal —
-    pinned by ``tests/test_graph.py`` and the ``--mode graph3``
-    scale smoke."""
+    pinned by ``tests/test_graph.py`` and ``tools/scale_smoke.py``'s
+    ``graph3`` mode."""
     from ..operators.similarity import blocked_cosine_pairs
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")

@@ -56,10 +56,12 @@ BENCH_FAMILIES: tuple[str, ...] = (
 # window is derived, never pasted: ``derive()`` ranks every query by
 # staleness, the last round it appears in a ``CORRECTNESS_r*.json`` at
 # the repo root, so each new round file rotates the window.
-# Composition: (a) never-checked registrations first-serve (net-new is
-# capped at ~10/round so the fill never starves); (b) greedy OP-ID
-# coverage repair, stalest first, so every SURVEY.md §2 OP-ID has a
-# representative; (c) stalest-first fill to exactly ``WINDOW`` seats.
+# Composition: (a) never-checked registrations first-serve, in
+# registration order and capped at ``WINDOW // 5`` so the fill never
+# starves (a checkout without round files is all never-checked);
+# (b) greedy OP-ID coverage repair, stalest first, so every SURVEY.md
+# §2 OP-ID has a representative; (c) stalest-first fill to exactly
+# ``WINDOW`` seats.
 # Every seat is oracle-backed: the rows-only registrations
 # (``oracle=None``, six today) are permanently carried by their
 # oracle-pinned exact twins and take no part in the rotation.
@@ -125,7 +127,7 @@ def derive(queries: dict[str, QuerySpec], hist: dict[str, int]) -> list[str]:
     """The check window for ``queries`` (in registration order)
     given each query's last checked round; see the policy above."""
     eligible = [n for n, spec in queries.items() if spec.oracle is not None]
-    window = [n for n in eligible if n not in hist]
+    window = [n for n in eligible if n not in hist][: WINDOW // 5]
 
     def ops_of(names):
         return {op for n in names for op in queries[n].ops}

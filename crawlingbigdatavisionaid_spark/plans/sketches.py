@@ -180,7 +180,7 @@ def bloom_confusion(
 ) -> DataFrame:
     """Parameterized Bloom build + probe + exact-measurement core shared
     by the registered query (fixed geometry, oracle-matched) and
-    ``tools/dedup_scale_smoke.py``'s sketch mode (which sizes ``m_bits``
+    ``tools/scale_smoke.py``'s ``sketch`` mode (which sizes ``m_bits``
     to the store so the FP rate stays flat as the corpus grows — the
     deployment rule a fixed-size demo cannot show). ``store``/``batch``
     must each expose one string column ``k``; m_bits must be a multiple

@@ -1632,8 +1632,8 @@ def _pagerank_oracle() -> str:
 def pagerank_scores(spark: SparkSession, sf_dir: str):
     """Full fixed-point PageRank score table over the customer-supplier
     trade graph — the recurrence shared by :func:`supplier_pagerank`
-    (its top-20 projection) and ``tools/dedup_scale_smoke.py --mode
-    graph`` (which sums ALL scores for the integer mass-conservation
+    (its top-20 projection) and ``tools/scale_smoke.py``'s ``graph``
+    mode (which sums ALL scores for the integer mass-conservation
     invariant, judge r8 #3). Returns ``(scores_df, n_nodes)``; see
     :func:`supplier_pagerank` for the design rationale."""
     li = load_table(spark, sf_dir, "lineitem").select(

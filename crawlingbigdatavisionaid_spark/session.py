@@ -25,6 +25,16 @@ from pyspark.sql import SparkSession
 _DEFAULT_SHUFFLE_PARTITIONS = "32"
 
 
+def claim_driver_heap(cap_gib: int) -> None:
+    """Default ``SPARK_GRAFT_DRIVER_MEM`` for a long-lived tool process:
+    half of physical memory, capped at ``cap_gib``. A tool that
+    pre-touches its heap must not claim more than the host has; an
+    explicit setting wins. Call before :func:`get_spark`."""
+    phys_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    gib = max(1, min(cap_gib, phys_gib // 2))
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", f"{gib}g")
+
+
 def get_spark(app_name: str = "crawlingbigdatavisionaid-spark") -> SparkSession:
     """Build (or fetch) the tuned SparkSession.
 

@@ -604,7 +604,7 @@ def test_package_has_no_pandas_boundary():
     files = {name: Path(importlib.import_module(name).__file__) for name in names}
     root = Path(__file__).resolve().parents[1]
     files.update((p.name, p) for p in [root / "bench.py", *root.glob("tools/*.py")])
-    assert "dedup_scale_smoke.py" in files
+    assert "scale_smoke.py" in files
     bad = []
     for name, path in files.items():
         src = path.read_text()

@@ -76,3 +76,14 @@ def test_unknown_bench_family_is_rejected() -> None:
 def test_no_duplicate_registrations() -> None:
     names = list(query_map())
     assert len(names) == len(set(names))
+
+
+def test_window_without_history_is_full_and_covered() -> None:
+    """A checkout with no ``CORRECTNESS_r*.json`` has only never-checked
+    queries: the first-serve cap leaves seats for the OP-ID repair."""
+    query_map()
+    window = derive(QUERIES, {})
+    assert len(window) == WINDOW
+    all_ops = {op for spec in QUERIES.values() for op in spec.ops}
+    covered = {op for n in window for op in QUERIES[n].ops}
+    assert all_ops == covered, sorted(all_ops - covered)

@@ -50,11 +50,11 @@ def main() -> None:
     ap.add_argument("--no-warmup", action="store_true")
     args = ap.parse_args()
 
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "8g")
-    os.environ.setdefault("SPARK_GRAFT_PRETOUCH", "1")
-
     from crawlingbigdatavisionaid_spark.plans import query_map
-    from crawlingbigdatavisionaid_spark.session import get_spark
+    from crawlingbigdatavisionaid_spark.session import claim_driver_heap, get_spark
+
+    claim_driver_heap(8)
+    os.environ.setdefault("SPARK_GRAFT_PRETOUCH", "1")
 
     spark = get_spark("profile")
     spark.sparkContext.setLogLevel("ERROR")
