@@ -133,7 +133,7 @@ def _run_family(family: str, sf_dir: str) -> None:
     a single JSON line with its timings."""
     spark, qmap = _get_spark()
     if family == "sf1":
-        out = _sf1_bench(spark, qmap, sf_dir)
+        out = _sf1_bench(spark, sf_dir)
     else:
         _warmup(spark, sf_dir, qmap)
         timings, construct, warm = _time_queries(
@@ -147,7 +147,7 @@ def _run_family(family: str, sf_dir: str) -> None:
     print("BENCH_FAMILY_JSON:" + json.dumps(out))
 
 
-def _sf1_bench(spark, qmap, base: str) -> dict:
+def _sf1_bench(spark, base: str) -> dict:
     import shutil
     import tempfile
 
@@ -158,24 +158,12 @@ def _sf1_bench(spark, qmap, base: str) -> dict:
 
     out = tempfile.mkdtemp(prefix="bench_sf1_")
     try:
-        t0 = time.perf_counter()
-        scale_smoke.build_scaled(spark, base, out, SF1_K)
-        build_s = round(time.perf_counter() - t0, 1)
-        timings: dict[str, float] = {}
-        for name in scale_smoke.QUERIES:
-            fn = qmap[name]
-            fn(spark, out).write.format("noop").mode("overwrite").save()
-            runs = []
-            for _ in range(2):  # min-of-2, same rationale as the warm loop
-                t0 = time.perf_counter()
-                fn(spark, out).write.format("noop").mode("overwrite").save()
-                runs.append(time.perf_counter() - t0)
-            timings[name] = round(min(runs), 3)
+        rec = scale_smoke.sf1(spark, base, SF1_K, out)
         return {
             "sf1_k": SF1_K,
-            "sf1_build_s": build_s,
-            "sf1_queries": timings,
-            "sf1_total": round(sum(timings.values()), 3),
+            "sf1_build_s": rec["build_s"],
+            "sf1_queries": rec["queries"],
+            "sf1_total": rec["total"],
         }
     except Exception as e:  # noqa: BLE001 — bench must always emit its JSON
         return {"sf1_total": None, "sf1_error": str(e)[:200]}
@@ -183,12 +171,10 @@ def _sf1_bench(spark, qmap, base: str) -> dict:
         shutil.rmtree(out, ignore_errors=True)
 
 
-def _spawn(family: str, sf_dir: str, mem: str) -> dict:
+def _spawn(family: str, sf_dir: str) -> dict:
     """Run one family subprocess; returns its parsed JSON (or an error
     record — the bench must always emit a summary)."""
     env = dict(os.environ)
-    env["SPARK_GRAFT_DRIVER_MEM"] = mem
-    env["SPARK_GRAFT_PRETOUCH"] = "1"
     env["SPARK_GRAFT_SF_DIR"] = sf_dir
     t0 = time.perf_counter()
     # start_new_session: the family child spawns a Spark JVM grandchild;
@@ -258,9 +244,11 @@ def main() -> None:
         # a growable heap charged 30-50s of kernel page-fault time to
         # whichever queries grew it first. sf0.1 families fit well under
         # 8 GiB (pre-touch ~20s); the sf1 replica section needs 16 GiB.
-        os.environ.setdefault(
-            "SPARK_GRAFT_DRIVER_MEM", "16g" if sys.argv[2] == "sf1" else "8g"
-        )
+        # Both are capped at half of physical memory, so a small host
+        # never pre-touches more than it has.
+        from crawlingbigdatavisionaid_spark.session import claim_driver_heap
+
+        claim_driver_heap(16 if sys.argv[2] == "sf1" else 8)
         os.environ.setdefault("SPARK_GRAFT_PRETOUCH", "1")
         _run_family(sys.argv[2], sf_dir)
         return
@@ -271,7 +259,7 @@ def main() -> None:
     family_wall: dict[str, float] = {}
     errors: dict[str, str] = {}
     for fam in FAMILIES:
-        got = _spawn(fam, sf_dir, "8g")
+        got = _spawn(fam, sf_dir)
         family_wall[fam] = got.get("_family_wall_s", 0.0)
         if "_error" in got:
             errors[fam] = got["_error"]
@@ -280,7 +268,7 @@ def main() -> None:
         construct.update(got["queries_construct"])
         warm.update(got["queries_warm"])
 
-    sf1 = _spawn("sf1", sf_dir, "16g")
+    sf1 = _spawn("sf1", sf_dir)
     family_wall["sf1"] = sf1.pop("_family_wall_s", 0.0)
     if "_error" in sf1:
         errors["sf1"] = sf1.pop("_error")

@@ -45,24 +45,36 @@ the table is ~|corpus| of distinct images) — the corpus-sized work is
 ONE map-side-combinable groupBy, and multiplicities re-enter the pair
 counts combinatorially (``cnt_u * cnt_v`` cross, ``C(cnt, 2)``
 within-hash). What holds at EVERY grain is the band join's per-task
-bound: :func:`_band_blocked` splits hot band-value buckets (natural
+bound: :func:`_band_blocks` splits hot band-value buckets (natural
 image dHashes skew — smooth images share long equal-bit runs) into
-``ceil(n / bucket_cap)`` hash sub-blocks joined as an upper-triangular
-skeleton, so no task ever buffers more than ~bucket_cap distinct
-hashes per side however concentrated the corpus.
+``ceil(n / bucket_cap)`` hash sub-blocks, and :func:`hamming_hash_pairs`
+tags each block with its upper-triangular grid cells by exploding
+ranges, so no task ever buffers more than ~bucket_cap distinct hashes
+per side however concentrated the corpus.
+
+Each family's decision — hasher, payload attach, bit width, Hamming
+radius and (images) grid — is one :data:`FAMILIES` entry keyed by its
+hash column; the registered queries, their oracles, the tests and the
+scale harness all read it from there.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from ..multimodal.binary import decode_audio, decode_image, map_payloads
+from ..multimodal.binary import (
+    attach_ppm,
+    attach_wav,
+    decode_audio,
+    decode_image,
+    map_payloads,
+)
 
 GRID_W, GRID_H = 4, 3
-PHASH_BITS = 9 + 8  # 3x3 horizontal + 4x2 vertical comparisons
 # the STANDARD dHash geometry (Krawetz): a 9x8 grid, one bit per
 # horizontal adjacent-cell comparison = 8 bits x 8 rows = 64 bits.
 # 17 bits deliberately saturates at 131k distinct hashes (ideal for
@@ -72,18 +84,11 @@ PHASH_BITS = 9 + 8  # 3x3 horizontal + 4x2 vertical comparisons
 # while the banding stays EXACT (radius r -> r+1 disjoint 16-bit
 # bands) and the distinct-hash table still never exceeds min(N, 2^64)
 GRID64_W, GRID64_H = 9, 8
-PHASH64_BITS = (GRID64_W - 1) * GRID64_H  # 64
 AUDIO_FRAMES = 10
-AHASH_BITS = AUDIO_FRAMES - 1
 
 
 def _grid_cells(
-    width: int,
-    height: int,
-    channels: int,
-    pixels: bytes,
-    gw: int = GRID_W,
-    gh: int = GRID_H,
+    width: int, height: int, channels: int, pixels: bytes, gw: int, gh: int
 ):
     """Exact block-average grid: cell (cx, cy) accumulates the
     per-pixel intensity (sum of channel bytes) of every pixel with
@@ -144,34 +149,15 @@ def _dhash64_bits(sums, counts) -> int:
     return h - (1 << 64) if h >= (1 << 63) else h
 
 
-def _phash_schema(hash_name: str) -> StructType:
-    return StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField(hash_name, LongType()),
-            StructField("grid_sig", StringType()),
-        ]
-    )
-
-
-_PHASH_SCHEMA = _phash_schema("phash")
-_PHASH64_SCHEMA = _phash_schema("phash64")
-
-
-def _image_dhash_frame(
-    with_payload: DataFrame,
-    gw: int,
-    gh: int,
-    bits_fn,
-    schema: StructType,
-) -> DataFrame:
-    """Shared decode->grid->hash kernel of the image hash grains: REAL
-    PNM decode per payload (Arrow-batched by :func:`map_payloads`),
-    exact-integer ``gw x gh`` grid, ``bits_fn`` packs the comparison
-    bits. ``grid_sig`` is the canonical string of the full grid (dims +
-    cell sums) — the EXACT-duplicate grain the recall verdicts check
-    the hash against. Undecodable payloads are dropped (OP-STR-02
-    per-item error isolation)."""
+def _image_hash(with_payload: DataFrame, col: str, bits_fn) -> DataFrame:
+    """Shared decode->grid->hash kernel of the image families: REAL PNM
+    decode per payload (Arrow-batched by :func:`map_payloads`), the
+    exact-integer grid of ``FAMILIES[col]``, ``bits_fn`` packs the
+    comparison bits into ``col``. ``grid_sig`` is the canonical string
+    of the full grid (dims + cell sums) — the EXACT-duplicate grain the
+    recall verdicts check the hash against. Undecodable payloads are
+    dropped (OP-STR-02 per-item error isolation)."""
+    gw, gh = FAMILIES[col].grid
 
     def per_item(payload: bytes) -> Iterator[tuple]:
         d = decode_image(payload)
@@ -182,29 +168,27 @@ def _image_dhash_frame(
         )
         yield bits_fn(sums, counts), sig
 
+    schema = StructType(
+        [
+            StructField("doc_id", LongType()),
+            StructField(col, LongType()),
+            StructField("grid_sig", StringType()),
+        ]
+    )
     return map_payloads(with_payload, per_item, schema)
 
 
 def image_dhash(with_payload: DataFrame) -> DataFrame:
     """(doc_id, payload) -> (doc_id, phash, grid_sig): 17-bit dHash
-    over the 4x3 grid (see :func:`_image_dhash_frame`)."""
-    return _image_dhash_frame(
-        with_payload, GRID_W, GRID_H, _dhash_bits, _PHASH_SCHEMA
-    )
+    over the 4x3 grid (see :func:`_image_hash`)."""
+    return _image_hash(with_payload, "phash", _dhash_bits)
 
 
 def image_dhash64(with_payload: DataFrame) -> DataFrame:
     """(doc_id, payload) -> (doc_id, phash64, grid_sig): the STANDARD
-    64-bit dHash over the 9x8 grid (see :func:`_image_dhash_frame` and
+    64-bit dHash over the 9x8 grid (see :func:`_image_hash` and
     :func:`_dhash64_bits`)."""
-    return _image_dhash_frame(
-        with_payload, GRID64_W, GRID64_H, _dhash64_bits, _PHASH64_SCHEMA
-    )
-
-
-_AHASH_SCHEMA = StructType(
-    [StructField("doc_id", LongType()), StructField("fhash", LongType())]
-)
+    return _image_hash(with_payload, "phash64", _dhash64_bits)
 
 
 def _frame_sums(samples: list[int], n_frames: int) -> list[int]:
@@ -220,25 +204,41 @@ def _frame_sums(samples: list[int], n_frames: int) -> list[int]:
     return sums
 
 
+def _audio_hash(
+    with_payload: DataFrame, col: str, n_frames: int, bits_fn
+) -> DataFrame:
+    """Shared decode->frames->hash kernel of the audio families: REAL
+    RIFF/WAV decode, ``n_frames`` per-frame sample sums
+    (:func:`_frame_sums`), ``bits_fn`` packs them into ``col``. Clips
+    shorter than ``n_frames`` samples are dropped (empty frames would
+    make the bits fixture artifacts)."""
+
+    def per_item(payload: bytes) -> Iterator[tuple]:
+        s = decode_audio(payload)["samples"]
+        if len(s) < n_frames:
+            return
+        yield (bits_fn(_frame_sums(s, n_frames)),)
+
+    schema = StructType(
+        [StructField("doc_id", LongType()), StructField(col, LongType())]
+    )
+    return map_payloads(with_payload, per_item, schema)
+
+
+def _rise_bits(energy: list[int]) -> int:
+    """Bit k set iff energy(k+1) > energy(k) (exact integer sums)."""
+    return sum(
+        1 << k for k in range(len(energy) - 1) if energy[k + 1] > energy[k]
+    )
+
+
 def audio_fingerprint(with_payload: DataFrame) -> DataFrame:
     """(doc_id, payload) -> (doc_id, fhash): REAL RIFF/WAV decode, then
     a 9-bit adjacent-frame-energy fingerprint over 10 fixed frames of
     the clip (sample i belongs to frame (i*10) // n — the per-sample
     integer map shared with the DuckDB oracle; bit k set iff
     energy(k+1) > energy(k), exact integer sums)."""
-
-    def per_item(payload: bytes) -> Iterator[tuple]:
-        s = decode_audio(payload)["samples"]
-        if len(s) < AUDIO_FRAMES:
-            return
-        energy = _frame_sums(s, AUDIO_FRAMES)
-        h = 0
-        for k in range(AUDIO_FRAMES - 1):
-            if energy[k + 1] > energy[k]:
-                h |= 1 << k
-        yield (h,)
-
-    return map_payloads(with_payload, per_item, _AHASH_SCHEMA)
+    return _audio_hash(with_payload, "fhash", AUDIO_FRAMES, _rise_bits)
 
 
 def _bands(n_bits: int, n_bands: int) -> list[tuple[int, int]]:
@@ -263,46 +263,39 @@ def distinct_hashes(hashed: DataFrame, hash_col: str) -> DataFrame:
     )
 
 
-def _band_blocked(
-    bt: DataFrame, width: int, cap: int
-) -> tuple[DataFrame, DataFrame]:
-    """Per-bucket sub-splitting of ONE band table (h, cnt, b) — the
-    ``similarity._lsh_blocked`` discipline for the Hamming band join:
-    every band-value bucket of n distinct hashes splits into
+def _band_blocks(h: DataFrame, n_bits: int, radius: int, cap: int) -> DataFrame:
+    """The hot-band block assignment the pair join runs on:
+    (g, b, blk, nb, h, cnt). Every distinct hash of ``h`` appears once
+    per band ``g`` of the ``radius + 1`` disjoint bands with its band
+    value ``b``; each (g, b) bucket of n hashes splits into
     ``nb = ceil(n / cap)`` disjoint sub-blocks keyed by
-    ``blk = xxhash64(h) mod nb``, with an upper-triangular skeleton of
-    nb(nb+1)/2 (ba, bb) sub-block pairs per bucket. The sizes
-    aggregate is bounded by ``min(|H|, 2^width)`` rows, so it stays
-    INSIDE the lazy plan (no build-time measurement) and is broadcast
-    while ``width <= 20`` keeps it driver-safe; wider bands are left to
-    the planner/AQE. Returns ``(blocked, skeleton)``: blocked =
-    (b, blk, nb, h, cnt), skeleton = (sb, ba, bb) with ba <= bb < nb.
-    ``hamming_hash_pairs`` derives its sub-block-pair tags by EXPLODING
-    ranges on ``blocked`` directly (narrow ops — no skeleton join; see
-    its docstring), so the skeleton here serves the tests/smokes that
-    assert the decomposition's shape."""
-    sizes = bt.groupBy("b").agg(
+    ``blk = xxhash64(h) mod nb`` (the ``similarity._lsh_blocked``
+    discipline for the Hamming band join). The sizes aggregate is
+    bounded by Σ_g min(|H|, 2^width_g) rows, so it stays INSIDE the lazy
+    plan (no build-time measurement) and is broadcast while every band
+    is <= 20 bits wide (driver-safe); wider bands are left to the
+    planner/AQE."""
+    bands = _bands(n_bits, radius + 1)
+    band_structs = F.array(
+        *[
+            F.struct(
+                F.lit(i).alias("g"),
+                F.expr(
+                    f"shiftrightunsigned(h, {off}) & {(1 << w) - 1}"
+                ).alias("b"),
+            )
+            for i, (off, w) in enumerate(bands)
+        ]
+    )
+    bt = h.select(
+        "h", "cnt", F.explode(band_structs).alias("gb")
+    ).select("h", "cnt", F.col("gb.g").alias("g"), F.col("gb.b").alias("b"))
+    sizes = bt.groupBy("g", "b").agg(
         F.ceil(F.count(F.lit(1)) / F.lit(int(cap))).cast("int").alias("nb")
     )
-    sized = F.broadcast(sizes) if width <= 20 else sizes
-    # the skeleton's band column is RENAMED to ``sb``: skeleton and
-    # blocked share lineage (both derive from ``bt``), so an
-    # expression-condition join on two columns NAMED ``b`` resolves to
-    # the same attribute and silently degenerates to a trivially-true
-    # predicate (a cross-match over band values) — distinct names make
-    # the equi-join unambiguous
-    skeleton = (
-        sizes.select(
-            F.col("b").alias("sb"),
-            "nb",
-            F.explode(F.sequence(F.lit(0), F.col("nb") - 1)).alias("ba"),
-        ).select(
-            "sb",
-            "ba",
-            F.explode(F.sequence(F.col("ba"), F.col("nb") - 1)).alias("bb"),
-        )
-    )
-    blocked = bt.join(sized, "b").select(
+    sized = F.broadcast(sizes) if max(w for _, w in bands) <= 20 else sizes
+    return bt.join(sized, ["g", "b"]).select(
+        "g",
         "b",
         F.pmod(F.xxhash64(F.col("h")), F.col("nb").cast("long"))
         .cast("int")
@@ -311,7 +304,6 @@ def _band_blocked(
         "h",
         "cnt",
     )
-    return blocked, skeleton
 
 
 def _pair_join_partitions(df: DataFrame) -> int:
@@ -342,24 +334,19 @@ def hamming_hash_pairs(
     long equal-bit runs) would concentrate |bucket|² join work in one
     task. So every (band, value) bucket of n distinct hashes is
     hash-split into ``nb = ceil(n / bucket_cap)`` disjoint sub-blocks
-    (``blk = xxhash64(h) mod nb``) and enumerated over the
-    upper-triangular grid of nb(nb+1)/2 sub-block pairs, keyed
-    (band index, band value, ba, bb) so BOTH join sides buffer <=
-    bucket_cap rows per key — a fully-concentrated band degrades into
-    many bounded tasks, never one executor-OOM task. The (ba, bb) cell
-    tags are produced by EXPLODING ranges on the blocked rows
-    themselves (a block-i row left-serves cells (i, i..nb-1) and
-    right-serves cells (0..i, i)) — narrow generators, so the whole
-    enumeration pays exactly one shuffling join plus the bounded sizes
-    aggregate. Unlike ``lsh_cosine_pairs``,
-    the sizing aggregate needs NO build-time measurement: per band it
-    is bounded by ``min(|H|, 2^band_width)`` rows (2^16 for the 64-bit
-    grain's 16-bit bands), so the skeleton lives INSIDE the lazy plan —
-    when no bucket exceeds the cap it collapses to the plain self-join
-    (nb == 1 -> single (0, 0) skeleton row, blk identically 0) and the
-    plan stays a DataFrame, never an eager job. The sizes join is
-    broadcast only while the band value space keeps it driver-safe
-    (width <= 20 bits); wider bands fall back to the planner/AQE.
+    (:func:`_band_blocks`) and enumerated over the upper-triangular
+    grid of nb(nb+1)/2 sub-block pairs, keyed (band index, band value,
+    ba, bb) so BOTH join sides buffer <= bucket_cap rows per key — a
+    fully-concentrated band degrades into many bounded tasks, never one
+    executor-OOM task. The (ba, bb) cell tags are produced by EXPLODING
+    ranges on the blocked rows themselves (a block-i row left-serves
+    cells (i, i..nb-1) and right-serves cells (0..i, i)) — narrow
+    generators, so the whole enumeration pays exactly one shuffling
+    join plus the bounded sizes aggregate. Unlike ``lsh_cosine_pairs``,
+    the sizing needs NO build-time measurement, so the plan stays a
+    DataFrame, never an eager job; when no bucket exceeds the cap it
+    collapses to the plain self-join (nb == 1, blk identically 0, one
+    (0, 0) cell).
 
     Pair-exactness argument: ``blk`` is a FUNCTION of the hash, so each
     distinct hash lands in exactly one sub-block and each unordered
@@ -384,46 +371,11 @@ def hamming_hash_pairs(
     bit-identical). The per-key memory bound is unchanged: a (g, b)
     bucket splits exactly as its per-band bucket did, so each side of
     a (g, b, ba, bb) cell still buffers <= ~bucket_cap rows."""
-    cap = int(bucket_cap)
-    bands = _bands(n_bits, radius + 1)
-    max_width = max(w for _, w in bands)
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("g"),
-                F.expr(
-                    f"shiftrightunsigned(h, {off}) & {(1 << w) - 1}"
-                ).alias("b"),
-            )
-            for i, (off, w) in enumerate(bands)
-        ]
-    )
-    bt = h.select(
-        "h", "cnt", F.explode(band_structs).alias("gb")
-    ).select("h", "cnt", F.col("gb.g").alias("g"), F.col("gb.b").alias("b"))
-    # bucket sizing across ALL bands at once: bounded by
-    # Σ_g min(|H|, 2^width_g) rows — broadcast under the same
-    # driver-safety rule as the per-band form (width <= 20)
-    sizes = bt.groupBy("g", "b").agg(
-        F.ceil(F.count(F.lit(1)) / F.lit(cap)).cast("int").alias("nb")
-    )
-    sized = F.broadcast(sizes) if max_width <= 20 else sizes
-    blocked = bt.join(sized, ["g", "b"]).select(
-        "g",
-        "b",
-        F.pmod(F.xxhash64(F.col("h")), F.col("nb").cast("long"))
-        .cast("int")
-        .alias("blk"),
-        "nb",
-        "h",
-        "cnt",
-    )
-    # sub-block-pair tagging WITHOUT skeleton joins (the r13 plan
-    # diet): a row in block i serves as the LEFT side of cells
-    # (i, bb) for bb in [i, nb) and as the RIGHT side of cells
-    # (ba, i) for ba in [0, i] — two narrow explodes replace the
-    # three shuffling joins of the skeleton form, with the identical
-    # per-key memory bound (each side of a cell buffers one sub-block)
+    blocked = _band_blocks(h, n_bits, radius, bucket_cap)
+    # sub-block-pair tagging without a skeleton join: a row in block i
+    # serves as the LEFT side of cells (i, bb) for bb in [i, nb) and as
+    # the RIGHT side of cells (ba, i) for ba in [0, i] — two narrow
+    # explodes, each side of a cell buffering one sub-block
     a = blocked.select(
         "g",
         "b",
@@ -450,7 +402,7 @@ def hamming_hash_pairs(
     # repartitions are exempt from AQE coalescing and the join
     # reuses them, so no extra exchange; the toy-scale cost is
     # fixed task-launch overhead, paid ONCE now instead of per band
-    n_parts = _pair_join_partitions(bt)
+    n_parts = _pair_join_partitions(h)
     a = a.repartition(n_parts, "g", "b", "ba", "bb")
     bside = bside.repartition(n_parts, "g", "b", "ba", "bb")
     cand = (
@@ -568,7 +520,6 @@ def hamming_pairs_brute(
 
 
 AUDIO_FRAMES_WHT = 8  # power-of-two frame count the WHT runs over
-WHASH_BITS = AUDIO_FRAMES_WHT - 1  # the 7 non-DC coefficient sign bits
 
 
 def _wht8(sums: list[int]) -> list[int]:
@@ -593,7 +544,6 @@ def _wht8(sums: list[int]) -> list[int]:
 
 
 GRIDW = 8  # power-of-two grid for the 2-D image WHT
-IWHASH_BITS = GRIDW * GRIDW - 1  # 63 non-DC sequency signs
 
 
 def _wht8_2d(m: list[list[int]]) -> list[list[int]]:
@@ -631,29 +581,26 @@ def _iwhash_bits(sums, counts) -> int:
     return h
 
 
-_IWHASH_SCHEMA = _phash_schema("iwhash")
-
-
 def image_whash64(with_payload: DataFrame) -> DataFrame:
     """(doc_id, payload) -> (doc_id, iwhash, grid_sig): the 63-bit 2-D
     sequency-domain image hash (judge r12 next-round #8 — the 'pHash
     proper' DCT-analogue grain the dHash family approximates), over
     the shared decode->grid kernel."""
-    return _image_dhash_frame(
-        with_payload, GRIDW, GRIDW, _iwhash_bits, _IWHASH_SCHEMA
-    )
+    return _image_hash(with_payload, "iwhash", _iwhash_bits)
 
 
-_WHASH_SCHEMA = StructType(
-    [StructField("doc_id", LongType()), StructField("whash", LongType())]
-)
+def _wht_bits(sums: list[int]) -> int:
+    """Bit k-1 set iff W[k] > 0 for the non-DC coefficients of the
+    exact integer WHT (:func:`_wht8`) of the frame sums."""
+    w = _wht8(sums)
+    return sum(1 << (k - 1) for k in range(1, len(w)) if w[k] > 0)
 
 
 def audio_wht_fingerprint(with_payload: DataFrame) -> DataFrame:
-    """(doc_id, whash) -> the SEQUENCY-domain audio fingerprint: REAL
-    RIFF/WAV decode, 8 frame SAMPLE SUMS (per-sample map (i*8)//n),
-    exact integer WHT (:func:`_wht8`), bit k-1 set iff W[k] > 0 for
-    the ``WHASH_BITS`` = 7 non-DC coefficients. The DC coefficient
+    """(doc_id, payload) -> (doc_id, whash): the SEQUENCY-domain audio
+    fingerprint. REAL RIFF/WAV decode, 8 frame SAMPLE SUMS (per-sample
+    map (i*8)//n), exact integer WHT (:func:`_wht8`), bit k-1 set iff
+    W[k] > 0 for the 7 non-DC coefficients. The DC coefficient
     (sum of all samples) is skipped as near-informationless for
     unsigned 8-bit PCM; on the SIGNED 16-bit path it can be <= 0
     (advice r12 #3), which only strengthens skipping it. Upgrades the
@@ -663,16 +610,55 @@ def audio_wht_fingerprint(with_payload: DataFrame) -> DataFrame:
     make the sequency signs fixture artifacts); the registered
     oracle's synthetic-WAV geometry guarantees n >= 8, asserted where
     the oracle SQL is built (``plans/multimodal.py``)."""
+    return _audio_hash(with_payload, "whash", AUDIO_FRAMES_WHT, _wht_bits)
 
-    def per_item(payload: bytes) -> Iterator[tuple]:
-        s = decode_audio(payload)["samples"]
-        if len(s) < AUDIO_FRAMES_WHT:
-            return
-        w = _wht8(_frame_sums(s, AUDIO_FRAMES_WHT))
-        h = 0
-        for k in range(1, AUDIO_FRAMES_WHT):
-            if w[k] > 0:
-                h |= 1 << (k - 1)
-        yield (h,)
 
-    return map_payloads(with_payload, per_item, _WHASH_SCHEMA)
+@dataclass(frozen=True)
+class Family:
+    """One perceptual hash family: ``hasher`` maps the ``attach`` output
+    (doc_id, payload) to (doc_id, <hash column>[, grid_sig]); pairs are
+    retrieved within Hamming ``radius`` over ``n_bits`` bits split into
+    ``radius + 1`` pigeonhole bands. ``grid`` is the (gw, gh) cell grid
+    of an image family and None for audio."""
+
+    hasher: Callable[[DataFrame], DataFrame]
+    attach: Callable[[DataFrame], DataFrame]
+    n_bits: int
+    radius: int
+    grid: tuple[int, int] | None = None
+
+
+# keyed by hash column, the name every hasher writes and every query,
+# oracle and scale mode reads
+FAMILIES: dict[str, Family] = {
+    "phash": Family(
+        image_dhash,
+        attach_ppm,
+        n_bits=9 + 8,  # 3x3 horizontal + 4x2 vertical comparisons
+        radius=2,
+        grid=(GRID_W, GRID_H),
+    ),
+    "phash64": Family(
+        image_dhash64,
+        attach_ppm,
+        n_bits=(GRID64_W - 1) * GRID64_H,
+        radius=3,  # 4 disjoint 16-bit bands
+        grid=(GRID64_W, GRID64_H),
+    ),
+    "iwhash": Family(
+        image_whash64,
+        attach_ppm,
+        n_bits=GRIDW * GRIDW - 1,  # the 63 non-DC sequency signs
+        radius=3,
+        grid=(GRIDW, GRIDW),
+    ),
+    "fhash": Family(
+        audio_fingerprint, attach_wav, n_bits=AUDIO_FRAMES - 1, radius=1
+    ),
+    "whash": Family(
+        audio_wht_fingerprint,
+        attach_wav,
+        n_bits=AUDIO_FRAMES_WHT - 1,  # the 7 non-DC coefficient signs
+        radius=1,
+    ),
+}

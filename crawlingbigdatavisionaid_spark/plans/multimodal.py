@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..multimodal import binary as MM
+from ..operators import perceptual as P
 from ..sources import load_table
 from .registry import register
 
@@ -259,18 +260,18 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # already has nine forms of, extended to PIXELS and AUDIO through the
 # real decoders. Shared SQL fragments recompute the perceptual hashes
 # from the encode-side text arithmetic, exactly like the decode-stats
-# oracles above, so every count is hash-checked cross-engine.
+# oracles above, so every count is hash-checked cross-engine. Every
+# query, oracle and body below is keyed by its hash column: the family's
+# hasher, bit width, radius and grid are ``P.FAMILIES[col]``, its
+# DuckDB twin is ``_HASH_SQL[col]``.
 
-# 17-bit dHash of the decoded 4x3 intensity grid (operators/perceptual):
-# bit cy*3+cx compares cell (cx+1,cy) vs (cx,cy); bit 9+cx*2+cy compares
-# (cx,cy+1) vs (cx,cy); strictly-greater on cross-multiplied sums.
 
-
-def _grid_cells_sql(gw: int, gh: int) -> str:
-    """geom/px/cells CTE prefix shared by the dHash oracles: the
-    encode-side pixel arithmetic block-averaged onto a ``gw x gh``
-    grid with the SAME integer cell map as
+def _grid_cells_sql(col: str) -> str:
+    """geom/px/cells CTE prefix shared by the image oracles: the
+    encode-side pixel arithmetic block-averaged onto the ``gw x gh``
+    grid of ``P.FAMILIES[col]`` with the SAME integer cell map as
     ``operators/perceptual._grid_cells``."""
+    gw, gh = P.FAMILIES[col].grid
     return f"""
         geom AS (
             SELECT doc_id,
@@ -296,7 +297,10 @@ def _grid_cells_sql(gw: int, gh: int) -> str:
         )"""
 
 
-_PHASH_SQL = _grid_cells_sql(4, 3) + f"""
+# 17-bit dHash of the decoded 4x3 intensity grid (operators/perceptual):
+# bit cy*3+cx compares cell (cx+1,cy) vs (cx,cy); bit 9+cx*2+cy compares
+# (cx,cy+1) vs (cx,cy); strictly-greater on cross-multiplied sums.
+_PHASH_SQL = _grid_cells_sql("phash") + f"""
         , hb AS (
             SELECT a.doc_id,
                    SUM(CASE WHEN b.s * a.c > a.s * b.c
@@ -326,7 +330,7 @@ _PHASH_SQL = _grid_cells_sql(4, 3) + f"""
 # complement, matching Spark LongType): bits split into lo (0-31) and
 # hi (32-63) halves so the construction never overflows, then the hi
 # half is sign-adjusted before recombination.
-_PHASH64_SQL = _grid_cells_sql(9, 8) + """
+_PHASH64_SQL = _grid_cells_sql("phash64") + """
         , hb AS (
             SELECT a.doc_id,
                    SUM(CASE WHEN b.s * a.c > a.s * b.c
@@ -349,249 +353,6 @@ _PHASH64_SQL = _grid_cells_sql(9, 8) + """
             FROM geom g LEFT JOIN hb ON g.doc_id = hb.doc_id
         )"""
 
-
-def _hamming_hist_sql(
-    hash_cte: str, hash_col: str, radius: int, extra_select: str = ""
-) -> str:
-    """Brute-force per-distance weighted pair counts over a hash CTE —
-    the oracle twin of ``operators/perceptual.hamming_pair_histogram``
-    (the Spark side enumerates via exact pigeonhole banding; a hash
-    match here IS the recall-1.0 proof). ``extra_select`` prepends
-    literal columns to the final projection (advice r11 #2: callers
-    previously str.replace'd the SELECT line, which silently no-ops if
-    this template's wording drifts)."""
-    return f"""
-        WITH {hash_cte},
-        hh AS (SELECT {hash_col} AS h, COUNT(*) AS cnt FROM hashes GROUP BY 1),
-        d0 AS (
-            SELECT 0 AS hamming_distance,
-                   COALESCE(SUM(cnt * (cnt - 1) // 2), 0) AS n_pairs
-            FROM hh
-        ),
-        crossp AS (
-            SELECT CAST(bit_count(xor(a.h, b.h)) AS INTEGER)
-                       AS hamming_distance,
-                   SUM(a.cnt * b.cnt) AS n_pairs
-            FROM hh a JOIN hh b ON a.h < b.h
-            WHERE bit_count(xor(a.h, b.h)) <= {radius}
-            GROUP BY 1
-        )
-        SELECT {extra_select}
-               CAST(d.hamming_distance AS INTEGER) AS hamming_distance,
-               CAST(COALESCE(x.n_pairs, 0) AS BIGINT) AS n_pairs
-        FROM (SELECT unnest(generate_series(0, {radius}))
-                  AS hamming_distance) d
-        LEFT JOIN (SELECT * FROM d0 UNION ALL SELECT * FROM crossp) x
-          ON d.hamming_distance = x.hamming_distance
-        ORDER BY 1
-    """
-
-
-@register(
-    "dedup_image_phash",
-    bench="dedup",
-    ops=("OP-X-MM-01", "OP-X-DEDUP-02"),
-    oracle=_hamming_hist_sql(_PHASH_SQL, "phash", 2),
-)
-def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IMAGE perceptual near-dup: real PNM decode -> exact-integer 4x3
-    grid dHash (17 bits) -> EXACT Hamming-<=2 pair retrieval by
-    pigeonhole multi-index banding, reported as a weighted per-distance
-    pair histogram.
-
-    The scale story (operators/perceptual module docstring): pairs are
-    enumerated over the distinct-hash table — capped at 2^17 rows no
-    matter the corpus — so a 100x corpus grows only the one map-side
-    groupBy; the DuckDB oracle brute-forces all distinct-hash pairs
-    from the encode-side text arithmetic, so a hash match both proves
-    the decode->hash path bit-exact AND pins banded recall at 1.0."""
-    from ..operators import perceptual as P
-
-    docs = load_table(spark, sf_dir, "documents")
-    hashed = P.image_dhash(MM.attach_ppm(docs))
-    return P.hamming_pair_histogram(hashed, "phash", P.PHASH_BITS, 2)
-
-
-def _grid_recall_verdict(hashed: DataFrame, hash_col: str) -> DataFrame:
-    """Shared Spark body of the image-hash recall verdicts: over
-    (doc_id, ``hash_col``, grid_sig) rows, the dup-pair counts at the
-    exact-grid grain and at the hash's distance-0 grain, and
-    ``recall_ok`` iff every grid signature maps to exactly ONE hash and
-    the grid pairs do not exceed the hash pairs."""
-    hashed = hashed.localCheckpoint(eager=False)
-    gd = (
-        hashed.groupBy("grid_sig")
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.countDistinct(hash_col).alias("nh"),
-        )
-        .agg(
-            F.coalesce(
-                F.sum(F.expr("cnt * (cnt - 1) DIV 2")), F.lit(0)
-            ).alias("p"),
-            F.max("nh").alias("mh"),
-        )
-    )
-    hd = (
-        hashed.groupBy(hash_col)
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .agg(
-            F.coalesce(
-                F.sum(F.expr("cnt * (cnt - 1) DIV 2")), F.lit(0)
-            ).alias("hp")
-        )
-    )
-    return (
-        gd.crossJoin(F.broadcast(hd))  # two 1-row aggregates
-        .select(
-            F.col("p").cast("bigint").alias("n_grid_dup_pairs"),
-            F.col("hp").cast("bigint").alias("n_hash_d0_pairs"),
-            ((F.col("mh") == 1) & (F.col("p") <= F.col("hp"))).alias(
-                "recall_ok"
-            ),
-        )
-    )
-
-
-@register(
-    "dedup_image_phash_recall",
-    ops=("OP-X-MM-01", "OP-X-DEDUP-02"),
-    oracle=f"""
-        WITH {_PHASH_SQL},
-        sig AS (
-            SELECT doc_id,
-                   CAST(MAX(w) AS VARCHAR) || 'x' || CAST(MAX(h) AS VARCHAR)
-                   || ':' ||
-                   string_agg(CAST(s AS VARCHAR), '/' ORDER BY cy, cx)
-                       AS grid_sig
-            FROM cells JOIN geom USING (doc_id)
-            GROUP BY doc_id
-        ),
-        j AS (
-            SELECT sig.grid_sig, hashes.phash
-            FROM sig JOIN hashes ON sig.doc_id = hashes.doc_id
-        ),
-        gd AS (
-            SELECT COALESCE(SUM(cnt * (cnt - 1) // 2), 0) AS p,
-                   MAX(nh) AS mh
-            FROM (SELECT grid_sig, COUNT(*) AS cnt,
-                         COUNT(DISTINCT phash) AS nh
-                  FROM j GROUP BY 1)
-        ),
-        hd AS (
-            SELECT COALESCE(SUM(cnt * (cnt - 1) // 2), 0) AS p
-            FROM (SELECT phash, COUNT(*) AS cnt FROM j GROUP BY 1)
-        )
-        SELECT CAST(gd.p AS BIGINT) AS n_grid_dup_pairs,
-               CAST(hd.p AS BIGINT) AS n_hash_d0_pairs,
-               (gd.mh = 1 AND gd.p <= hd.p) AS recall_ok
-        FROM gd, hd
-    """,
-)
-def dedup_image_phash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall VERDICT for the image perceptual hash vs the EXACT grid:
-    every pair of images with an IDENTICAL decoded 4x3 grid (the
-    exact-duplicate grain, ``grid_sig``) must be retrieved by the hash
-    at distance 0 — pinned structurally as 'every grid signature maps
-    to exactly ONE phash' (``recall_ok``), with the dup-pair counts at
-    both grains as the measured columns (hash pairs >= grid pairs; the
-    surplus is the hash's deliberate quantization coarseness)."""
-    from ..operators import perceptual as P
-
-    docs = load_table(spark, sf_dir, "documents")
-    return _grid_recall_verdict(P.image_dhash(MM.attach_ppm(docs)), "phash")
-
-
-@register(
-    "dedup_image_phash64",
-    bench="dedup",
-    ops=("OP-X-MM-01", "OP-X-DEDUP-02"),
-    oracle=_hamming_hist_sql(_PHASH64_SQL, "phash64", 3),
-)
-def dedup_image_phash64(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IMAGE perceptual near-dup at the STANDARD 64-bit dHash grain
-    (judge r11 next-round #4): the 17-bit tier deliberately saturates
-    at 131k distinct hashes — ideal for proving the distinct-hash
-    scale shape, but at real corpus scale unrelated images collide at
-    d=0 and the dedup DECISION degrades. The 9x8-grid 64-bit hash
-    defers saturation to 2^64 while keeping everything else identical:
-    banding stays EXACT (Hamming <= 3 via 4 disjoint 16-bit bands —
-    pigeonhole, not approximate LSH), the distinct-hash table still
-    never exceeds min(N, 2^64) rows, and the corpus-sized work is
-    still one map-side-combinable groupBy. The DuckDB oracle
-    brute-forces all distinct-hash pairs from the encode-side text
-    arithmetic (two's-complement BIGINT on both engines), so a hash
-    match proves the decode->hash path bit-exact AND pins banded
-    recall at 1.0."""
-    from ..operators import perceptual as P
-
-    docs = load_table(spark, sf_dir, "documents")
-    hashed = P.image_dhash64(MM.attach_ppm(docs))
-    return P.hamming_pair_histogram(hashed, "phash64", P.PHASH64_BITS, 3)
-
-
-@register(
-    "dedup_image_phash64_recall",
-    ops=("OP-X-MM-01", "OP-X-DEDUP-02"),
-    # like the 17-bit recall oracle, but the 9x8 grid needs a DENSE
-    # cell spine: fixture images are smaller than the grid, so empty
-    # cells exist (count 0) and the Spark grid_sig spells their zeros —
-    # the oracle cross-joins the full 72-cell grid and COALESCEs
-    oracle=f"""
-        WITH {_PHASH64_SQL},
-        spine AS (
-            SELECT a.cy, b.cx
-            FROM (SELECT unnest(generate_series(0, 7)) AS cy) a,
-                 (SELECT unnest(generate_series(0, 8)) AS cx) b
-        ),
-        dense AS (
-            SELECT g.doc_id, g.w, g.h, sp.cy, sp.cx,
-                   COALESCE(cells.s, 0) AS s
-            FROM geom g
-            CROSS JOIN spine sp
-            LEFT JOIN cells ON cells.doc_id = g.doc_id
-                           AND cells.cy = sp.cy AND cells.cx = sp.cx
-        ),
-        sig AS (
-            SELECT doc_id,
-                   CAST(MAX(w) AS VARCHAR) || 'x' || CAST(MAX(h) AS VARCHAR)
-                   || ':' ||
-                   string_agg(CAST(s AS VARCHAR), '/' ORDER BY cy, cx)
-                       AS grid_sig
-            FROM dense GROUP BY doc_id
-        ),
-        j AS (
-            SELECT sig.grid_sig, hashes.phash64
-            FROM sig JOIN hashes ON sig.doc_id = hashes.doc_id
-        ),
-        gd AS (
-            SELECT COALESCE(SUM(cnt * (cnt - 1) // 2), 0) AS p,
-                   MAX(nh) AS mh
-            FROM (SELECT grid_sig, COUNT(*) AS cnt,
-                         COUNT(DISTINCT phash64) AS nh
-                  FROM j GROUP BY 1)
-        ),
-        hd AS (
-            SELECT COALESCE(SUM(cnt * (cnt - 1) // 2), 0) AS p
-            FROM (SELECT phash64, COUNT(*) AS cnt FROM j GROUP BY 1)
-        )
-        SELECT CAST(gd.p AS BIGINT) AS n_grid_dup_pairs,
-               CAST(hd.p AS BIGINT) AS n_hash_d0_pairs,
-               (gd.mh = 1 AND gd.p <= hd.p) AS recall_ok
-        FROM gd, hd
-    """,
-)
-def dedup_image_phash64_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall VERDICT for the 64-bit dHash vs the EXACT 9x8 grid: every
-    pair of images with an IDENTICAL decoded grid must be retrieved at
-    distance 0, pinned structurally as 'every grid signature maps to
-    exactly ONE phash64' — same contract as the 17-bit verdict."""
-    from ..operators import perceptual as P
-
-    docs = load_table(spark, sf_dir, "documents")
-    return _grid_recall_verdict(P.image_dhash64(MM.attach_ppm(docs)), "phash64")
-
-
 # 63-bit 2-D sequency-domain image hash (judge r12 next-round #8): the
 # 8x8 cell-SUM grid through an exact integer 2-D Walsh-Hadamard
 # transform (hm is the symmetric Sylvester ±1 matrix, applied along x
@@ -599,7 +360,7 @@ def dedup_image_phash64_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # DENSIFIED over the full 8x8 spine first (fixture images are smaller
 # than the grid, and a transform needs the zero cells). Bit 62 is the
 # top bit, so the BIGINT packing needs no two's-complement handling.
-_IWHASH_SQL = _grid_cells_sql(8, 8) + """
+_IWHASH_SQL = _grid_cells_sql("iwhash") + """
         , ispine AS (
             SELECT a.cy, b.cx
             FROM (SELECT unnest(generate_series(0, 7)) AS cy) a,
@@ -636,273 +397,9 @@ _IWHASH_SQL = _grid_cells_sql(8, 8) + """
             FROM iw GROUP BY 1
         )"""
 
-
-@register(
-    "dedup_image_whash",
-    bench="dedup",
-    ops=("OP-X-MM-01", "OP-X-DEDUP-02"),
-    oracle=_hamming_hist_sql(_IWHASH_SQL, "iwhash", 3),
-)
-def dedup_image_whash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IMAGE near-dup at the 2-D SEQUENCY grain — the 'pHash proper'
-    DCT-analogue the dHash family approximates (judge r12 next-round
-    #8): real PNM decode -> exact-integer 8x8 cell-sum grid -> exact
-    integer 2-D Walsh-Hadamard transform -> sign bits of the 63 non-DC
-    coefficients -> EXACT Hamming-<=3 pair histogram via pigeonhole
-    banding (4 disjoint bands, with the r13 hot-band sub-split). Same
-    honest tradeoff as the audio WHT tier: the WHT is the ±1-basis
-    analogue of the DCT, chosen because a float DCT has no bit-exact
-    cross-engine oracle; spectral-sign hashing over block means is the
-    standard pHash construction (Zauner 2010), here over block SUMS
-    for exact integer parity (proportional to means under uniform cell
-    counts — see ``operators/perceptual._iwhash_bits``)."""
-    from ..operators import perceptual as P
-
-    docs = load_table(spark, sf_dir, "documents")
-    hashed = P.image_whash64(MM.attach_ppm(docs))
-    return P.hamming_pair_histogram(hashed, "iwhash", P.IWHASH_BITS, 3)
-
-
-@register(
-    "dedup_image_whash_recall",
-    ops=("OP-X-MM-01", "OP-X-DEDUP-02"),
-    # same structural contract as the dHash recall verdicts, at the
-    # sequency grain: the 8x8 spine densifies, grid_sig spells zeros
-    oracle=f"""
-        WITH {_IWHASH_SQL},
-        sigsrc AS (
-            SELECT g.doc_id, g.w, g.h, sp.cy, sp.cx,
-                   COALESCE(cells.s, 0) AS s
-            FROM geom g
-            CROSS JOIN ispine sp
-            LEFT JOIN cells ON cells.doc_id = g.doc_id
-                           AND cells.cy = sp.cy AND cells.cx = sp.cx
-        ),
-        sig AS (
-            SELECT doc_id,
-                   CAST(MAX(w) AS VARCHAR) || 'x' || CAST(MAX(h) AS VARCHAR)
-                   || ':' ||
-                   string_agg(CAST(s AS VARCHAR), '/' ORDER BY cy, cx)
-                       AS grid_sig
-            FROM sigsrc GROUP BY doc_id
-        ),
-        j AS (
-            SELECT sig.grid_sig, hashes.iwhash
-            FROM sig JOIN hashes ON sig.doc_id = hashes.doc_id
-        ),
-        gd AS (
-            SELECT COALESCE(SUM(cnt * (cnt - 1) // 2), 0) AS p,
-                   MAX(nh) AS mh
-            FROM (SELECT grid_sig, COUNT(*) AS cnt,
-                         COUNT(DISTINCT iwhash) AS nh
-                  FROM j GROUP BY 1)
-        ),
-        hd AS (
-            SELECT COALESCE(SUM(cnt * (cnt - 1) // 2), 0) AS p
-            FROM (SELECT iwhash, COUNT(*) AS cnt FROM j GROUP BY 1)
-        )
-        SELECT CAST(gd.p AS BIGINT) AS n_grid_dup_pairs,
-               CAST(hd.p AS BIGINT) AS n_hash_d0_pairs,
-               (gd.mh = 1 AND gd.p <= hd.p) AS recall_ok
-        FROM gd, hd
-    """,
-)
-def dedup_image_whash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall VERDICT for the 2-D sequency hash vs the EXACT 8x8 grid:
-    identical decoded grid => identical iwhash (the hash is a pure
-    function of the cell sums), pinned structurally plus the dup-pair
-    count inequality — the contract shared by all perceptual recall
-    verdicts."""
-    from ..operators import perceptual as P
-
-    docs = load_table(spark, sf_dir, "documents")
-    return _grid_recall_verdict(P.image_whash64(MM.attach_ppm(docs)), "iwhash")
-
-
-@register(
-    "stream_phash_merge",
-    ops=("OP-STR-01", "OP-X-MM-01", "OP-X-DEDUP-02"),
-    # streamed fold state == batch distinct-hash table, so the
-    # histogram read off it is graded by the SAME brute-force oracle
-    # as the batch dedup_image_phash — streamed index vs DuckDB, not
-    # vs our own batch code
-    oracle=_hamming_hist_sql(
-        _PHASH_SQL, "phash", 2, extra_select="TRUE AS multi_batch,"
-    ),
-)
-def stream_phash_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming perceptual-dedup index maintenance, end-to-end: the
-    document corpus drains as a multi-file delta; each micro-batch
-    runs the real encode→PNM-decode→dHash path and folds its
-    (phash, cnt) partial into the versioned state
-    (``streaming/ingest.phash_merge_ingest`` — the eighth fold shape:
-    additive counts, order-free, replay-safe); the final state — the
-    corpus-size-capped distinct-hash table, i.e. THE near-dup index —
-    yields the Hamming pair histogram exactly as the batch
-    ``dedup_image_phash`` computes it. The oracle recomputes the
-    histogram from scratch, so micro-batch merge = one-shot is proven
-    against DuckDB."""
-    import shutil
-    import tempfile
-
-    from ..operators import perceptual as P
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    root = tempfile.mkdtemp(prefix="phash_merge_")
-    try:
-        delta_dir = f"{root}/delta"
-        docs.repartition(3).write.parquet(delta_dir)
-        from ..streaming.ingest import phash_merge_ingest
-
-        n_batches, final_dir = phash_merge_ingest(
-            spark,
-            delta_dir,
-            f"{root}/state",
-            f"{root}/ckpt",
-            "doc_id long, text string",
-        )
-        state = spark.read.parquet(final_dir).select(
-            F.col("phash").alias("h"), "cnt"
-        )
-        rows = (
-            P.hamming_histogram_from_counts(state, P.PHASH_BITS, 2)
-            .select(
-                F.lit(n_batches > 1).alias("multi_batch"),
-                "hamming_distance",
-                "n_pairs",
-            )
-            .orderBy("hamming_distance")
-            .collect()
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "multi_batch boolean, hamming_distance int, n_pairs bigint"
-    )
-
-
-# recursive-CTE connected components over the brute-force hash-pair
-# graph (the dedup_components oracle pattern, lifted to the perceptual
-# grain), then the doc-weighted cluster-size histogram — shared by both
-# dHash grains via format(hcol=, radius=)
-_PHASH_CLUSTERS_TAIL = """,
-        hh AS (SELECT {hcol}, COUNT(*) AS cnt FROM hashes GROUP BY 1),
-        ep AS (
-            SELECT a.{hcol} AS hu, b.{hcol} AS hv
-            FROM hh a JOIN hh b ON a.{hcol} < b.{hcol}
-            WHERE bit_count(xor(a.{hcol}, b.{hcol})) <= {radius}
-        ),
-        edges AS (
-            SELECT hu AS src, hv AS dst FROM ep
-            UNION SELECT hv, hu FROM ep
-        ),
-        reach(src, dst) AS (
-            SELECT src, dst FROM edges
-            UNION
-            SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-        ),
-        cc AS (
-            SELECT src AS node, LEAST(src, MIN(dst)) AS component
-            FROM reach GROUP BY src
-        ),
-        dc AS (
-            SELECT COALESCE(cc.component, hh.{hcol}) AS comp, hh.cnt
-            FROM hh LEFT JOIN cc ON hh.{hcol} = cc.node
-        ),
-        cl AS (SELECT comp, SUM(cnt) AS sz FROM dc GROUP BY 1)
-        SELECT CAST(sz AS BIGINT) AS cluster_size,
-               CAST(COUNT(*) AS BIGINT) AS n_clusters
-        FROM cl GROUP BY 1 ORDER BY 1
-    """
-
-
-@register(
-    "dedup_phash_clusters",
-    bench="dedup",
-    ops=("OP-X-MM-01", "OP-X-DEDUP-02"),
-    oracle="WITH RECURSIVE "
-    + _PHASH_SQL.lstrip()
-    + _PHASH_CLUSTERS_TAIL.format(hcol="phash", radius=2),
-)
-def dedup_phash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The perceptual dedup DECISION, composed end-to-end: decode ->
-    dHash -> banded Hamming-<=2 pairs -> connected components ->
-    doc-weighted cluster-size histogram (how many dedup groups of each
-    size the image corpus contains — the number a curation run reports
-    before keeping one canonical image per cluster).
-
-    The scale composition is the point (and mirrors the text funnel
-    ``dedup_components``): components run over the DISTINCT-HASH graph
-    (<= 2^17 nodes regardless of corpus size — min-label propagation
-    with path-halving, O(log diameter) rounds), and the corpus-sized
-    tables only ever see one groupBy (hash multiplicities) and one
-    broadcast-sized join back. The DuckDB oracle recomputes the same
-    clusters with a recursive CTE over the brute-force pair graph."""
-    return _phash_cluster_decision(spark, sf_dir, "phash")
-
-
-def _phash_cluster_decision(
-    spark: SparkSession, sf_dir: str, hash_col: str
-) -> DataFrame:
-    """Shared decode -> dHash -> banded pairs -> CC -> histogram body
-    of the two cluster-decision grains (17-bit radius 2, 64-bit
-    radius 3)."""
-    from ..operators import perceptual as P
-    from ..operators.components import connected_components
-
-    hasher, n_bits, radius = {
-        "phash": (P.image_dhash, P.PHASH_BITS, 2),
-        "phash64": (P.image_dhash64, P.PHASH64_BITS, 3),
-    }[hash_col]
-    docs = load_table(spark, sf_dir, "documents")
-    hashed = hasher(MM.attach_ppm(docs))
-    h = P.distinct_hashes(hashed, hash_col)
-    pairs = P.hamming_hash_pairs(h, n_bits, radius).select("hu", "hv")
-    cc = connected_components(pairs, "hu", "hv")
-    dc = h.join(cc, h["h"] == cc["node"], "left").select(
-        F.coalesce(F.col("component"), F.col("h")).alias("comp"),
-        F.col("cnt"),
-    )
-    return (
-        dc.groupBy("comp")
-        .agg(F.sum("cnt").alias("sz"))
-        .groupBy(F.col("sz").cast("bigint").alias("cluster_size"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_clusters"))
-        .orderBy("cluster_size")
-    )
-
-
-@register(
-    "dedup_phash64_clusters",
-    bench="dedup",
-    ops=("OP-X-MM-01", "OP-X-DEDUP-02"),
-    # the 17-bit cluster oracle re-run at the 64-bit grain: recursive-
-    # CTE connected components over the brute-force Hamming-<=3 pair
-    # graph of the 9x8-grid dHash
-    oracle="WITH RECURSIVE "
-    + _PHASH64_SQL.lstrip()
-    + _PHASH_CLUSTERS_TAIL.format(hcol="phash64", radius=3),
-)
-def dedup_phash64_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The perceptual dedup DECISION at the STANDARD 64-bit dHash
-    grain (judge r11 next-round #4's third deliverable): identical
-    composition to ``dedup_phash_clusters`` — banded Hamming-<=3
-    pairs -> connected components -> doc-weighted cluster-size
-    histogram — but over the 2^64 hash space, where d=0 collisions of
-    UNRELATED images (the 17-bit tier's saturation artifact) vanish
-    and clusters mean near-duplicates again at any corpus scale. CC
-    still runs on the distinct-hash graph (min(N, 2^64) nodes — in
-    practice bounded by corpus cardinality, exactly like the text
-    funnel's doc-grain CC), corpus-sized tables still see one groupBy
-    + one broadcast join."""
-    return _phash_cluster_decision(spark, sf_dir, "phash64")
-
-
 # 9-bit adjacent-frame-energy fingerprint of the decoded WAV clip:
 # AUDIO_FRAMES frames over the clip via the per-sample map, bit k set
 # iff energy(k+1) > energy(k).
-from ..operators.perceptual import AUDIO_FRAMES as P_AUDIO_FRAMES  # noqa: E402
-
 _AHASH_SQL = f"""
         s AS (
             SELECT doc_id,
@@ -918,7 +415,7 @@ _AHASH_SQL = f"""
             -- width, which silently diverges when WAV_SAMPLES or
             -- AUDIO_FRAMES changes (r11 review finding)
             SELECT doc_id,
-                   CAST((i * {P_AUDIO_FRAMES}) // {MM.WAV_SAMPLES}
+                   CAST((i * {P.AUDIO_FRAMES}) // {MM.WAV_SAMPLES}
                         AS INTEGER) AS k,
                    SUM(CAST(ascii(substr(p, i + 1, 1)) AS BIGINT)) AS e
             FROM smp GROUP BY 1, 2
@@ -931,7 +428,6 @@ _AHASH_SQL = f"""
             GROUP BY 1
         )"""
 
-
 # SEQUENCY-domain audio fingerprint (r12, closes VERDICT r11 residual
 # #4's honest gap): 8 frame energies -> EXACT integer Walsh-Hadamard
 # transform (Sylvester order, sign matrix (-1)^popcount(k&j)) -> 7
@@ -942,9 +438,7 @@ _AHASH_SQL = f"""
 # oracle emits a hash for EVERY document — sound only because the
 # synthetic-WAV geometry (rpad to WAV_SAMPLES) guarantees n >= 8 for all
 # rows (advice r12 #3: assert the assumption where the oracle is built)
-from ..operators.perceptual import AUDIO_FRAMES_WHT as _AUDIO_FRAMES_WHT  # noqa: E402
-
-assert MM.WAV_SAMPLES >= _AUDIO_FRAMES_WHT
+assert MM.WAV_SAMPLES >= P.AUDIO_FRAMES_WHT
 _WHT_SQL = f"""
         s AS (
             SELECT doc_id,
@@ -977,12 +471,446 @@ _WHT_SQL = f"""
             FROM w GROUP BY 1
         )"""
 
+# the DuckDB twin of each ``P.FAMILIES`` hasher, keyed the same way
+_HASH_SQL = {
+    "phash": _PHASH_SQL,
+    "phash64": _PHASH64_SQL,
+    "iwhash": _IWHASH_SQL,
+    "fhash": _AHASH_SQL,
+    "whash": _WHT_SQL,
+}
+
+
+def _hamming_hist_sql(hash_col: str, extra_select: str = "") -> str:
+    """Brute-force per-distance weighted pair counts over
+    ``_HASH_SQL[hash_col]`` within the family's radius — the oracle twin of ``operators/perceptual.hamming_pair_histogram``
+    (the Spark side enumerates via exact pigeonhole banding; a hash
+    match here IS the recall-1.0 proof). ``extra_select`` prepends
+    literal columns to the final projection (advice r11 #2: callers
+    previously str.replace'd the SELECT line, which silently no-ops if
+    this template's wording drifts)."""
+    radius = P.FAMILIES[hash_col].radius
+    return f"""
+        WITH {_HASH_SQL[hash_col]},
+        hh AS (SELECT {hash_col} AS h, COUNT(*) AS cnt FROM hashes GROUP BY 1),
+        d0 AS (
+            SELECT 0 AS hamming_distance,
+                   COALESCE(SUM(cnt * (cnt - 1) // 2), 0) AS n_pairs
+            FROM hh
+        ),
+        crossp AS (
+            SELECT CAST(bit_count(xor(a.h, b.h)) AS INTEGER)
+                       AS hamming_distance,
+                   SUM(a.cnt * b.cnt) AS n_pairs
+            FROM hh a JOIN hh b ON a.h < b.h
+            WHERE bit_count(xor(a.h, b.h)) <= {radius}
+            GROUP BY 1
+        )
+        SELECT {extra_select}
+               CAST(d.hamming_distance AS INTEGER) AS hamming_distance,
+               CAST(COALESCE(x.n_pairs, 0) AS BIGINT) AS n_pairs
+        FROM (SELECT unnest(generate_series(0, {radius}))
+                  AS hamming_distance) d
+        LEFT JOIN (SELECT * FROM d0 UNION ALL SELECT * FROM crossp) x
+          ON d.hamming_distance = x.hamming_distance
+        ORDER BY 1
+    """
+
+
+def _recall_sql(col: str) -> str:
+    """Oracle of the image recall verdicts (:func:`_grid_recall_verdict`):
+    ``grid_sig`` spelled over the DENSE ``gw x gh`` cell spine — fixture
+    images can be smaller than the grid, so empty cells exist and the
+    Spark ``grid_sig`` spells their zeros — then the dup-pair counts at
+    the grid and hash-d0 grains and ``recall_ok``."""
+    gw, gh = P.FAMILIES[col].grid
+    return f"""
+        WITH {_HASH_SQL[col]},
+        spine AS (
+            SELECT a.cy, b.cx
+            FROM (SELECT unnest(generate_series(0, {gh - 1})) AS cy) a,
+                 (SELECT unnest(generate_series(0, {gw - 1})) AS cx) b
+        ),
+        dense AS (
+            SELECT g.doc_id, g.w, g.h, sp.cy, sp.cx,
+                   COALESCE(cells.s, 0) AS s
+            FROM geom g
+            CROSS JOIN spine sp
+            LEFT JOIN cells ON cells.doc_id = g.doc_id
+                           AND cells.cy = sp.cy AND cells.cx = sp.cx
+        ),
+        sig AS (
+            SELECT doc_id,
+                   CAST(MAX(w) AS VARCHAR) || 'x' || CAST(MAX(h) AS VARCHAR)
+                   || ':' ||
+                   string_agg(CAST(s AS VARCHAR), '/' ORDER BY cy, cx)
+                       AS grid_sig
+            FROM dense GROUP BY doc_id
+        ),
+        j AS (
+            SELECT sig.grid_sig, hashes.{col}
+            FROM sig JOIN hashes ON sig.doc_id = hashes.doc_id
+        ),
+        gd AS (
+            SELECT COALESCE(SUM(cnt * (cnt - 1) // 2), 0) AS p,
+                   MAX(nh) AS mh
+            FROM (SELECT grid_sig, COUNT(*) AS cnt,
+                         COUNT(DISTINCT {col}) AS nh
+                  FROM j GROUP BY 1)
+        ),
+        hd AS (
+            SELECT COALESCE(SUM(cnt * (cnt - 1) // 2), 0) AS p
+            FROM (SELECT {col}, COUNT(*) AS cnt FROM j GROUP BY 1)
+        )
+        SELECT CAST(gd.p AS BIGINT) AS n_grid_dup_pairs,
+               CAST(hd.p AS BIGINT) AS n_hash_d0_pairs,
+               (gd.mh = 1 AND gd.p <= hd.p) AS recall_ok
+        FROM gd, hd
+    """
+
+
+def _clusters_sql(hcol: str) -> str:
+    """Oracle of the cluster decisions (:func:`_phash_cluster_decision`):
+    recursive-CTE connected components over the brute-force hash-pair
+    graph (the dedup_components oracle pattern, lifted to the perceptual
+    grain), then the doc-weighted cluster-size histogram."""
+    radius = P.FAMILIES[hcol].radius
+    return "WITH RECURSIVE " + _HASH_SQL[hcol].lstrip() + f""",
+        hh AS (SELECT {hcol}, COUNT(*) AS cnt FROM hashes GROUP BY 1),
+        ep AS (
+            SELECT a.{hcol} AS hu, b.{hcol} AS hv
+            FROM hh a JOIN hh b ON a.{hcol} < b.{hcol}
+            WHERE bit_count(xor(a.{hcol}, b.{hcol})) <= {radius}
+        ),
+        edges AS (
+            SELECT hu AS src, hv AS dst FROM ep
+            UNION SELECT hv, hu FROM ep
+        ),
+        reach(src, dst) AS (
+            SELECT src, dst FROM edges
+            UNION
+            SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
+        ),
+        cc AS (
+            SELECT src AS node, LEAST(src, MIN(dst)) AS component
+            FROM reach GROUP BY src
+        ),
+        dc AS (
+            SELECT COALESCE(cc.component, hh.{hcol}) AS comp, hh.cnt
+            FROM hh LEFT JOIN cc ON hh.{hcol} = cc.node
+        ),
+        cl AS (SELECT comp, SUM(cnt) AS sz FROM dc GROUP BY 1)
+        SELECT CAST(sz AS BIGINT) AS cluster_size,
+               CAST(COUNT(*) AS BIGINT) AS n_clusters
+        FROM cl GROUP BY 1 ORDER BY 1
+    """
+
+
+def _hashed(spark: SparkSession, sf_dir: str, col: str) -> DataFrame:
+    """The documents through ``P.FAMILIES[col]``: payload attach (real
+    PPM/WAV encode) -> decode -> hash."""
+    fam = P.FAMILIES[col]
+    return fam.hasher(fam.attach(load_table(spark, sf_dir, "documents")))
+
+
+def _pair_histogram(spark: SparkSession, sf_dir: str, col: str) -> DataFrame:
+    """Shared body of the per-distance pair-histogram queries: the
+    family's hashes through ``P.hamming_pair_histogram`` at its bit
+    width and radius."""
+    fam = P.FAMILIES[col]
+    return P.hamming_pair_histogram(
+        _hashed(spark, sf_dir, col), col, fam.n_bits, fam.radius
+    )
+
+
+def _grid_recall_verdict(
+    spark: SparkSession, sf_dir: str, hash_col: str
+) -> DataFrame:
+    """Shared Spark body of the image-hash recall verdicts: over the
+    (doc_id, ``hash_col``, grid_sig) rows of an image family, the
+    dup-pair counts at the exact-grid grain and at the hash's
+    distance-0 grain, and ``recall_ok`` iff every grid signature maps to
+    exactly ONE hash and the grid pairs do not exceed the hash pairs."""
+    hashed = _hashed(spark, sf_dir, hash_col).localCheckpoint(eager=False)
+    gd = (
+        hashed.groupBy("grid_sig")
+        .agg(
+            F.count(F.lit(1)).alias("cnt"),
+            F.countDistinct(hash_col).alias("nh"),
+        )
+        .agg(
+            F.coalesce(
+                F.sum(F.expr("cnt * (cnt - 1) DIV 2")), F.lit(0)
+            ).alias("p"),
+            F.max("nh").alias("mh"),
+        )
+    )
+    hd = (
+        hashed.groupBy(hash_col)
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .agg(
+            F.coalesce(
+                F.sum(F.expr("cnt * (cnt - 1) DIV 2")), F.lit(0)
+            ).alias("hp")
+        )
+    )
+    return (
+        gd.crossJoin(F.broadcast(hd))  # two 1-row aggregates
+        .select(
+            F.col("p").cast("bigint").alias("n_grid_dup_pairs"),
+            F.col("hp").cast("bigint").alias("n_hash_d0_pairs"),
+            ((F.col("mh") == 1) & (F.col("p") <= F.col("hp"))).alias(
+                "recall_ok"
+            ),
+        )
+    )
+
+
+def _phash_cluster_decision(
+    spark: SparkSession, sf_dir: str, hash_col: str
+) -> DataFrame:
+    """Shared decode -> dHash -> banded pairs -> CC -> histogram body
+    of the two cluster-decision grains."""
+    from ..operators.components import connected_components
+
+    fam = P.FAMILIES[hash_col]
+    h = P.distinct_hashes(_hashed(spark, sf_dir, hash_col), hash_col)
+    pairs = P.hamming_hash_pairs(h, fam.n_bits, fam.radius).select("hu", "hv")
+    cc = connected_components(pairs, "hu", "hv")
+    dc = h.join(cc, h["h"] == cc["node"], "left").select(
+        F.coalesce(F.col("component"), F.col("h")).alias("comp"),
+        F.col("cnt"),
+    )
+    return (
+        dc.groupBy("comp")
+        .agg(F.sum("cnt").alias("sz"))
+        .groupBy(F.col("sz").cast("bigint").alias("cluster_size"))
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_clusters"))
+        .orderBy("cluster_size")
+    )
+
+
+@register(
+    "dedup_image_phash",
+    bench="dedup",
+    ops=("OP-X-MM-01", "OP-X-DEDUP-02"),
+    oracle=_hamming_hist_sql("phash"),
+)
+def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IMAGE perceptual near-dup: real PNM decode -> exact-integer 4x3
+    grid dHash (17 bits) -> EXACT Hamming-<=2 pair retrieval by
+    pigeonhole multi-index banding, reported as a weighted per-distance
+    pair histogram.
+
+    The scale story (operators/perceptual module docstring): pairs are
+    enumerated over the distinct-hash table — capped at 2^17 rows no
+    matter the corpus — so a 100x corpus grows only the one map-side
+    groupBy; the DuckDB oracle brute-forces all distinct-hash pairs
+    from the encode-side text arithmetic, so a hash match both proves
+    the decode->hash path bit-exact AND pins banded recall at 1.0."""
+    return _pair_histogram(spark, sf_dir, "phash")
+
+
+@register(
+    "dedup_image_phash_recall",
+    ops=("OP-X-MM-01", "OP-X-DEDUP-02"),
+    oracle=_recall_sql("phash"),
+)
+def dedup_image_phash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recall VERDICT for the image perceptual hash vs the EXACT grid:
+    every pair of images with an IDENTICAL decoded 4x3 grid (the
+    exact-duplicate grain, ``grid_sig``) must be retrieved by the hash
+    at distance 0 — pinned structurally as 'every grid signature maps
+    to exactly ONE phash' (``recall_ok``), with the dup-pair counts at
+    both grains as the measured columns (hash pairs >= grid pairs; the
+    surplus is the hash's deliberate quantization coarseness)."""
+    return _grid_recall_verdict(spark, sf_dir, "phash")
+
+
+@register(
+    "dedup_image_phash64",
+    bench="dedup",
+    ops=("OP-X-MM-01", "OP-X-DEDUP-02"),
+    oracle=_hamming_hist_sql("phash64"),
+)
+def dedup_image_phash64(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IMAGE perceptual near-dup at the STANDARD 64-bit dHash grain
+    (judge r11 next-round #4): the 17-bit tier deliberately saturates
+    at 131k distinct hashes — ideal for proving the distinct-hash
+    scale shape, but at real corpus scale unrelated images collide at
+    d=0 and the dedup DECISION degrades. The 9x8-grid 64-bit hash
+    defers saturation to 2^64 while keeping everything else identical:
+    banding stays EXACT (Hamming <= 3 via 4 disjoint 16-bit bands —
+    pigeonhole, not approximate LSH), the distinct-hash table still
+    never exceeds min(N, 2^64) rows, and the corpus-sized work is
+    still one map-side-combinable groupBy. The DuckDB oracle
+    brute-forces all distinct-hash pairs from the encode-side text
+    arithmetic (two's-complement BIGINT on both engines), so a hash
+    match proves the decode->hash path bit-exact AND pins banded
+    recall at 1.0."""
+    return _pair_histogram(spark, sf_dir, "phash64")
+
+
+@register(
+    "dedup_image_phash64_recall",
+    ops=("OP-X-MM-01", "OP-X-DEDUP-02"),
+    oracle=_recall_sql("phash64"),
+)
+def dedup_image_phash64_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recall VERDICT for the 64-bit dHash vs the EXACT 9x8 grid: every
+    pair of images with an IDENTICAL decoded grid must be retrieved at
+    distance 0, pinned structurally as 'every grid signature maps to
+    exactly ONE phash64' — same contract as the 17-bit verdict."""
+    return _grid_recall_verdict(spark, sf_dir, "phash64")
+
+
+@register(
+    "dedup_image_whash",
+    bench="dedup",
+    ops=("OP-X-MM-01", "OP-X-DEDUP-02"),
+    oracle=_hamming_hist_sql("iwhash"),
+)
+def dedup_image_whash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IMAGE near-dup at the 2-D SEQUENCY grain — the 'pHash proper'
+    DCT-analogue the dHash family approximates (judge r12 next-round
+    #8): real PNM decode -> exact-integer 8x8 cell-sum grid -> exact
+    integer 2-D Walsh-Hadamard transform -> sign bits of the 63 non-DC
+    coefficients -> EXACT Hamming-<=3 pair histogram via pigeonhole
+    banding (4 disjoint bands, with the r13 hot-band sub-split). Same
+    honest tradeoff as the audio WHT tier: the WHT is the ±1-basis
+    analogue of the DCT, chosen because a float DCT has no bit-exact
+    cross-engine oracle; spectral-sign hashing over block means is the
+    standard pHash construction (Zauner 2010), here over block SUMS
+    for exact integer parity (proportional to means under uniform cell
+    counts — see ``operators/perceptual._iwhash_bits``)."""
+    return _pair_histogram(spark, sf_dir, "iwhash")
+
+
+@register(
+    "dedup_image_whash_recall",
+    ops=("OP-X-MM-01", "OP-X-DEDUP-02"),
+    oracle=_recall_sql("iwhash"),
+)
+def dedup_image_whash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recall VERDICT for the 2-D sequency hash vs the EXACT 8x8 grid:
+    identical decoded grid => identical iwhash (the hash is a pure
+    function of the cell sums), pinned structurally plus the dup-pair
+    count inequality — the contract shared by all perceptual recall
+    verdicts."""
+    return _grid_recall_verdict(spark, sf_dir, "iwhash")
+
+
+@register(
+    "stream_phash_merge",
+    ops=("OP-STR-01", "OP-X-MM-01", "OP-X-DEDUP-02"),
+    # streamed fold state == batch distinct-hash table, so the
+    # histogram read off it is graded by the SAME brute-force oracle
+    # as the batch dedup_image_phash — streamed index vs DuckDB, not
+    # vs our own batch code
+    oracle=_hamming_hist_sql("phash", extra_select="TRUE AS multi_batch,"),
+)
+def stream_phash_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming perceptual-dedup index maintenance, end-to-end: the
+    document corpus drains as a multi-file delta; each micro-batch
+    runs the real encode→PNM-decode→dHash path and folds its
+    (phash, cnt) partial into the versioned state
+    (``streaming/ingest.phash_merge_ingest`` — the eighth fold shape:
+    additive counts, order-free, replay-safe); the final state — the
+    corpus-size-capped distinct-hash table, i.e. THE near-dup index —
+    yields the Hamming pair histogram exactly as the batch
+    ``dedup_image_phash`` computes it. The oracle recomputes the
+    histogram from scratch, so micro-batch merge = one-shot is proven
+    against DuckDB."""
+    import shutil
+    import tempfile
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    root = tempfile.mkdtemp(prefix="phash_merge_")
+    try:
+        delta_dir = f"{root}/delta"
+        docs.repartition(3).write.parquet(delta_dir)
+        from ..streaming.ingest import phash_merge_ingest
+
+        n_batches, final_dir = phash_merge_ingest(
+            spark,
+            delta_dir,
+            f"{root}/state",
+            f"{root}/ckpt",
+            "doc_id long, text string",
+        )
+        state = spark.read.parquet(final_dir).select(
+            F.col("phash").alias("h"), "cnt"
+        )
+        fam = P.FAMILIES["phash"]
+        rows = (
+            P.hamming_histogram_from_counts(state, fam.n_bits, fam.radius)
+            .select(
+                F.lit(n_batches > 1).alias("multi_batch"),
+                "hamming_distance",
+                "n_pairs",
+            )
+            .orderBy("hamming_distance")
+            .collect()
+        )
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+    return spark.createDataFrame(
+        rows, "multi_batch boolean, hamming_distance int, n_pairs bigint"
+    )
+
+
+@register(
+    "dedup_phash_clusters",
+    bench="dedup",
+    ops=("OP-X-MM-01", "OP-X-DEDUP-02"),
+    oracle=_clusters_sql("phash"),
+)
+def dedup_phash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The perceptual dedup DECISION, composed end-to-end: decode ->
+    dHash -> banded Hamming-<=2 pairs -> connected components ->
+    doc-weighted cluster-size histogram (how many dedup groups of each
+    size the image corpus contains — the number a curation run reports
+    before keeping one canonical image per cluster).
+
+    The scale composition is the point (and mirrors the text funnel
+    ``dedup_components``): components run over the DISTINCT-HASH graph
+    (<= 2^17 nodes regardless of corpus size — min-label propagation
+    with path-halving, O(log diameter) rounds), and the corpus-sized
+    tables only ever see one groupBy (hash multiplicities) and one
+    broadcast-sized join back. The DuckDB oracle recomputes the same
+    clusters with a recursive CTE over the brute-force pair graph."""
+    return _phash_cluster_decision(spark, sf_dir, "phash")
+
+
+@register(
+    "dedup_phash64_clusters",
+    bench="dedup",
+    ops=("OP-X-MM-01", "OP-X-DEDUP-02"),
+    # the 17-bit cluster oracle re-run at the 64-bit grain: recursive-
+    # CTE connected components over the brute-force Hamming-<=3 pair
+    # graph of the 9x8-grid dHash
+    oracle=_clusters_sql("phash64"),
+)
+def dedup_phash64_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The perceptual dedup DECISION at the STANDARD 64-bit dHash
+    grain (judge r11 next-round #4's third deliverable): identical
+    composition to ``dedup_phash_clusters`` — banded Hamming-<=3
+    pairs -> connected components -> doc-weighted cluster-size
+    histogram — but over the 2^64 hash space, where d=0 collisions of
+    UNRELATED images (the 17-bit tier's saturation artifact) vanish
+    and clusters mean near-duplicates again at any corpus scale. CC
+    still runs on the distinct-hash graph (min(N, 2^64) nodes — in
+    practice bounded by corpus cardinality, exactly like the text
+    funnel's doc-grain CC), corpus-sized tables still see one groupBy
+    + one broadcast join."""
+    return _phash_cluster_decision(spark, sf_dir, "phash64")
+
 
 @register(
     "dedup_audio_wht",
     bench="dedup",
     ops=("OP-X-MM-01", "OP-X-DEDUP-02"),
-    oracle=_hamming_hist_sql(_WHT_SQL, "whash", 1),
+    oracle=_hamming_hist_sql("whash"),
 )
 def dedup_audio_wht(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AUDIO near-dup at the SEQUENCY grain (closes the r11 'no
@@ -996,18 +924,14 @@ def dedup_audio_wht(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocker that ruled out an FFT oracle does not exist here. Same
     distinct-hash scale shape as every perceptual tier: one map-side
     groupBy over the corpus, pairs on the <=2^7-row hash table."""
-    from ..operators import perceptual as P
-
-    docs = load_table(spark, sf_dir, "documents")
-    hashed = P.audio_wht_fingerprint(MM.attach_wav(docs))
-    return P.hamming_pair_histogram(hashed, "whash", P.WHASH_BITS, 1)
+    return _pair_histogram(spark, sf_dir, "whash")
 
 
 @register(
     "dedup_audio_fingerprint",
     bench="dedup",
     ops=("OP-X-MM-01", "OP-X-DEDUP-02"),
-    oracle=_hamming_hist_sql(_AHASH_SQL, "fhash", 1),
+    oracle=_hamming_hist_sql("fhash"),
 )
 def dedup_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AUDIO perceptual near-dup: real RIFF/WAV decode -> 9-bit
@@ -1017,11 +941,7 @@ def dedup_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     2-band pigeonhole, as a weighted per-distance histogram. Same
     distinct-hash scale shape as ``dedup_image_phash`` (capped at 2^9
     rows — the pair join saturates almost immediately)."""
-    from ..operators import perceptual as P
-
-    docs = load_table(spark, sf_dir, "documents")
-    hashed = P.audio_fingerprint(MM.attach_wav(docs))
-    return P.hamming_pair_histogram(hashed, "fhash", P.AHASH_BITS, 1)
+    return _pair_histogram(spark, sf_dir, "fhash")
 
 
 @register(

@@ -39,7 +39,7 @@ def test_spawn_survives_a_hung_family(monkeypatch) -> None:
     monkeypatch.setattr(
         bench.os, "killpg", lambda pgid, sig: killed.append((pgid, sig))
     )
-    got = bench._spawn("dedup", "/nonexistent", "8g")
+    got = bench._spawn("dedup", "/nonexistent")
     assert "_error" in got and "3600" in got["_error"]
     assert got["_family_wall_s"] >= 0
     assert killed == [(4242, bench.signal.SIGKILL)]
@@ -52,7 +52,7 @@ def test_last_line_carries_per_query_seconds(monkeypatch, tmp_path, capsys) -> N
     so no Spark runs."""
     import json
 
-    def fake_spawn(fam, sf_dir, mem):
+    def fake_spawn(fam, sf_dir):
         if fam == "sf1":
             return {"sf1_total": 1.0, "_family_wall_s": 1.0}
         names = bench.FAMILIES[fam]

@@ -4,13 +4,11 @@ of the registered queries."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from crawlingbigdatavisionaid_spark.multimodal.binary import (
-    attach_ppm,
-    attach_wav,
-)
 from crawlingbigdatavisionaid_spark.operators import perceptual as P
+from crawlingbigdatavisionaid_spark.sources import load_table
 
 SF = "/root/testdata/sf0.001"
 
@@ -57,37 +55,40 @@ def test_dhash_known_gradient(spark):
     assert _hash_of(spark, _p6(4, 3, pixels)) == (1 << 9) - 1
 
 
-def test_banded_equals_brute_image_and_audio(spark):
-    from crawlingbigdatavisionaid_spark.sources import load_table
-
+def _hashed(spark, col: str):
+    fam = P.FAMILIES[col]
     docs = load_table(spark, SF, "documents")
-    img = P.image_dhash(attach_ppm(docs)).localCheckpoint()
-    b1 = P.hamming_pair_histogram(img, "phash", P.PHASH_BITS, 2).collect()
-    b2 = P.hamming_pairs_brute(img, "phash", 2).collect()
+    return fam.hasher(fam.attach(docs)).localCheckpoint()
+
+
+@pytest.mark.parametrize("col", list(P.FAMILIES))
+def test_banded_equals_brute(spark, col):
+    """Every family's banded histogram equals the brute-force twin at
+    the family's own bit width and radius."""
+    fam = P.FAMILIES[col]
+    hashed = _hashed(spark, col)
+    b1 = P.hamming_pair_histogram(hashed, col, fam.n_bits, fam.radius).collect()
+    b2 = P.hamming_pairs_brute(hashed, col, fam.radius).collect()
     assert [tuple(r) for r in b1] == [tuple(r) for r in b2]
-    aud = P.audio_fingerprint(attach_wav(docs)).localCheckpoint()
-    a1 = P.hamming_pair_histogram(aud, "fhash", P.AHASH_BITS, 1).collect()
-    a2 = P.hamming_pairs_brute(aud, "fhash", 1).collect()
-    assert [tuple(r) for r in a1] == [tuple(r) for r in a2]
     # non-degenerate: the corpus must actually contain near pairs
     assert sum(r["n_pairs"] for r in b1) > 0
-    assert sum(r["n_pairs"] for r in a1) > 0
 
 
 def test_grid_signature_determines_hash(spark):
     # the structural recall contract: identical decoded grid => one
-    # phash (so exact-duplicate retrieval at distance 0 has recall 1.0)
-    from crawlingbigdatavisionaid_spark.sources import load_table
-
-    docs = load_table(spark, SF, "documents")
-    img = P.image_dhash(attach_ppm(docs))
-    mx = (
-        img.groupBy("grid_sig")
-        .agg(F.countDistinct("phash").alias("nh"))
-        .agg(F.max("nh").alias("m"))
-        .first()["m"]
-    )
-    assert mx == 1
+    # hash (so exact-duplicate retrieval at distance 0 has recall 1.0),
+    # for every image family (the hash is a function of the cell sums)
+    for col, fam in P.FAMILIES.items():
+        if fam.grid is None:
+            continue
+        mx = (
+            _hashed(spark, col)
+            .groupBy("grid_sig")
+            .agg(F.countDistinct(col).alias("nh"))
+            .agg(F.max("nh").alias("m"))
+            .first()["m"]
+        )
+        assert mx == 1, col
 
 
 def test_hamming_histogram_crafted(spark):
@@ -172,25 +173,6 @@ def test_dhash64_signed_representation_matches_duckdb():
         assert got == want, (bits, got, want)
 
 
-def test_dhash64_banded_equals_brute_and_recall(spark):
-    from crawlingbigdatavisionaid_spark.sources import load_table
-
-    docs = load_table(spark, SF, "documents")
-    img = P.image_dhash64(attach_ppm(docs)).localCheckpoint()
-    b1 = P.hamming_pair_histogram(img, "phash64", P.PHASH64_BITS, 3).collect()
-    b2 = P.hamming_pairs_brute(img, "phash64", 3).collect()
-    assert [tuple(r) for r in b1] == [tuple(r) for r in b2]
-    assert sum(r["n_pairs"] for r in b1) > 0
-    # identical decoded 9x8 grid => one phash64
-    mx = (
-        img.groupBy("grid_sig")
-        .agg(F.countDistinct("phash64").alias("nh"))
-        .agg(F.max("nh").alias("m"))
-        .first()["m"]
-    )
-    assert mx == 1
-
-
 def test_hamming_hot_band_is_memory_bounded(spark):
     """Judge r12 weak #1 adversary: a corpus of REAL images sharing one
     (in fact two) 16-bit bands — constant top half zeroes every
@@ -198,8 +180,8 @@ def test_hamming_hot_band_is_memory_bounded(spark):
     so the band-0 and band-1 buckets hold EVERY distinct hash. The
     sub-split must (a) keep the pair set bit-equal to the brute-force
     twin and (b) actually bound the rows any join task buffers
-    (~bucket_cap per side), asserted on the operator's own block
-    assignment."""
+    (~bucket_cap per side), asserted on the block assignment
+    ``hamming_hash_pairs`` joins on."""
     import itertools
     import random
 
@@ -221,6 +203,7 @@ def test_hamming_hot_band_is_memory_bounded(spark):
         rows.append((i, bytearray(_p5(18, 16, px))))
     df = spark.createDataFrame(rows, "doc_id long, payload binary")
     img = P.image_dhash64(df).localCheckpoint()
+    fam = P.FAMILIES["phash64"]
 
     # hashes really share the low 32 bits (bands 0 and 1 of 4)
     assert [
@@ -237,33 +220,36 @@ def test_hamming_hot_band_is_memory_bounded(spark):
     # (a) pair-set + count exactness vs an in-test brute force
     got = {
         (r["hu"], r["cu"], r["hv"], r["cv"], r["hamming_distance"])
-        for r in P.hamming_hash_pairs(h, P.PHASH64_BITS, 3, bucket_cap=cap).collect()
+        for r in P.hamming_hash_pairs(
+            h, fam.n_bits, fam.radius, bucket_cap=cap
+        ).collect()
     }
     u64 = lambda x: x & ((1 << 64) - 1)  # noqa: E731
     brute = set()
     for (ha, ca), (hb, cb) in itertools.combinations(hs, 2):
         d = bin(u64(ha) ^ u64(hb)).count("1")
-        if d <= 3:
+        if d <= fam.radius:
             if ha > hb:
                 (ha, ca), (hb, cb) = (hb, cb), (ha, ca)
             brute.add((ha, ca, hb, cb, d))
     assert got == brute and len(got) > 0
     # and the registered histogram path agrees with its brute twin
-    b1 = P.hamming_pair_histogram(img, "phash64", P.PHASH64_BITS, 3).collect()
-    b2 = P.hamming_pairs_brute(img, "phash64", 3).collect()
+    b1 = P.hamming_pair_histogram(img, "phash64", fam.n_bits, fam.radius).collect()
+    b2 = P.hamming_pairs_brute(img, "phash64", fam.radius).collect()
     assert [tuple(r) for r in b1] == [tuple(r) for r in b2]
 
-    # (b) the bound, on the operator's OWN block assignment: band 0 is
-    # fully concentrated, the split engages, and no (b, blk) group —
-    # what one side of a (b, ba, bb) join key buffers — exceeds 2x cap
-    bt = h.select("h", "cnt", F.expr("shiftrightunsigned(h, 0) & 65535").alias("b"))
-    blocked, skeleton = P._band_blocked(bt, 16, cap)
-    sizes = blocked.groupBy("b", "blk").count().collect()
-    assert blocked.select("b").distinct().count() == 1  # one hot bucket
-    assert max(r["blk"] for r in sizes) > 0  # split engaged
-    assert max(r["count"] for r in sizes) <= 2 * cap
+    # (b) the bound, on the block assignment hamming_hash_pairs joins
+    # on: band 0 is fully concentrated, the split engages, and no
+    # (g, b, blk) group — what one side of a (g, b, ba, bb) join key
+    # buffers — exceeds 2x cap
+    blocked = P._band_blocks(h, fam.n_bits, fam.radius, cap)
+    sizes = blocked.groupBy("g", "b", "blk", "nb").count().collect()
+    band0 = [r for r in sizes if r["g"] == 0]
+    assert len({r["b"] for r in band0}) == 1  # one hot bucket
     nb = len(hs) // cap + (1 if len(hs) % cap else 0)
-    assert skeleton.count() == nb * (nb + 1) // 2
+    assert {r["nb"] for r in band0} == {nb}
+    assert max(r["blk"] for r in band0) > 0  # split engaged
+    assert max(r["count"] for r in sizes) <= 2 * cap
 
 
 def test_hamming_band_joins_carry_the_band_key(spark):
@@ -309,9 +295,9 @@ def test_hamming_band_joins_carry_the_band_key(spark):
             ), (left, right)
 
 
-def test_image_whash_2d_wht_properties_and_banded(spark):
-    """2-D WHT exactness (impulse, constant, Parseval) and the banded
-    == brute twin for the 63-bit sequency image hash."""
+def test_image_whash_2d_wht_properties(spark):
+    """2-D WHT exactness (impulse, constant, Parseval) of the 63-bit
+    sequency image hash."""
     # impulse at (0,0) -> flat +1 spectrum; at (y0,x0) -> signs
     # (-1)^(popcount(ky&y0)+popcount(kx&x0))
     imp = [[0] * 8 for _ in range(8)]
@@ -343,26 +329,9 @@ def test_image_whash_2d_wht_properties_and_banded(spark):
     )
     [row] = P.image_whash64(df).collect()
     assert row["iwhash"] == 0
-    # corpus: banded enumeration == brute force, non-degenerate
-    from crawlingbigdatavisionaid_spark.sources import load_table
-
-    docs = load_table(spark, SF, "documents")
-    img = P.image_whash64(attach_ppm(docs)).localCheckpoint()
-    b1 = P.hamming_pair_histogram(img, "iwhash", P.IWHASH_BITS, 3).collect()
-    b2 = P.hamming_pairs_brute(img, "iwhash", 3).collect()
-    assert [tuple(r) for r in b1] == [tuple(r) for r in b2]
-    assert sum(r["n_pairs"] for r in b1) > 0
-    # identical grid => one iwhash (hash is a function of cell sums)
-    mx = (
-        img.groupBy("grid_sig")
-        .agg(F.countDistinct("iwhash").alias("nh"))
-        .agg(F.max("nh").alias("m"))
-        .first()["m"]
-    )
-    assert mx == 1
 
 
-def test_wht_exactness_and_banded_equals_brute(spark):
+def test_wht_exactness(spark):
     # transform properties: impulse -> flat, constant -> DC-only,
     # Parseval (integer, exact)
     assert P._wht8([1, 0, 0, 0, 0, 0, 0, 0]) == [1] * 8
@@ -386,12 +355,3 @@ def test_wht_exactness_and_banded_equals_brute(spark):
     )
     [row] = P.audio_wht_fingerprint(df).collect()
     assert row["whash"] == 0
-    # corpus: banded enumeration == brute force, non-degenerate
-    from crawlingbigdatavisionaid_spark.sources import load_table
-
-    docs = load_table(spark, SF, "documents")
-    wht = P.audio_wht_fingerprint(attach_wav(docs)).localCheckpoint()
-    b1 = P.hamming_pair_histogram(wht, "whash", P.WHASH_BITS, 1).collect()
-    b2 = P.hamming_pairs_brute(wht, "whash", 1).collect()
-    assert [tuple(r) for r in b1] == [tuple(r) for r in b2]
-    assert sum(r["n_pairs"] for r in b1) > 0
