@@ -714,8 +714,9 @@ def minhash_index(
     tables: the (doc_id, b, h) band index the candidate join probes, and
     the (doc_id, sh) shingle sets exact verification joins. A production
     ingest writes both to parquet once and lets every subsequent
-    micro-batch probe them (streaming/ingest.incremental_neardup_ingest)
-    — the corpus is never re-signed per run."""
+    micro-batch probe them (``minhash_probe_index`` through
+    streaming/ingest.probe_ingest) — the corpus is never re-signed per
+    run."""
     inv_old = (
         shingle_rows(base, n).localCheckpoint(eager=False)
         if inv is None

@@ -86,7 +86,6 @@ def partitioned_write_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~3000 here; 7 of ~3000 at 100 TB too — pruning is O(selected), the
     point). The 1-row min-day collect is bounded harness bookkeeping,
     same as the layout twin's plan probe."""
-    import shutil
     import tempfile
 
     ev = (
@@ -98,8 +97,7 @@ def partitioned_write_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("day").alias("lo"), F.countDistinct("day").alias("nd")
     ).collect()
     lo_s, hi_s = str(lo + timedelta(days=10)), str(lo + timedelta(days=16))
-    path = tempfile.mkdtemp(prefix="part_prune_")
-    try:
+    with tempfile.TemporaryDirectory(ignore_cleanup_errors=True) as path:
         ev.write.mode("overwrite").partitionBy("day").parquet(path)
         back = spark.read.parquet(path).where(
             F.col("day").between(F.lit(lo_s), F.lit(hi_s))
@@ -114,8 +112,6 @@ def partitioned_write_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("c"),
             F.countDistinct("day").alias("nd"),
         ).collect()
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
     return spark.createDataFrame(
         [(n_rows, cents, n_days_total, n_sel, bool(pruned))],
         "n_rows bigint, value_cents bigint, n_days_total bigint, "

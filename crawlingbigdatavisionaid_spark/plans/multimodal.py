@@ -5,6 +5,8 @@ feature has an exact SQL twin: octet/ascii arithmetic over the same text.
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..multimodal import binary as MM
@@ -666,15 +668,14 @@ def _grid_recall_verdict(
     )
 
 
-def _phash_cluster_decision(
-    spark: SparkSession, sf_dir: str, hash_col: str
-) -> DataFrame:
-    """Shared decode -> dHash -> banded pairs -> CC -> histogram body
-    of the two cluster-decision grains."""
+def cluster_histogram(h: DataFrame, hash_col: str) -> DataFrame:
+    """The perceptual dedup decision over a ``P.distinct_hashes`` table
+    ``h`` of family ``hash_col``: banded pairs -> connected components
+    over the distinct-hash graph -> component join -> doc-weighted
+    (cluster_size, n_clusters) histogram."""
     from ..operators.components import connected_components
 
     fam = P.FAMILIES[hash_col]
-    h = P.distinct_hashes(_hashed(spark, sf_dir, hash_col), hash_col)
     pairs = P.hamming_hash_pairs(h, fam.n_bits, fam.radius).select("hu", "hv")
     cc = connected_components(pairs, "hu", "hv")
     dc = h.join(cc, h["h"] == cc["node"], "left").select(
@@ -687,6 +688,16 @@ def _phash_cluster_decision(
         .groupBy(F.col("sz").cast("bigint").alias("cluster_size"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_clusters"))
         .orderBy("cluster_size")
+    )
+
+
+def _phash_cluster_decision(
+    spark: SparkSession, sf_dir: str, hash_col: str
+) -> DataFrame:
+    """Shared decode -> hash -> :func:`cluster_histogram` body of the
+    two cluster-decision grains."""
+    return cluster_histogram(
+        P.distinct_hashes(_hashed(spark, sf_dir, hash_col), hash_col), hash_col
     )
 
 
@@ -821,39 +832,27 @@ def stream_phash_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dedup_image_phash`` computes it. The oracle recomputes the
     histogram from scratch, so micro-batch merge = one-shot is proven
     against DuckDB."""
-    import shutil
-    import tempfile
+    from ..streaming.ingest import phash_merge_ingest
+    from .streaming import _drain_fold
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    root = tempfile.mkdtemp(prefix="phash_merge_")
-    try:
-        delta_dir = f"{root}/delta"
-        docs.repartition(3).write.parquet(delta_dir)
-        from ..streaming.ingest import phash_merge_ingest
-
-        n_batches, final_dir = phash_merge_ingest(
-            spark,
-            delta_dir,
-            f"{root}/state",
-            f"{root}/ckpt",
-            "doc_id long, text string",
-        )
-        state = spark.read.parquet(final_dir).select(
-            F.col("phash").alias("h"), "cnt"
-        )
-        fam = P.FAMILIES["phash"]
+    fam = P.FAMILIES["phash"]
+    with tempfile.TemporaryDirectory(ignore_cleanup_errors=True) as root:
+        multi, state = _drain_fold(spark, root, phash_merge_ingest, docs)
         rows = (
-            P.hamming_histogram_from_counts(state, fam.n_bits, fam.radius)
+            P.hamming_histogram_from_counts(
+                state.select(F.col("phash").alias("h"), "cnt"),
+                fam.n_bits,
+                fam.radius,
+            )
             .select(
-                F.lit(n_batches > 1).alias("multi_batch"),
+                F.lit(multi).alias("multi_batch"),
                 "hamming_distance",
                 "n_pairs",
             )
             .orderBy("hamming_distance")
             .collect()
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     return spark.createDataFrame(
         rows, "multi_batch boolean, hamming_distance int, n_pairs bigint"
     )

@@ -8,6 +8,8 @@ float: ranking order is identical across engines for random embeddings
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions import vectors as V
@@ -183,13 +185,9 @@ def ann_ivf_persisted_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid table + inverted file to parquet, read them back, probe,
     and compare against both the one-shot ``ivf_topk`` (exact set
     equality) and the exact numpy top-k (recall >= 1/2)."""
-    import shutil
-    import tempfile
-
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 10)
-    root = tempfile.mkdtemp(prefix="ivf_index_")
-    try:
+    with tempfile.TemporaryDirectory(ignore_cleanup_errors=True) as root:
         built = S.ivf_index(emb, n_cells=10)
         if built is None:  # empty corpus: vacuously consistent verdict
             return spark.createDataFrame(
@@ -235,8 +233,6 @@ def ann_ivf_persisted_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_p == n_i == n_common,
             2 * hit >= n_exact,
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     return spark.createDataFrame(
         [row], "persisted_matches boolean, recall_ok boolean"
     )
@@ -259,13 +255,9 @@ def ann_lsh_persisted_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus written to parquet, read back, probed; compared against the
     one-shot ``lsh_topk`` (exact set equality) and the exact numpy
     top-k (recall >= 1/2)."""
-    import shutil
-    import tempfile
-
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 10)
-    root = tempfile.mkdtemp(prefix="lsh_index_")
-    try:
+    with tempfile.TemporaryDirectory(ignore_cleanup_errors=True) as root:
         planes_df, bk = S.lsh_index(emb)
         planes_df.write.parquet(f"{root}/planes")
         bk.write.parquet(f"{root}/bk")
@@ -299,8 +291,6 @@ def ann_lsh_persisted_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         n_exact = exact.count()
         row = (n_p == n_i == n_common, 2 * hit >= n_exact)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     return spark.createDataFrame(
         [row], "persisted_matches boolean, recall_ok boolean"
     )
@@ -511,13 +501,9 @@ def ann_pq_persisted_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     are fixed-order m-term sums, partition- and persistence-invariant)
     and check the refined search recalls >= 1/2 of the exact numpy
     top-k (measured ~0.96 on the test embeddings)."""
-    import shutil
-    import tempfile
-
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 10)
-    root = tempfile.mkdtemp(prefix="pq_index_")
-    try:
+    with tempfile.TemporaryDirectory(ignore_cleanup_errors=True) as root:
         built = S.pq_index(emb, m=16, ksub=16)
         if built is None:  # empty corpus: vacuously consistent verdict
             return spark.createDataFrame(
@@ -566,8 +552,6 @@ def ann_pq_persisted_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         n_exact = exact.count()
         row = (n_p == n_i == n_common, 2 * hit >= n_exact)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     return spark.createDataFrame(
         [row], "persisted_matches boolean, recall_ok boolean"
     )
@@ -766,16 +750,12 @@ def ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``tests/test_neardup_similarity.py::test_ivfpq_probe_prefix_property``.
     If this verdict ever fails, run that test first: it cleanly splits
     a prefix-invariant regression from a persistence/read-back bug."""
-    import shutil
-    import tempfile
-
     import numpy as np
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 10)
     n_cells, nprobe, k = 16, 4, 10
-    root = tempfile.mkdtemp(prefix="ivfpq_index_")
-    try:
+    with tempfile.TemporaryDirectory(ignore_cleanup_errors=True) as root:
         built = S.ivfpq_index(emb, n_cells=n_cells, m=16, ksub=16)
         if built is None:
             return spark.createDataFrame(
@@ -899,8 +879,6 @@ def ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             2 * hit >= n_exact,
             frac <= 3.0 * nprobe / n_cells,
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     return spark.createDataFrame(
         [row],
         "persisted_matches boolean, recall_ok boolean, scan_bounded boolean",

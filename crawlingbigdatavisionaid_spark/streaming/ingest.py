@@ -1,12 +1,32 @@
-"""Streaming ingestion with store-level dedup in ``foreachBatch``
-(OP-STR-01 + OP-DEDUP-01 + OP-SNK-01 — the reference's 6-hourly loop,
-streaming-native).
+"""Streaming ingestion: one ``availableNow`` drain under every
+micro-batch loop (OP-STR-01 + OP-DEDUP-01 + OP-SNK-01 — the reference's
+6-hourly loop, streaming-native).
 
-Why ``foreachBatch`` and not ``dropDuplicates`` state: the reference's
-dedup key set is the WHOLE HISTORY of crawled URLs (``crawl.py:73``).
-Holding that as streaming state is unbounded; a watermark would forget
-old URLs. The scalable form keeps the truth in the store itself — each
-micro-batch anti-joins against the store and appends only novel rows:
+One drain. :func:`_drain` is the package's only ``foreachBatch`` loop:
+a file-source ``readStream`` over a parquet directory, a sink called
+once per micro-batch, ``trigger(availableNow=True)`` and
+``awaitTermination``. Three sinks ride it:
+
+- :func:`ingest_stream` — store dedup: each batch appends only URLs the
+  store has never seen;
+- :func:`probe_ingest` — index probes: each batch runs a caller's
+  ``probe(batch)`` against a persisted index and appends the rows;
+- :func:`versioned_fold_ingest` — versioned state: each batch's partial
+  folds into the previous state version; the nine ``*_merge_ingest`` /
+  ``mv_maintenance_ingest`` functions below are its fold algorithms.
+
+The probe and fold drains read ONE file per trigger, so a delta of n
+files is n micro-batches. :func:`land` writes slices as one file each
+with ascending mtimes (the file source drains oldest first), and
+:func:`time_slices` cuts a table into the time-ordered slices that the
+SCD2 and journey folds' ordering contract needs.
+
+Why ``foreachBatch`` and not ``dropDuplicates`` state for store dedup:
+the reference's dedup key set is the WHOLE HISTORY of crawled URLs
+(``crawl.py:73``). Holding that as streaming state is unbounded; a
+watermark would forget old URLs. The scalable form keeps the truth in
+the store itself — each micro-batch anti-joins against the store and
+appends only novel rows:
 
     batch -> dropDuplicates(url)            (within-batch)
           -> left_anti join store on url    (vs. all history)
@@ -23,10 +43,46 @@ function moves this whole module to a transactional table format.
 
 from __future__ import annotations
 
+import os
+import re
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..crawl.pipeline import STORE_SCHEMA
 from ..sources.merge import merge_append
+
+# mtime of the first landed slice; any fixed past instant works, only
+# the ascending order matters to the file source
+_T0 = 1_700_000_000
+
+
+def _drain(
+    spark: SparkSession, path: str, schema, checkpoint: str, sink, max_files
+) -> int:
+    """Drain every file pending under ``path`` (availableNow) through
+    ``sink(batch_df, batch_id)``, at most ``max_files`` files per
+    micro-batch (None: no cap). Returns once the drain stops, with the
+    number of micro-batches the sink completed."""
+    reader = spark.readStream.schema(schema).option("recursiveFileLookup", "true")
+    if max_files:
+        reader = reader.option("maxFilesPerTrigger", str(max_files))
+    n_batches = 0
+
+    def counted(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal n_batches
+        sink(batch_df, batch_id)
+        n_batches += 1
+
+    (
+        reader.parquet(path)
+        .writeStream.foreachBatch(counted)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    return n_batches
 
 
 def ingest_stream(
@@ -39,232 +95,101 @@ def ingest_stream(
     """Drain all pending input (availableNow) into the store with
     per-batch store-dedup. Returns [(batch_id, rows_appended), ...].
     """
-    reader = spark.readStream.schema(STORE_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.option("recursiveFileLookup", "true").parquet(input_path)
-
     appended: list[tuple[int, int]] = []
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         appended.append((batch_id, merge_append(spark, store_path, batch_df, "url")))
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(spark, input_path, STORE_SCHEMA, checkpoint, sink, max_files_per_trigger)
     return appended
 
 
-def incremental_neardup_ingest(
+def land(delta_dir: str, slices) -> None:
+    """Write each DataFrame of ``slices`` into ``delta_dir`` as one
+    parquet file, the i-th stamped with mtime ``_T0 + i``: the file
+    source drains pre-existing files oldest first, so a one-file-per-
+    trigger drain sees the slices as micro-batches in list order.
+
+    Files already in ``delta_dir`` keep their mtimes. An empty slice
+    raises ``ValueError``: a multi-batch verdict over it would pass
+    vacuously."""
+    seen = set(os.listdir(delta_dir)) if os.path.isdir(delta_dir) else set()
+    for i, sl in enumerate(slices):
+        if sl.limit(1).count() == 0:
+            raise ValueError(
+                f"slice {i} is empty — a multi-batch drain over it would "
+                "be vacuous; widen the input"
+            )
+        sl.coalesce(1).write.mode("append").parquet(delta_dir)
+        for f in set(os.listdir(delta_dir)) - seen:
+            os.utime(os.path.join(delta_dir, f), (_T0 + i, _T0 + i))
+            seen.add(f)
+
+
+def time_slices(df: DataFrame, n: int) -> list[DataFrame]:
+    """``df`` cut on its ``ts`` column into ``n`` equal-width time
+    ranges, oldest first (NULL ``ts`` rows fall in none): the per-key
+    time-ordered batches a CDC fold's ordering contract asks for.
+    Raises ``ValueError`` on a degenerate range (no ``ts`` at all, or a
+    single instant), which cannot give n ordered batches."""
+    [(lo, hi)] = df.agg(F.min("ts"), F.max("ts")).collect()
+    if lo is None or lo == hi:
+        raise ValueError(
+            "time_slices needs a time-spanning ts column to exercise "
+            "cross-batch boundaries; got a degenerate range"
+        )
+    ts = F.col("ts")
+    cuts = [F.lit(lo + i * (hi - lo) / n) for i in range(n)]
+    return [
+        df.where((ts >= a) & (ts < b)) for a, b in zip(cuts, cuts[1:])
+    ] + [df.where(ts >= cuts[-1])]
+
+
+def probe_ingest(
     spark: SparkSession,
     delta_path: str,
-    index_bk_path: str,
-    index_sh_path: str,
     out_path: str,
     checkpoint: str,
     schema,
-    max_files_per_trigger: int | None = 1,
-    k: int = 16,
-    bands: int = 4,
-    threshold_tenths: int = 8,
-    n: int = 3,
+    probe,
 ) -> int:
-    """The production shape of delta-vs-corpus near-dup detection: each
-    ingest micro-batch probes the PERSISTED corpus LSH index (built once
-    by ``operators.neardup.minhash_index`` and written to parquet)
-    inside ``foreachBatch``, appending verified near-dup pairs to
-    ``out_path``. The corpus is never re-signed: per-run cost is the
-    batch's signatures plus a bucket-equality join into the stored
-    index. Candidates for a new doc depend only on that doc and the
-    index, so the union of pairs over any micro-batch slicing equals
-    the one-shot ``minhash_pairs_incremental`` on the same delta
-    (pinned by the ``stream_incremental_neardup`` verdict query and
-    tests/test_streaming_ingest.py).
+    """Index-probing ingestion: each micro-batch (one delta file) runs
+    ``probe(batch_df) -> DataFrame`` against a persisted index and
+    appends the rows to ``out_path``. The index is immutable for the
+    drain, so the caller reads its scans ONCE and closes ``probe`` over
+    them: every micro-batch reuses the same plan instead of repeating
+    file listing and footer reads, and the corpus is never re-indexed.
+
+    A probe's rows for an arriving item depend only on that item and
+    the index, so the union over any micro-batch slicing equals
+    ``probe`` applied to the whole delta. The verdicts pin it for four
+    indexes:
+
+    - ``stream_incremental_neardup``: the LSH band index + shingle sets
+      of ``operators.neardup.minhash_index``, probed by
+      ``minhash_probe_index`` (graded against the independent one-shot
+      ``minhash_pairs_incremental``);
+    - ``stream_ann_probe``: the IVF centroids + inverted file of
+      ``operators.similarity.ivf_index`` (top-k per arriving vector,
+      cost tracks the batch x probed cells);
+    - ``stream_pq_probe``: the product-quantization codebooks + codes
+      (ADC lookup tables per batch; the float corpus is never read);
+    - ``stream_bloom_probe``: the store's packed Bloom bitset
+      (``plans/sketches.bloom_bits``, at most m/64 int64 rows), joined
+      by broadcast. ``maybe=false`` keys are PROVEN new and can append
+      without the exact store anti-join; only ``maybe=true`` keys (true
+      dups + the sized-filter FP tail) fall through to it.
 
     Exactly-once: checkpointed source offsets + append sink; a real
     deployment makes the append idempotent with a transactional table
-    format (the ``ingest_stream`` MERGE note applies here too) and
-    folds each drained batch's (doc, band, bucket) rows back INTO the
-    index, which stays valid incrementally — band buckets are per-doc.
+    format (the ``ingest_stream`` MERGE note applies here too).
 
     Returns the number of micro-batches processed."""
-    from ..operators import neardup as ND
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(delta_path)
-    n_batches = 0
-    # the index is immutable for the whole drain: build the two scan
-    # DataFrames ONCE and close over them, so each micro-batch reuses
-    # the same plan instead of repeating file-listing/footer reads
-    bk = spark.read.parquet(index_bk_path)
-    sh = spark.read.parquet(index_sh_path)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        nonlocal n_batches
-        n_batches += 1
-        ND.minhash_probe_index(
-            batch_df, bk, sh, k, bands, threshold_tenths, n
-        ).write.mode("append").parquet(out_path)
+        probe(batch_df).write.mode("append").parquet(out_path)
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return n_batches
-
-
-def _probe_ingest(
-    spark: SparkSession,
-    delta_path: str,
-    out_path: str,
-    checkpoint: str,
-    schema,
-    max_files_per_trigger: int | None,
-    probe_fn,
-) -> int:
-    """Shared drain loop for index-probing ingestion: each micro-batch
-    runs ``probe_fn(batch_df) -> DataFrame`` against a persisted,
-    drain-immutable index and appends the result. Returns the number of
-    micro-batches processed."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(delta_path)
-    n_batches = 0
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        nonlocal n_batches
-        n_batches += 1
-        probe_fn(batch_df).write.mode("append").parquet(out_path)
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return n_batches
-
-
-def ann_probe_ingest(
-    spark: SparkSession,
-    delta_path: str,
-    centroids_path: str,
-    inv_path: str,
-    out_path: str,
-    checkpoint: str,
-    schema,
-    max_files_per_trigger: int | None = 1,
-    k: int = 10,
-    nprobe: int = 4,
-) -> int:
-    """Streaming similarity search against a PERSISTED IVF index — the
-    ANN mirror of :func:`incremental_neardup_ingest`: each micro-batch
-    of arriving vectors probes the parquet-persisted index
-    (operators/similarity.ivf_index written once per corpus) and appends
-    its top-k neighbor rows. The corpus is never re-assigned; per-batch
-    cost tracks the batch x probed cells. Results for a vector depend
-    only on that vector and the index, so any micro-batch slicing yields
-    the same union of rows (pinned by the ``stream_ann_probe`` verdict).
-
-    Returns the number of micro-batches processed."""
-    from ..operators.similarity import ivf_probe_index
-
-    # index is immutable for the drain: plan the two scans once
-    cent = spark.read.parquet(centroids_path)
-    inv = spark.read.parquet(inv_path)
-    return _probe_ingest(
-        spark,
-        delta_path,
-        out_path,
-        checkpoint,
-        schema,
-        max_files_per_trigger,
-        lambda batch: ivf_probe_index(batch, cent, inv, k=k, nprobe=nprobe),
-    )
-
-
-def pq_probe_ingest(
-    spark: SparkSession,
-    delta_path: str,
-    codebooks_path: str,
-    codes_path: str,
-    out_path: str,
-    checkpoint: str,
-    schema,
-    max_files_per_trigger: int | None = 1,
-    k: int = 10,
-) -> int:
-    """Streaming ADC search against a PERSISTED product-quantization
-    index (operators/similarity.pq_index): the compressed-codes mirror
-    of :func:`ann_probe_ingest` — each arriving vector batch builds its
-    lookup tables against the stored codebooks and scans the code
-    table; the float corpus is never touched at search time. Returns
-    the number of micro-batches processed."""
-    from ..operators.similarity import pq_probe_index
-
-    books = spark.read.parquet(codebooks_path)
-    codes = spark.read.parquet(codes_path)
-    return _probe_ingest(
-        spark,
-        delta_path,
-        out_path,
-        checkpoint,
-        schema,
-        max_files_per_trigger,
-        lambda batch: pq_probe_index(batch, books, codes, k=k),
-    )
-
-
-def bloom_probe_ingest(
-    spark: SparkSession,
-    delta_path: str,
-    bits_path: str,
-    out_path: str,
-    checkpoint: str,
-    schema,
-    max_files_per_trigger: int | None = 1,
-    m_bits: int | None = None,
-    k_hashes: int | None = None,
-) -> int:
-    """Streaming Bloom-gated dedup classification — the sketch mirror
-    of :func:`ann_probe_ingest`: the store's packed bitset is built
-    ONCE (plans/sketches.bloom_bits, a (widx, word) parquet table of
-    at most m/64 bit-packed int64 rows) and each arriving key
-    micro-batch classifies against it via broadcast hash join inside
-    ``foreachBatch``, appending (k, maybe) rows. ``maybe=false`` keys are PROVEN new and can append to the
-    store without the exact anti-join; only ``maybe=true`` keys (true
-    dups + the sized-filter FP tail) fall through to it — at 100 TB
-    this turns the per-batch store-membership probe from a store-sized
-    join into per-row expression work. A key's verdict depends only on
-    the key and the immutable bitset, so any micro-batch slicing
-    yields the same row union (pinned by ``stream_bloom_probe``).
-
-    Returns the number of micro-batches processed."""
-    from ..plans.sketches import _BLOOM_BITS, _BLOOM_K, bloom_probe
-
-    m = m_bits if m_bits is not None else _BLOOM_BITS
-    kh = k_hashes if k_hashes is not None else _BLOOM_K
-    bits = spark.read.parquet(bits_path)
-    return _probe_ingest(
-        spark,
-        delta_path,
-        out_path,
-        checkpoint,
-        schema,
-        max_files_per_trigger,
-        lambda batch: bloom_probe(batch, bits, m, kh),
-    )
+    return _drain(spark, delta_path, schema, checkpoint, sink, 1)
 
 
 def versioned_fold_ingest(
@@ -275,13 +200,13 @@ def versioned_fold_ingest(
     schema,
     partial_fn,
     fold_fn,
-    max_files_per_trigger: int | None = 1,
 ) -> tuple[int, str | None]:
     """Generic streaming fold into VERSIONED parquet state — the
     ``foreachBatch`` maintenance loop shared by every incremental
     summary whose merge is associative (aggregate MVs, linear sketches):
-    each micro-batch computes ``partial_fn(batch_df)`` and commits
-    ``fold_fn(prev_state_df, partial_df)`` as ``state_v{batch_id}``.
+    each micro-batch (one delta file) computes ``partial_fn(batch_df)``
+    and commits ``fold_fn(prev_state_df, partial_df)`` as
+    ``state_v{batch_id}``.
 
     The versioning contract (the plain-parquet stand-in for a
     transactional format's MERGE):
@@ -298,14 +223,6 @@ def versioned_fold_ingest(
       predecessor is exactly what a restart re-seed can still need.
 
     Returns (n_batches, final_state_dir)."""
-    import os
-    import re
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(delta_path)
-    n_batches = 0
     final_dir: str | None = None
 
     def _fs():
@@ -330,7 +247,7 @@ def versioned_fold_ingest(
         return None if best < 0 else os.path.join(state_root, f"state_v{best}")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        nonlocal n_batches, final_dir
+        nonlocal final_dir
         if final_dir is None:
             final_dir = _latest_state(batch_id)
         partial = partial_fn(batch_df)
@@ -340,7 +257,6 @@ def versioned_fold_ingest(
         out = os.path.join(state_root, f"state_v{batch_id}")
         partial.write.mode("overwrite").parquet(out)
         final_dir = out
-        n_batches += 1
         if prev is not None:
             prev_v = int(
                 re.fullmatch(r"state_v(\d+)", os.path.basename(prev)).group(1)
@@ -351,13 +267,7 @@ def versioned_fold_ingest(
                 if m and int(m.group(1)) < prev_v:
                     fs.delete(st.getPath(), True)
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    n_batches = _drain(spark, delta_path, schema, checkpoint, sink, 1)
     return n_batches, final_dir
 
 
@@ -367,7 +277,6 @@ def mv_maintenance_ingest(
     state_root: str,
     checkpoint: str,
     schema,
-    max_files_per_trigger: int | None = 1,
 ) -> tuple[int, str | None]:
     """Streaming incremental materialized-view maintenance — the
     ``foreachBatch`` form of ``plans/incremental.incremental_mv_daily``
@@ -378,7 +287,6 @@ def mv_maintenance_ingest(
     reference's full-store re-read per dashboard render (app.py:86).
 
     Returns (n_batches, final_state_dir)."""
-    from pyspark.sql import functions as F
 
     def partial(batch_df: DataFrame) -> DataFrame:
         return (
@@ -401,8 +309,7 @@ def mv_maintenance_ingest(
         )
 
     return versioned_fold_ingest(
-        spark, delta_path, state_root, checkpoint, schema,
-        partial, fold, max_files_per_trigger,
+        spark, delta_path, state_root, checkpoint, schema, partial, fold
     )
 
 
@@ -412,7 +319,6 @@ def cms_merge_ingest(
     state_root: str,
     checkpoint: str,
     schema,
-    max_files_per_trigger: int | None = 1,
 ) -> tuple[int, str | None]:
     """Streaming count-min sketch maintenance: each micro-batch of
     documents builds ITS OWN sketch cells (bigram counts -> depth x
@@ -431,8 +337,6 @@ def cms_merge_ingest(
         return cms_cells(_bigram_counts(batch_df))
 
     def fold(prev: DataFrame, part: DataFrame) -> DataFrame:
-        from pyspark.sql import functions as F
-
         return (
             prev.unionByName(part)
             .groupBy("i", "cell")
@@ -440,8 +344,7 @@ def cms_merge_ingest(
         )
 
     return versioned_fold_ingest(
-        spark, delta_path, state_root, checkpoint, schema,
-        partial, fold, max_files_per_trigger,
+        spark, delta_path, state_root, checkpoint, schema, partial, fold
     )
 
 
@@ -451,30 +354,29 @@ def theta_merge_ingest(
     state_root: str,
     checkpoint: str,
     schema,
-    k: int = 256,
-    max_files_per_trigger: int | None = 1,
 ) -> tuple[int, str | None]:
     """Streaming KMV/theta sketch maintenance: each micro-batch of
     events contributes its own per-type min-k of the (user, props)
     key hashes, and the fold re-min-ks the union — the associative
     merge the batch sketch's 3-way-split test pins (k smallest of a
     union of per-part k-smallests = k smallest of the union). State is
-    bounded at k rows per event type forever; the drained sketch is
+    bounded at k = ``plans/sketches._KMV_K`` rows per event type
+    forever — the k the batch sketch and the verdict's estimate use, so
+    the two sides cannot drift apart; the drained sketch is
     BIT-IDENTICAL to the one-shot sketch, so the distinct-count
     estimate read off the final state equals ``kmv_distinct_sketch``'s
     exactly (exercised by the ``stream_theta_merge`` verdict).
 
     Returns (n_batches, final_state_dir)."""
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
-    from ..plans.sketches import _KMV_KEY_SQL, _poly_fold_sql
+    from ..plans.sketches import _KMV_K, _KMV_KEY_SQL, _poly_fold_sql
 
     def minked(df: DataFrame) -> DataFrame:
         w = Window.partitionBy("event_type").orderBy("h")
         return (
             df.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= k)
+            .where(F.col("rn") <= _KMV_K)
             .drop("rn")
         )
 
@@ -492,8 +394,7 @@ def theta_merge_ingest(
         return minked(prev.unionByName(part).distinct())
 
     return versioned_fold_ingest(
-        spark, delta_path, state_root, checkpoint, schema,
-        partial, fold, max_files_per_trigger,
+        spark, delta_path, state_root, checkpoint, schema, partial, fold
     )
 
 
@@ -509,7 +410,6 @@ def scd2_merge_ingest(
     state_root: str,
     checkpoint: str,
     schema,
-    max_files_per_trigger: int | None = 1,
 ) -> tuple[int, str | None]:
     """Streaming SCD Type-2 maintenance: each micro-batch's events fold
     into the dimension-history state (one row per validity interval,
@@ -551,7 +451,6 @@ def scd2_merge_ingest(
     it is BIT-IDENTICAL to the batch ``scd2_user_segments`` build —
     the ``stream_scd2_merge`` verdict proves it against the oracle."""
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
     from ..plans.incremental import scd2_runs, scd2_segment_expr
 
@@ -638,8 +537,7 @@ def scd2_merge_ingest(
         )
 
     return versioned_fold_ingest(
-        spark, delta_path, state_root, checkpoint, schema,
-        partial, fold, max_files_per_trigger,
+        spark, delta_path, state_root, checkpoint, schema, partial, fold
     )
 
 
@@ -655,7 +553,6 @@ def journey_merge_ingest(
     state_root: str,
     checkpoint: str,
     schema,
-    max_files_per_trigger: int | None = 1,
 ) -> tuple[int, str | None]:
     """Streaming maintenance of per-user 3-step journey counts — the
     n-gram-over-concatenation monoid as a versioned fold: each batch
@@ -672,7 +569,6 @@ def journey_merge_ingest(
     the batch build, which any out-of-order slice would break loudly.
 
     Returns (n_batches, final_state_dir)."""
-    from pyspark.sql import functions as F
 
     def partial(batch_df: DataFrame) -> DataFrame:
         per_user = batch_df.groupBy("user_id").agg(
@@ -804,8 +700,7 @@ def journey_merge_ingest(
         return merged_counts.unionByName(merged_tails)
 
     return versioned_fold_ingest(
-        spark, delta_path, state_root, checkpoint, schema,
-        partial, fold, max_files_per_trigger,
+        spark, delta_path, state_root, checkpoint, schema, partial, fold
     )
 
 
@@ -815,7 +710,6 @@ def ohlc_merge_ingest(
     state_root: str,
     checkpoint: str,
     schema,
-    max_files_per_trigger: int | None = 1,
 ) -> tuple[int, str | None]:
     """Streaming OHLC-bar maintenance: per (event_type, hour) the state
     row carries (open@its ts/id, high, low, close@its ts/id, n) — the
@@ -827,7 +721,6 @@ def ohlc_merge_ingest(
     every combinator here is commutative and associative.
 
     Returns (n_batches, final_state_dir)."""
-    from pyspark.sql import functions as F
 
     def bars(df: DataFrame) -> DataFrame:
         from pyspark.sql import Window
@@ -873,8 +766,7 @@ def ohlc_merge_ingest(
         )
 
     return versioned_fold_ingest(
-        spark, delta_path, state_root, checkpoint, schema,
-        partial, fold, max_files_per_trigger,
+        spark, delta_path, state_root, checkpoint, schema, partial, fold
     )
 
 
@@ -887,7 +779,6 @@ def skyline_merge_ingest(
     x: str,
     y: str,
     key: str,
-    max_files_per_trigger: int | None = 1,
 ) -> tuple[int, str | None]:
     """Streaming Pareto-frontier maintenance: state is the CURRENT
     skyline, each batch folds as skyline(state ∪ skyline(batch)) — the
@@ -908,8 +799,7 @@ def skyline_merge_ingest(
         return exact_skyline(prev.unionByName(part), x, y)
 
     return versioned_fold_ingest(
-        spark, delta_path, state_root, checkpoint, schema,
-        partial, fold, max_files_per_trigger,
+        spark, delta_path, state_root, checkpoint, schema, partial, fold
     )
 
 
@@ -919,7 +809,6 @@ def first_seen_merge_ingest(
     state_root: str,
     checkpoint: str,
     schema,
-    max_files_per_trigger: int | None = 1,
 ) -> tuple[int, str | None]:
     """Streaming first-seen dimension maintenance — the seventh fold
     shape: PER-ENTITY IDEMPOTENT MERGE-MIN. Each micro-batch reduces
@@ -938,7 +827,6 @@ def first_seen_merge_ingest(
     oracle as the batch ``cumulative_unique_users``.
 
     Returns (n_batches, final_state_dir)."""
-    from pyspark.sql import functions as F
 
     def partial(batch_df: DataFrame) -> DataFrame:
         return (
@@ -955,8 +843,7 @@ def first_seen_merge_ingest(
         )
 
     return versioned_fold_ingest(
-        spark, delta_path, state_root, checkpoint, schema,
-        partial, fold, max_files_per_trigger,
+        spark, delta_path, state_root, checkpoint, schema, partial, fold
     )
 
 
@@ -966,7 +853,6 @@ def phash_merge_ingest(
     state_root: str,
     checkpoint: str,
     schema,
-    max_files_per_trigger: int | None = 1,
 ) -> tuple[int, str | None]:
     """Streaming PERCEPTUAL-DEDUP INDEX maintenance — the eighth fold
     shape: each micro-batch of documents is encoded and decoded through
@@ -988,8 +874,6 @@ def phash_merge_ingest(
     ``dedup_image_phash``.
 
     Returns (n_batches, final_state_dir)."""
-    from pyspark.sql import functions as F
-
     from ..multimodal.binary import attach_ppm
     from ..operators.perceptual import image_dhash
 
@@ -1008,6 +892,5 @@ def phash_merge_ingest(
         )
 
     return versioned_fold_ingest(
-        spark, delta_path, state_root, checkpoint, schema,
-        partial, fold, max_files_per_trigger,
+        spark, delta_path, state_root, checkpoint, schema, partial, fold
     )

@@ -58,21 +58,27 @@ def _run_to_memory(result: DataFrame, mode: str) -> DataFrame:
     partition owns a state store, and on a vanilla session (200
     partitions) the per-store open/commit overhead dwarfs the work at
     verification scale. The conf is captured by the query's FIRST batch
-    via its fresh checkpoint, so restoring it afterwards is safe."""
+    via its fresh checkpoint, so restoring it afterwards is safe.
+
+    The checkpoint is removed once the drain returns: the memory sink's
+    rows live in the driver, so the returned table does not read it."""
     spark_session = result.sparkSession
     prev = spark_session.conf.get("spark.sql.shuffle.partitions")
     name = "s" + uuid.uuid4().hex[:12]
     try:
         spark_session.conf.set("spark.sql.shuffle.partitions", "32")
-        q = (
-            result.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with tempfile.TemporaryDirectory(
+            prefix="ckpt_", ignore_cleanup_errors=True
+        ) as ckpt:
+            (
+                result.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(mode)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+                .awaitTermination()
+            )
     finally:
         spark_session.conf.set("spark.sql.shuffle.partitions", prev)
     return spark_session.table(name)

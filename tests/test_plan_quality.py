@@ -612,3 +612,34 @@ def test_package_has_no_pandas_boundary():
             src = src.replace(allowed, "")
         bad += [(name, t) for t in forbidden if t in src]
     assert not bad, bad
+
+
+def _calls(path: Path, name: str) -> int:
+    """Number of call sites of ``name`` (plain or attribute) in a file —
+    counted on the AST, so docstrings that name the call do not count."""
+    import ast
+
+    return sum(
+        isinstance(n, ast.Call)
+        and getattr(n.func, "attr", getattr(n.func, "id", None)) == name
+        for n in ast.walk(ast.parse(path.read_text()))
+    )
+
+
+def test_streaming_tier_has_one_drain():
+    """Every ``foreachBatch`` micro-batch loop of the package runs through
+    ``streaming/ingest._drain``, and the verdicts clean up their scratch
+    directories with ``TemporaryDirectory``, not a hand-kept
+    ``mkdtemp``/``rmtree`` pair."""
+    import crawlingbigdatavisionaid_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    sites = {
+        str(p.relative_to(root)): n
+        for p in root.rglob("*.py")
+        if (n := _calls(p, "foreachBatch"))
+    }
+    assert sites == {"streaming/ingest.py": 1}, sites
+    scoped = [*root.glob("plans/*.py"), root / "streaming" / "ingest.py"]
+    assert len(scoped) > 10
+    assert not [str(p) for p in scoped if _calls(p, "mkdtemp")]

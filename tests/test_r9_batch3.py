@@ -1,18 +1,15 @@
-"""r9 batch-3: point-in-time feature join, streaming journey-trigram
-fold (boundary monoid + ordering-contract violation), rolling HLL WAU."""
+"""r9 batch-3: point-in-time feature join, the registered journey
+verdict, rolling HLL WAU. The journey/OHLC/skyline fold tests live in
+tests/test_streaming_ingest.py with the other folds."""
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
 from collections import defaultdict
 
 from pyspark.sql import functions as F
 
 from crawlingbigdatavisionaid_spark.plans import registry
 from crawlingbigdatavisionaid_spark.sources import load_table
-from crawlingbigdatavisionaid_spark.streaming.ingest import journey_merge_ingest
 
 SF = "/root/testdata/sf0.001"
 
@@ -104,88 +101,6 @@ def test_pit_join_tied_timestamps_deterministic(spark):
         assert [r["asof_segment"] for r in got] == ["high"]
 
 
-def _drain_journeys(spark, slices, order):
-    """Write slices as delta files with mtimes in ``order``; drain and
-    return the folded journey counts dict."""
-    root = tempfile.mkdtemp(prefix="journey_t_")
-    try:
-        delta = f"{root}/delta"
-        t0 = 1_700_000_000
-        seen: set[str] = set()
-        for rank, sl in zip(order, slices):
-            sl.coalesce(1).write.mode("append").parquet(delta)
-            for f in set(os.listdir(delta)) - seen:
-                os.utime(f"{delta}/{f}", (t0 + rank, t0 + rank))
-                seen.add(f)
-        n, final = journey_merge_ingest(
-            spark,
-            delta,
-            f"{root}/state",
-            f"{root}/ckpt",
-            "user_id long, ts timestamp, event_id long, event_type string",
-        )
-        state = spark.read.parquet(final)
-        counts = {
-            r["journey"]: r["n"]
-            for r in state.where(F.col("kind") == "c").collect()
-        }
-        tails = state.where(F.col("kind") == "u").count()
-        return n, counts, tails
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def _batch_journeys(spark):
-    ev = load_table(spark, SF, "events").select(
-        "user_id", "event_type", "ts", "event_id"
-    ).collect()
-    hist = defaultdict(list)
-    for r in ev:
-        hist[r["user_id"]].append((r["ts"], r["event_id"], r["event_type"]))
-    counts = defaultdict(int)
-    for seq in hist.values():
-        seq.sort()
-        t = [x for _, _, x in seq]
-        for i in range(len(t) - 2):
-            counts[">".join(t[i : i + 3])] += 1
-    return dict(counts), len(hist)
-
-
-def _time_slices(spark):
-    ev = load_table(spark, SF, "events").select(
-        "user_id", "ts", "event_id", "event_type"
-    )
-    [(lo, hi)] = ev.agg(F.min("ts"), F.max("ts")).collect()
-    c1 = lo + (hi - lo) / 3
-    c2 = lo + 2 * (hi - lo) / 3
-    return [
-        ev.where(F.col("ts") < F.lit(c1)),
-        ev.where((F.col("ts") >= F.lit(c1)) & (F.col("ts") < F.lit(c2))),
-        ev.where(F.col("ts") >= F.lit(c2)),
-    ]
-
-
-def test_journey_fold_equals_batch_across_boundaries(spark):
-    expected, n_users = _batch_journeys(spark)
-    n, counts, tails = _drain_journeys(spark, _time_slices(spark), [0, 1, 2])
-    assert n == 3
-    assert counts == expected
-    assert tails == n_users  # exactly one bounded summary row per user
-
-
-def test_journey_fold_out_of_order_slices_diverge_loudly(spark):
-    """The documented CDC ordering contract: slices delivered out of
-    time order produce counts that DIFFER from the batch build (the
-    verdict query would flip matches_batch to false) — the violation is
-    loud, never silently absorbed."""
-    expected, _ = _batch_journeys(spark)
-    # swap slices 2 and 3 in mtime order: the file source delivers
-    # oldest-mtime first, so the stream sees [s1, s3, s2]
-    n, counts, _ = _drain_journeys(spark, _time_slices(spark), [0, 2, 1])
-    assert n == 3
-    assert counts != expected
-
-
 def test_registered_stream_journey_verdict(spark):
     [r] = _q("stream_journey_merge")(spark, SF).collect()
     assert r["multi_batch"] and r["matches_batch"]
@@ -200,57 +115,3 @@ def test_rolling_hll_graded_by_exact_twin(spark):
     }
     assert {r["day"]: r["exact_users"] for r in rows} == exact
     assert all(r["within_2pct"] for r in rows)
-
-
-def test_ohlc_fold_order_free(spark):
-    """The OHLC fold needs NO ordering contract: a reversed-mtime drain
-    (batches delivered newest-time-slice first) still merges to the
-    batch bars — every combinator is commutative/associative."""
-    from crawlingbigdatavisionaid_spark.streaming.ingest import ohlc_merge_ingest
-
-    ev = load_table(spark, SF, "events").select(
-        "event_type", "ts", "event_id", "value"
-    )
-    [(lo, hi)] = ev.agg(F.min("ts"), F.max("ts")).collect()
-    c1 = lo + (hi - lo) / 3
-    c2 = lo + 2 * (hi - lo) / 3
-    slices = [
-        ev.where(F.col("ts") >= F.lit(c2)),          # newest first
-        ev.where((F.col("ts") >= F.lit(c1)) & (F.col("ts") < F.lit(c2))),
-        ev.where(F.col("ts") < F.lit(c1)),
-    ]
-    root = tempfile.mkdtemp(prefix="ohlc_rev_")
-    try:
-        delta = f"{root}/delta"
-        t0 = 1_700_000_000
-        seen: set[str] = set()
-        for i, sl in enumerate(slices):
-            sl.coalesce(1).write.mode("append").parquet(delta)
-            for f in set(os.listdir(delta)) - seen:
-                os.utime(f"{delta}/{f}", (t0 + i, t0 + i))
-                seen.add(f)
-        n, final = ohlc_merge_ingest(
-            spark,
-            delta,
-            f"{root}/state",
-            f"{root}/ckpt",
-            "event_type string, ts timestamp, event_id long, value double",
-        )
-        streamed = spark.read.parquet(final).select(
-            "event_type", "hour",
-            F.col("o.value").alias("open"), "high", "low",
-            F.col("c.value").alias("close"), "n",
-        )
-        batch = _q("value_ohlc_hourly")(spark, SF)
-        cols = ["event_type", "hour", "open", "high", "low", "close", "n"]
-        assert n == 3
-        assert streamed.join(batch, cols, "anti").count() == 0
-        assert batch.join(streamed, cols, "anti").count() == 0
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def test_stream_skyline_verdict_and_shrinking_state(spark):
-    [r] = _q("stream_skyline_merge")(spark, SF).collect()
-    assert r["multi_batch"] and r["matches_batch"]
-    assert r["frontier_size"] > 0

@@ -4,11 +4,20 @@ replay safety via the checkpoint."""
 from __future__ import annotations
 
 import os
+from collections import defaultdict
 
 import pytest
+from pyspark.sql import functions as F
 
 from crawlingbigdatavisionaid_spark.crawl.pipeline import read_store
-from crawlingbigdatavisionaid_spark.streaming.ingest import ingest_stream
+from crawlingbigdatavisionaid_spark.plans import query_map
+from crawlingbigdatavisionaid_spark.sources import load_table
+from crawlingbigdatavisionaid_spark.streaming.ingest import (
+    ingest_stream,
+    land,
+    probe_ingest,
+    time_slices,
+)
 
 
 def _doc(u: str) -> tuple:
@@ -23,19 +32,13 @@ def paths(tmp_path):
     return str(tmp_path / "in"), str(tmp_path / "store"), str(tmp_path / "ckpt")
 
 
-def _land(spark, input_path: str, name: str, urls: list[str], mtime: int) -> None:
-    spark.createDataFrame([_doc(u) for u in urls], SCHEMA).coalesce(1).write.parquet(
-        f"{input_path}/{name}"
-    )
-    for f in os.listdir(f"{input_path}/{name}"):
-        os.utime(f"{input_path}/{name}/{f}", (mtime, mtime))
+def _docs(spark, urls: list[str]):
+    return spark.createDataFrame([_doc(u) for u in urls], SCHEMA)
 
 
 def test_overlapping_batches_dedup_against_store(spark, paths):
     input_path, store, ckpt = paths
-    t = 1_700_000_000
-    _land(spark, input_path, "b1", ["u1", "u2"], t)
-    _land(spark, input_path, "b2", ["u2", "u3"], t + 60)
+    land(input_path, [_docs(spark, ["u1", "u2"]), _docs(spark, ["u2", "u3"])])
 
     appended = ingest_stream(spark, input_path, store, ckpt, max_files_per_trigger=1)
     assert [n for _, n in appended] == [2, 1]  # u2 deduped in batch 2
@@ -45,13 +48,12 @@ def test_overlapping_batches_dedup_against_store(spark, paths):
 
 def test_incremental_drain_skips_processed_files(spark, paths):
     input_path, store, ckpt = paths
-    t = 1_700_000_000
-    _land(spark, input_path, "b1", ["u1", "u2"], t)
+    land(input_path, [_docs(spark, ["u1", "u2"])])
     ingest_stream(spark, input_path, store, ckpt)
 
     # next scheduled run: one new file, one duplicate URL inside it;
     # the checkpoint skips b1 entirely, the store-dedup drops u1
-    _land(spark, input_path, "b2", ["u1", "u4"], t + 60)
+    land(input_path, [_docs(spark, ["u1", "u4"])])
     appended = ingest_stream(spark, input_path, store, ckpt)
     assert sum(n for _, n in appended) == 1
     urls = sorted(r.url for r in read_store(spark, store).collect())
@@ -60,7 +62,7 @@ def test_incremental_drain_skips_processed_files(spark, paths):
 
 def test_rerun_with_no_new_input_appends_nothing(spark, paths):
     input_path, store, ckpt = paths
-    _land(spark, input_path, "b1", ["u1"], 1_700_000_000)
+    land(input_path, [_docs(spark, ["u1"])])
     ingest_stream(spark, input_path, store, ckpt)
     appended = ingest_stream(spark, input_path, store, ckpt)
     assert sum(n for _, n in appended) == 0
@@ -68,9 +70,6 @@ def test_rerun_with_no_new_input_appends_nothing(spark, paths):
 
 
 def test_stream_dedup_bounded_state_counts(spark, sf_dir):
-    from crawlingbigdatavisionaid_spark.plans import query_map
-    from crawlingbigdatavisionaid_spark.sources import load_table
-
     got = {
         r["event_type"]: r["distinct_events"]
         for r in query_map()["stream_dedup_bounded_state"](spark, sf_dir).collect()
@@ -92,10 +91,8 @@ def test_stream_band_buckets_match_batch_minhash(spark, sf_dir):
     ``operators.neardup.minhash_signatures`` (explode + grouped min).
     Guards the unary-vs-binary transform-lambda pitfall: a binary lambda
     would get the ARRAY INDEX as its seed and collapse all permutations."""
-    from pyspark.sql import functions as F
 
     from crawlingbigdatavisionaid_spark.operators import neardup
-    from crawlingbigdatavisionaid_spark.sources import load_table
     from crawlingbigdatavisionaid_spark.streaming.pipeline import (
         _doc_band_buckets,
     )
@@ -128,10 +125,6 @@ def test_stream_band_buckets_match_batch_minhash(spark, sf_dir):
 
 
 def test_stream_neardup_minhash_matches_batch(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from crawlingbigdatavisionaid_spark.plans import query_map
-    from crawlingbigdatavisionaid_spark.sources import load_table
     from crawlingbigdatavisionaid_spark.streaming.pipeline import (
         _doc_band_buckets,
     )
@@ -157,13 +150,7 @@ def test_incremental_neardup_stream_matches_oneshot(spark, sf_dir, tmp_path):
     """foreachBatch probes of the persisted corpus index, drained one
     file per micro-batch, must accumulate exactly the one-shot
     minhash_pairs_incremental pair set on the same delta split."""
-    from pyspark.sql import functions as F
-
     from crawlingbigdatavisionaid_spark.operators import neardup as ND
-    from crawlingbigdatavisionaid_spark.sources import load_table
-    from crawlingbigdatavisionaid_spark.streaming.ingest import (
-        incremental_neardup_ingest,
-    )
 
     docs = load_table(spark, sf_dir, "documents")
     decile = F.col("doc_id") % 10
@@ -171,18 +158,17 @@ def test_incremental_neardup_stream_matches_oneshot(spark, sf_dir, tmp_path):
 
     delta = str(tmp_path / "delta")
     batch.repartition(3).write.parquet(delta)
-    bk, sh = ND.minhash_index(base)
-    bk.write.parquet(str(tmp_path / "bk"))
-    sh.write.parquet(str(tmp_path / "sh"))
+    for name, index in zip(("bk", "sh"), ND.minhash_index(base)):
+        index.write.parquet(str(tmp_path / name))
+    bk, sh = (spark.read.parquet(str(tmp_path / n)) for n in ("bk", "sh"))
 
-    n_batches = incremental_neardup_ingest(
+    n_batches = probe_ingest(
         spark,
         delta,
-        str(tmp_path / "bk"),
-        str(tmp_path / "sh"),
         str(tmp_path / "out"),
         str(tmp_path / "ckpt"),
         docs.schema,
+        lambda b: ND.minhash_probe_index(b, bk, sh),
     )
     assert n_batches == 3  # one micro-batch per delta file
 
@@ -205,16 +191,10 @@ def test_bloom_probe_ingest_matches_oneshot(spark, sf_dir, tmp_path):
     """Drained Bloom classifications equal the one-shot probe of the
     same delta, with zero false negatives vs the exact store — and the
     bitset survives a parquet roundtrip."""
-    from pyspark.sql import functions as F
-
     from crawlingbigdatavisionaid_spark.plans.sketches import (
         _KEY_SQL,
         bloom_bits,
         bloom_probe,
-    )
-    from crawlingbigdatavisionaid_spark.sources import load_table
-    from crawlingbigdatavisionaid_spark.streaming.ingest import (
-        bloom_probe_ingest,
     )
 
     ev = load_table(spark, sf_dir, "events")
@@ -223,14 +203,15 @@ def test_bloom_probe_ingest_matches_oneshot(spark, sf_dir, tmp_path):
     delta = ev.where(F.col("event_id") % 10 == 9).select(key).distinct()
     delta.repartition(3).write.parquet(str(tmp_path / "delta"))
     bloom_bits(spark, store).write.parquet(str(tmp_path / "bits"))
+    bits = spark.read.parquet(str(tmp_path / "bits"))
 
-    n_batches = bloom_probe_ingest(
+    n_batches = probe_ingest(
         spark,
         str(tmp_path / "delta"),
-        str(tmp_path / "bits"),
         str(tmp_path / "out"),
         str(tmp_path / "ckpt"),
         "k string",
+        lambda batch: bloom_probe(batch, bits),
     )
     assert n_batches == 3
 
@@ -242,10 +223,8 @@ def test_bloom_probe_ingest_matches_oneshot(spark, sf_dir, tmp_path):
     }
     want = {
         (r.k, r.maybe)
-        for r in bloom_probe(
-            spark.read.parquet(str(tmp_path / "delta")),
-            spark.read.parquet(str(tmp_path / "bits")),
-        ).collect()
+        for r in bloom_probe(spark.read.parquet(str(tmp_path / "delta")), bits)
+        .collect()
     }
     assert got == want and want
     store_keys = {r.k for r in store.collect()}
@@ -257,9 +236,7 @@ def test_mv_maintenance_survives_restart(spark, sf_dir, tmp_path):
     continuing batch ids — the process-restart scenario) must seed from
     the highest committed state version instead of silently dropping
     the first drain's history."""
-    from pyspark.sql import functions as F
 
-    from crawlingbigdatavisionaid_spark.sources import load_table
     from crawlingbigdatavisionaid_spark.streaming.ingest import (
         mv_maintenance_ingest,
     )
@@ -308,12 +285,8 @@ def test_mv_state_retention_prunes_old_versions(spark, sf_dir, tmp_path):
     current version and its immediate predecessor (the restart re-seed)
     may remain — and a same-checkpoint restart must still fold the
     full history (test_mv_maintenance_survives_restart pins values)."""
-    import os
     import re
 
-    from pyspark.sql import functions as F
-
-    from crawlingbigdatavisionaid_spark.sources import load_table
     from crawlingbigdatavisionaid_spark.streaming.ingest import (
         mv_maintenance_ingest,
     )
@@ -368,7 +341,6 @@ def test_scd2_fold_extends_and_closes_across_batch_boundaries(spark, tmp_path):
     interval must CLOSE at the first new timestamp), and user 3 appears
     only in batch 2 (pass-through)."""
     import datetime as dt
-    import os
 
     from crawlingbigdatavisionaid_spark.streaming.ingest import (
         scd2_merge_ingest,
@@ -378,14 +350,13 @@ def test_scd2_fold_extends_and_closes_across_batch_boundaries(spark, tmp_path):
     b1 = [(1, T(1), 10.0), (1, T(2), 20.0), (2, T(1), 10.0)]
     b2 = [(1, T(5), 30.0), (2, T(6), 300.0), (3, T(7), 100.0)]
     delta = str(tmp_path / "delta")
-    seen: set[str] = set()
-    for i, rows in enumerate((b1, b2)):
-        spark.createDataFrame(
-            rows, "user_id long, ts timestamp, value double"
-        ).coalesce(1).write.mode("append").parquet(delta)
-        for f in set(os.listdir(delta)) - seen:
-            os.utime(f"{delta}/{f}", (1_700_000_000 + i,) * 2)
-            seen.add(f)
+    land(
+        delta,
+        [
+            spark.createDataFrame(rows, "user_id long, ts timestamp, value double")
+            for rows in (b1, b2)
+        ],
+    )
     n, final_dir = scd2_merge_ingest(
         spark, delta, str(tmp_path / "state"), str(tmp_path / "ckpt"),
         "user_id long, ts timestamp, value double",
@@ -411,13 +382,12 @@ def test_theta_merge_survives_restart_and_matches_batch(spark, sf_dir, tmp_path)
     and the final min-k per type must be bit-identical to the one-shot
     min-k over all events."""
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
     from crawlingbigdatavisionaid_spark.plans.sketches import (
+        _KMV_K,
         _KMV_KEY_SQL,
         _poly_fold_sql,
     )
-    from crawlingbigdatavisionaid_spark.sources import load_table
     from crawlingbigdatavisionaid_spark.streaming.ingest import (
         theta_merge_ingest,
     )
@@ -450,7 +420,7 @@ def test_theta_merge_survives_restart_and_matches_batch(spark, sf_dir, tmp_path)
     want = {
         (r.event_type, r.h)
         for r in hashed.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 256)
+        .where(F.col("rn") <= _KMV_K)
         .collect()
     }
     assert got == want and want
@@ -466,9 +436,6 @@ def test_scd2_out_of_order_batch_is_detected(spark, tmp_path):
     design (documented in scd2_merge_ingest); this pins the detectable
     class."""
     import datetime as dt
-    import os
-
-    import pytest
 
     from crawlingbigdatavisionaid_spark.streaming.ingest import (
         OutOfOrderCDCError,
@@ -479,14 +446,13 @@ def test_scd2_out_of_order_batch_is_detected(spark, tmp_path):
     b1 = [(1, T(5), 10.0), (1, T(6), 20.0), (2, T(5), 10.0)]
     b2 = [(1, T(2), 300.0)]  # precedes user 1's open interval (T(5))
     delta = str(tmp_path / "delta")
-    seen: set[str] = set()
-    for i, rows in enumerate((b1, b2)):
-        spark.createDataFrame(
-            rows, "user_id long, ts timestamp, value double"
-        ).coalesce(1).write.mode("append").parquet(delta)
-        for f in set(os.listdir(delta)) - seen:
-            os.utime(f"{delta}/{f}", (1_700_000_000 + i,) * 2)
-            seen.add(f)
+    land(
+        delta,
+        [
+            spark.createDataFrame(rows, "user_id long, ts timestamp, value double")
+            for rows in (b1, b2)
+        ],
+    )
     state = str(tmp_path / "state")
     with pytest.raises(Exception) as exc_info:
         scd2_merge_ingest(
@@ -519,9 +485,7 @@ def test_first_seen_fold_is_order_free_and_idempotent(spark, tmp_path):
     must produce the identical first-seen state (min is commutative,
     associative AND idempotent, so no ordering contract and no
     double-count risk)."""
-    from pyspark.sql import functions as F
 
-    from crawlingbigdatavisionaid_spark.sources import load_table
     from crawlingbigdatavisionaid_spark.streaming.ingest import (
         first_seen_merge_ingest,
     )
@@ -563,13 +527,11 @@ def test_phash_fold_is_order_free_and_batch_equal(spark, tmp_path):
     identical (phash, cnt) state (counts are additive — commutative +
     associative), and the state must equal the one-shot batch
     distinct-hash table."""
-    from pyspark.sql import functions as F
 
     from crawlingbigdatavisionaid_spark.multimodal.binary import attach_ppm
     from crawlingbigdatavisionaid_spark.operators.perceptual import (
         image_dhash,
     )
-    from crawlingbigdatavisionaid_spark.sources import load_table
     from crawlingbigdatavisionaid_spark.streaming.ingest import (
         phash_merge_ingest,
     )
@@ -599,3 +561,150 @@ def test_phash_fold_is_order_free_and_batch_equal(spark, tmp_path):
         .collect()
     }
     assert states[0] == batch
+
+
+def _drain_journeys(spark, tmp_path, slices):
+    """Land ``slices`` oldest-mtime first in list order, drain them
+    through the journey fold and return (n_batches, the folded journey
+    counts, the number of per-user summary rows)."""
+    from crawlingbigdatavisionaid_spark.streaming.ingest import (
+        journey_merge_ingest,
+    )
+
+    delta = str(tmp_path / "delta")
+    land(delta, slices)
+    n, final = journey_merge_ingest(
+        spark,
+        delta,
+        str(tmp_path / "state"),
+        str(tmp_path / "ckpt"),
+        "user_id long, ts timestamp, event_id long, event_type string",
+    )
+    state = spark.read.parquet(final)
+    counts = {
+        r["journey"]: r["n"] for r in state.where(F.col("kind") == "c").collect()
+    }
+    tails = state.where(F.col("kind") == "u").count()
+    return n, counts, tails
+
+
+def _batch_journeys(spark, sf_dir):
+    ev = load_table(spark, sf_dir, "events").select(
+        "user_id", "event_type", "ts", "event_id"
+    ).collect()
+    hist = defaultdict(list)
+    for r in ev:
+        hist[r["user_id"]].append((r["ts"], r["event_id"], r["event_type"]))
+    counts = defaultdict(int)
+    for seq in hist.values():
+        seq.sort()
+        t = [x for _, _, x in seq]
+        for i in range(len(t) - 2):
+            counts[">".join(t[i : i + 3])] += 1
+    return dict(counts), len(hist)
+
+
+def _journey_slices(spark, sf_dir):
+    ev = load_table(spark, sf_dir, "events").select(
+        "user_id", "ts", "event_id", "event_type"
+    )
+    return time_slices(ev, 3)
+
+
+def test_journey_fold_equals_batch_across_boundaries(spark, sf_dir, tmp_path):
+    expected, n_users = _batch_journeys(spark, sf_dir)
+    n, counts, tails = _drain_journeys(
+        spark, tmp_path, _journey_slices(spark, sf_dir)
+    )
+    assert n == 3
+    assert counts == expected
+    assert tails == n_users  # exactly one bounded summary row per user
+
+
+def test_journey_fold_out_of_order_slices_diverge_loudly(spark, sf_dir, tmp_path):
+    """The documented CDC ordering contract: slices delivered out of
+    time order produce counts that DIFFER from the batch build (the
+    verdict query would flip matches_batch to false) — the violation is
+    loud, never silently absorbed."""
+    expected, _ = _batch_journeys(spark, sf_dir)
+    # land slices 2 and 3 swapped: the file source delivers
+    # oldest-mtime first, so the stream sees [s1, s3, s2]
+    s1, s2, s3 = _journey_slices(spark, sf_dir)
+    n, counts, _ = _drain_journeys(spark, tmp_path, [s1, s3, s2])
+    assert n == 3
+    assert counts != expected
+
+
+def test_ohlc_fold_order_free(spark, sf_dir, tmp_path):
+    """The OHLC fold needs NO ordering contract: a reversed-mtime drain
+    (batches delivered newest-time-slice first) still merges to the
+    batch bars — every combinator is commutative/associative."""
+    from crawlingbigdatavisionaid_spark.streaming.ingest import ohlc_merge_ingest
+
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_type", "ts", "event_id", "value"
+    )
+    delta = str(tmp_path / "delta")
+    land(delta, time_slices(ev, 3)[::-1])  # newest first
+    n, final = ohlc_merge_ingest(
+        spark,
+        delta,
+        str(tmp_path / "state"),
+        str(tmp_path / "ckpt"),
+        "event_type string, ts timestamp, event_id long, value double",
+    )
+    streamed = spark.read.parquet(final).select(
+        "event_type", "hour",
+        F.col("o.value").alias("open"), "high", "low",
+        F.col("c.value").alias("close"), "n",
+    )
+    batch = query_map()["value_ohlc_hourly"](spark, sf_dir)
+    cols = ["event_type", "hour", "open", "high", "low", "close", "n"]
+    assert n == 3
+    assert streamed.join(batch, cols, "anti").count() == 0
+    assert batch.join(streamed, cols, "anti").count() == 0
+
+
+def test_stream_skyline_verdict_and_shrinking_state(spark, sf_dir):
+    [r] = query_map()["stream_skyline_merge"](spark, sf_dir).collect()
+    assert r["multi_batch"] and r["matches_batch"]
+    assert r["frontier_size"] > 0
+
+
+def test_land_refuses_an_empty_slice(spark, tmp_path):
+    """An empty slice would make a multi-batch verdict pass vacuously,
+    so ``land`` raises instead of writing it."""
+    rows = spark.createDataFrame([(1,)], "x int")
+    with pytest.raises(ValueError, match="empty"):
+        land(str(tmp_path / "delta"), [rows, rows.where("x > 1")])
+
+
+def test_time_slices_refuses_a_single_instant(spark):
+    one = spark.sql("SELECT TIMESTAMP'2024-01-01 00:00:00' AS ts")
+    with pytest.raises(ValueError, match="degenerate"):
+        time_slices(one, 3)
+
+
+def test_same_rows_counts_duplicates(spark):
+    """Multiset equality: {x, x} and {x, y} hold the same set of
+    distinct keys and join to the same count, but differ as multisets —
+    both directions must report it."""
+    from crawlingbigdatavisionaid_spark.plans.streaming import _same_rows
+
+    a = spark.createDataFrame([("x",), ("x",)], "v string")
+    b = spark.createDataFrame([("x",), ("y",)], "v string")
+    assert _same_rows(a, b) == (False, False)
+    assert _same_rows(a, a.union(a).dropDuplicates()) == (True, False)
+    assert _same_rows(b, b) == (True, True)
+
+
+def test_memory_sink_drain_leaves_no_checkpoint(spark, sf_dir, tmp_path, monkeypatch):
+    """The memory-sink drains remove their checkpoint once the query
+    returns: the sink's rows live in the driver, so the returned table
+    stays readable without it."""
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    rows = query_map()["stream_hourly_counts"](spark, sf_dir).collect()
+    assert rows
+    assert not [p for p in os.listdir(tmp_path) if p.startswith("ckpt_")]

@@ -1256,11 +1256,10 @@ def image64grow(spark, base: str, k: int, out: str) -> dict:
     ``hamming_hash_pairs`` joins on; a bucket within the cap is recorded
     as not exercising it. The ``dedup_phash64_clusters`` decision
     (pairs -> CC -> doc-weighted histogram) re-runs on the grown corpus:
-    clusters are exactly the groups, asserted in closed form."""
+    clusters are exactly the groups, asserted in closed form, through
+    the query's own ``plans/multimodal.cluster_histogram``."""
     from crawlingbigdatavisionaid_spark.operators import perceptual as P
-    from crawlingbigdatavisionaid_spark.operators.components import (
-        connected_components,
-    )
+    from crawlingbigdatavisionaid_spark.plans.multimodal import cluster_histogram
 
     # nested, not module-level: the mapInArrow generator below pickles
     # it by value, so the Python workers need not import this tool
@@ -1349,19 +1348,9 @@ def image64grow(spark, base: str, k: int, out: str) -> dict:
             }
             # the cluster DECISION on the grown corpus (the registered
             # dedup_phash64_clusters assembly): clusters == groups
-            pairs = P.hamming_hash_pairs(h, fam.n_bits, fam.radius).select("hu", "hv")
-            cc = connected_components(pairs, "hu", "hv")
-            dc = h.join(cc, h["h"] == cc["node"], "left").select(
-                F.coalesce(F.col("component"), F.col("h")).alias("comp"),
-                F.col("cnt"),
-            )
             got_cl = {
                 r["cluster_size"]: r["n_clusters"]
-                for r in dc.groupBy("comp")
-                .agg(F.sum("cnt").alias("sz"))
-                .groupBy(F.col("sz").cast("bigint").alias("cluster_size"))
-                .agg(F.count(F.lit(1)).cast("bigint").alias("n_clusters"))
-                .collect()
+                for r in cluster_histogram(h, "phash64").collect()
             }
             return h, hist, got_cl
 
@@ -1762,36 +1751,22 @@ def streamstate(spark, base: str, k: int, out: str) -> dict:
         cms_merge_ingest,
         first_seen_merge_ingest,
         journey_merge_ingest,
+        land,
         ohlc_merge_ingest,
         phash_merge_ingest,
         scd2_merge_ingest,
         skyline_merge_ingest,
         theta_merge_ingest,
+        time_slices,
     )
 
     def drain(name: str, ingest, df, schema, n_files: int, timeslice: bool):
         droot = f"{out}/{name}_{n_files}"
         delta = f"{droot}/delta"
         if timeslice:
-            # per-key time-ordered slices (the CDC contract): ntile
-            # boundaries on ts, one file per non-empty slice, mtimes
-            # ascending so the file source drains oldest-first
-            [(lo, hi)] = df.agg(F.min("ts"), F.max("ts")).collect()
-            span = (hi - lo) / n_files
-            seen: set[str] = set()
-            for i in range(n_files):
-                s_lo = lo + i * span
-                sl = df.where(
-                    (F.col("ts") >= F.lit(s_lo))
-                    if i == n_files - 1
-                    else ((F.col("ts") >= F.lit(s_lo)) & (F.col("ts") < F.lit(s_lo + span)))
-                )
-                if sl.limit(1).count() == 0:
-                    continue
-                sl.coalesce(1).write.mode("append").parquet(delta)
-                for f in set(os.listdir(delta)) - seen:
-                    os.utime(f"{delta}/{f}", (1_700_000_000 + i,) * 2)
-                    seen.add(f)
+            # per-key time-ordered slices (the CDC contract): one file
+            # per non-empty slice, landed oldest-first
+            land(delta, [sl for sl in time_slices(df, n_files) if sl.limit(1).count()])
         else:
             df.repartition(n_files).write.parquet(delta)
         (n_batches, final_dir), wall = timed(
